@@ -22,9 +22,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from web2llmstxt_spark.session import get_spark  # noqa: E402
 
 
+def positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--reps", type=positive_int, default=1)
     ap.add_argument("--out", default=None)
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()

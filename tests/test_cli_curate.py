@@ -1,6 +1,11 @@
 """CLI curate subcommand: pipeline composition, stats, and written output."""
 
 import argparse
+import os
+import random
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from web2llmstxt_spark.cli import run_curate
 
@@ -90,3 +95,89 @@ def test_curate_pack_out_writes_training_shards(spark, tmp_path):
     assert offs == sorted(offs) and len(set(offs)) == len(offs)
     assert pk["tokens"] == got[-1].stream_offset + got[-1].n_tokens
     assert pk["shards"] >= 2  # the tiny budget actually sharded
+
+
+def _persisted(spark):
+    """Ids of the persisted RDDs. Compared as sets: Spark's cleaner may
+    drop another test's leftovers at any moment."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_curate_releases_caches_and_rereads_rewritten_input(spark, tmp_path):
+    """Every cache run_curate creates is released on return, so a second
+    call on the same path reads the rewritten file, not a cache of the
+    first one. The file is rewritten outside Spark, as an upstream job
+    would: a Spark write to the path would itself refresh the caches."""
+    p = str(tmp_path / "docs_in")
+    os.makedirs(p)
+    first = [(i, f"alpha bravo charlie item {i} delta echo foxtrot golf") for i in range(5)]
+    second = [(i, f"hotel india juliet item {i} kilo lima mike november")
+              for i in range(100, 108)]
+    second += [(200, "spam spam spam spam spam spam spam spam")]
+    got = []
+    for rows in (first, second):
+        pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
+                                 "text": [r[1] for r in rows]}),
+                       os.path.join(p, "part-0.parquet"))
+        before = _persisted(spark)
+        args = _args(tmp_path, p, pack_out=str(tmp_path / "shards"),
+                     pack_budget=8, bins_per_shard=2)
+        got.append(run_curate(spark, args))
+        assert _persisted(spark) <= before  # nothing the call persisted remains
+    assert got[0]["in_docs"] == 5 and got[0]["dropped_repetition"] == 0
+    assert got[1]["in_docs"] == 9 and got[1]["dropped_repetition"] == 1
+    assert got[1]["kept_docs"] == got[1]["pack"]["docs"] == 8
+    out = {r.doc_id for r in spark.read.parquet(str(tmp_path / "curated")).collect()}
+    assert out == set(range(100, 108))
+
+
+def test_curate_invariant_under_input_partitioning(spark, tmp_path):
+    """One parquet file, or several files in shuffled doc_id order: every
+    stage and the packing give identical stats and an identical corpus."""
+    rng = random.Random(5)
+    vocab = [f"w{k}" for k in range(300)]
+    footer = " ".join(rng.choice(vocab) for _ in range(12))
+    evals = [" ".join(rng.choice(vocab) for _ in range(30)) for _ in range(3)]
+    rows = []
+    for i in range(60):
+        body = " ".join(rng.choice(vocab) for _ in range(rng.randint(20, 50)))
+        if i % 10 == 0:
+            body = "same old words " * 6
+        elif i % 10 == 1:
+            body += " " + evals[i % 3]
+        elif i % 10 == 2:
+            body += f" mail user{i}@example.org now"
+        elif i % 10 in (3, 4):
+            body += " " + footer
+        elif i % 10 == 5:
+            body = rows[i - 2][1]
+        rows.append((i, body))
+    bench = str(tmp_path / "bench_in")
+    spark.createDataFrame(list(enumerate(evals, start=1000)), "doc_id int, text string") \
+        .write.parquet(bench)
+
+    one = str(tmp_path / "one")
+    spark.createDataFrame(rows, "doc_id int, text string").coalesce(1).write.parquet(one)
+    many = str(tmp_path / "many")
+    shuffled = rows[:]
+    rng.shuffle(shuffled)
+    spark.createDataFrame(shuffled, "doc_id int, text string").repartition(5) \
+        .write.parquet(many)
+    assert len([f for f in os.listdir(many) if f.endswith(".parquet")]) > 1
+
+    results = []
+    for name, path in (("one", one), ("many", many)):
+        args = _args(tmp_path / name, path, bench_parquet=bench,
+                     pack_out=str(tmp_path / name / "shards"), pack_budget=64,
+                     bins_per_shard=3)
+        stats = run_curate(spark, args)
+        stats.pop("out")
+        stats["pack"].pop("out")
+        corpus = {(r.doc_id, r.text) for r in spark.read.parquet(args.out).collect()}
+        results.append((stats, corpus))
+    (st1, c1), (st2, c2) = results
+    assert st1 == st2
+    assert c1 == c2
+    assert all(st1[k] > 0 for k in ("dropped_repetition", "dropped_contaminated",
+                                     "tokens_removed", "dedup_removed"))
+    assert st1["pack"]["shards"] >= 2

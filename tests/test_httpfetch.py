@@ -162,3 +162,14 @@ def test_per_host_delay_paces_requests(spark, corpus):
     # same-host pair spans two different supersteps
     steps = [s for _t, s in recs]
     assert any(a != b for a, b in zip(steps, steps[1:])), steps
+
+
+def test_pacing_seed_drops_hits_older_than_the_delay():
+    # only a hit within per_host_delay_ms of now can still make a task wait,
+    # so the snapshot shipped in every task closure holds active hosts only
+    fetcher = httpfetch.HttpFetcher("http://localhost:1", per_host_delay_ms=500)
+    now = 1000.0
+    fetcher._last_hits = {"stale.example": now - 5.0, "recent.example": now - 0.1}
+    seed = fetcher._pacing_seed(now)
+    assert seed == {"recent.example": now - 0.1}
+    assert "stale.example" not in fetcher._last_hits

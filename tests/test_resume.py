@@ -116,3 +116,26 @@ def test_snapshot_metrics_carry_partition_lineage(spark, tmp_path):
         # bucket ids are valid state-partition ids (default num_buckets=32)
         assert all(0 <= int(k) < 32 for k in m["frontier_by_bucket"])
         assert all(0 <= int(k) < 32 for k in m["pages_by_bucket"])
+
+
+def test_snapshots_read_back_with_their_known_schema(spark, tmp_path):
+    """Each snapshot table's on-disk schema is the one load_state reads it
+    with, so loading a snapshot submits no Spark job (no schema inference)."""
+    corpus = generate_corpus(seed=37, n_hosts=1, pages_per_host=30)
+    run_dir = str(tmp_path / "known")
+    run_full(spark, corpus, CrawlConfig(max_pages=8), run_dir)
+    last = checkpoint.last_complete_superstep(run_dir)
+    for n in range(last + 1):
+        for name, schema in schemas.SNAPSHOTS.items():
+            path = os.path.join(run_dir, f"superstep={n}", name)
+            assert spark.read.parquet(path).schema == schema, (n, name)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("load_state", "load_state")
+    try:
+        pages, seen, frontier = checkpoint.load_state(spark, run_dir, last)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup("load_state")) == []
+    assert pages.count() > 0 and seen.count() > 0 and frontier is not None

@@ -109,61 +109,94 @@ def run_curate(spark, args) -> dict:
     repetition gate -> decontamination (optional) -> PII scrub ->
     substring-span scrub -> exact dedup. Returns the stats dict printed as
     the JSON result line. Every stage is the library operator the driver
-    hash-checks; this function only composes and counts."""
+    hash-checks; this function only composes, counts and caches.
+
+    Dataflow: the input is read once and hash-partitioned by doc_id into
+    ``spark.sql.shuffle.partitions`` partitions, so every doc_id-keyed
+    aggregate and join-back downstream (repetition bigram counts,
+    decontamination hit counts, the span scrub's per-doc window reduce and
+    position join) reuses that partitioning instead of shuffling again, and
+    runs on every core. Each gate's survivors are persisted and filled by
+    the count the stats take anyway, so no action re-runs an earlier stage;
+    the PII and span scrubs keep every row, so their counts are known
+    without an action. Every cache is released before return: Spark matches
+    caches by plan, so a leftover cache of the input would answer a later
+    call on the same, rewritten, path."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .operators import curation, dedup, scrub
+    from .session import CACHE_LEVEL, release
+
+    caches = []
+
+    def cache(df):
+        caches.append(df.persist(CACHE_LEVEL))
+        return df
 
     tcol, icol = args.text_col, args.id_col
-    docs = spark.read.parquet(args.in_parquet).select(
-        F.col(icol).alias("doc_id"), F.col(tcol).alias("text")
-    )
-    stats = {"in_docs": docs.count()}
+    try:
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        docs = cache(
+            spark.read.parquet(args.in_parquet)
+            .select(F.col(icol).alias("doc_id"), F.col(tcol).alias("text"))
+            .repartition(n_parts, "doc_id")
+        )
+        n = docs.count()
+        stats = {"in_docs": n}
 
-    kept = docs
-    if not args.no_repetition_gate:
-        rep = curation.repetition_stats(kept).select("doc_id", "keep")
-        kept = kept.join(rep, "doc_id").filter("keep").drop("keep")
-        stats["dropped_repetition"] = stats["in_docs"] - kept.count()
-    if args.bench_parquet:
-        bench = spark.read.parquet(args.bench_parquet).select(
-            F.col(icol).alias("doc_id"), F.col(tcol).alias("text")
-        )
-        cont = curation.decontaminate(kept, bench).select("doc_id", "contaminated")
-        before = kept.count()
-        kept = kept.join(cont, "doc_id").filter("NOT contaminated").drop("contaminated")
-        stats["dropped_contaminated"] = before - kept.count()
-    if not args.no_pii_scrub:
-        kept = scrub.scrub_pii(kept).select(
-            "doc_id", F.col("text_clean").alias("text")
-        )
-    if not args.no_substring_scrub:
-        scrubbed = dedup.remove_duplicated_spans(kept, "text", "doc_id")
-        stats["tokens_removed"] = (
-            scrubbed.agg(F.sum("removed_tokens")).collect()[0][0] or 0
-        )
-        kept = scrubbed.select("doc_id", F.col("clean_text").alias("text"))
-    if not args.no_exact_dedup:
-        before = kept.count()
-        w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-        kept = (
-            kept.withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1")
-            .drop("__rn")
-        )
-        stats["dedup_removed"] = before - kept.count()
+        kept = docs
+        if not args.no_repetition_gate:
+            rep = curation.repetition_stats(kept).select("doc_id", "keep")
+            kept = cache(kept.join(rep, "doc_id").filter("keep").drop("keep"))
+            before, n = n, kept.count()
+            stats["dropped_repetition"] = before - n
+        if args.bench_parquet:
+            bench = spark.read.parquet(args.bench_parquet).select(
+                F.col(icol).alias("doc_id"), F.col(tcol).alias("text")
+            )
+            cont = curation.decontaminate(kept, bench).select("doc_id", "contaminated")
+            kept = cache(
+                kept.join(cont, "doc_id").filter("NOT contaminated").drop("contaminated")
+            )
+            before, n = n, kept.count()
+            stats["dropped_contaminated"] = before - n
+        if not args.no_pii_scrub:
+            kept = scrub.scrub_pii(kept).select(
+                "doc_id", F.col("text_clean").alias("text")
+            )
+        if not args.no_substring_scrub:
+            scrubbed = dedup.remove_duplicated_spans(
+                kept, "text", "doc_id", caches=caches
+            )
+            cache(scrubbed)  # persist() returns this same object
+            stats["tokens_removed"] = (
+                scrubbed.agg(F.sum("removed_tokens")).collect()[0][0] or 0
+            )
+            kept = scrubbed.select("doc_id", F.col("clean_text").alias("text"))
+        if not args.no_exact_dedup:
+            w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
+            kept = cache(
+                kept.withColumn("__rn", F.row_number().over(w))
+                .filter("__rn = 1")
+                .drop("__rn")
+            )
+            before, n = n, kept.count()
+            stats["dedup_removed"] = before - n
 
-    kept.write.mode("overwrite").parquet(args.out)
-    stats["kept_docs"] = spark.read.parquet(args.out).count()
-    stats["out"] = args.out
-    if getattr(args, "pack_out", None):
-        cleaned = spark.read.parquet(args.out)  # pack the WRITTEN corpus
-        stats["pack"] = curation.write_training_shards(
-            cleaned, args.pack_out, args.pack_budget,
-            bins_per_shard=args.bins_per_shard,
-        )
-    return stats
+        kept.write.mode("overwrite").parquet(args.out)
+        stats["kept_docs"] = n
+        stats["out"] = args.out
+        if getattr(args, "pack_out", None):
+            # pack the WRITTEN corpus; its schema is known, so no inference job
+            cleaned = spark.read.schema(kept.schema).parquet(args.out)
+            stats["pack"] = curation.write_training_shards(
+                cleaned, args.pack_out, args.pack_budget,
+                bins_per_shard=args.bins_per_shard,
+            )
+        return stats
+    finally:
+        release(caches)
 
 
 def main(argv: list[str] | None = None) -> int:

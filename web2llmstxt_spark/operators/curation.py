@@ -289,7 +289,8 @@ def mixture_sample(
 
 
 def pack_sequences(
-    df, budget: int, text_col: str = "text", id_col: str = "doc_id"
+    df, budget: int, text_col: str = "text", id_col: str = "doc_id",
+    caches: list | None = None,
 ):
     """GPT-style sequence packing: lay the corpus out as one contiguous
     token stream (deterministic doc_id order) and chunk it into
@@ -306,6 +307,7 @@ def pack_sequences(
     driver-side offset table broadcast back) — NO single-partition window,
     NO driver merge; the same machinery the crawler's budget cut uses at
     10^10-URL scale. Token counting is one JVM size(split()) per doc.
+    ``caches`` receives the prefix-sum's checkpoint (`ranking.global_rank`).
     """
     from . import ranking
     from .dedup import tokens_col
@@ -315,7 +317,8 @@ def pack_sequences(
         F.size(tokens_col(F.col(text_col))).cast("long").alias("n_tokens"),
     )
     ranked = ranking.global_rank(
-        toked, [F.asc("doc_id")], "__rank", cum_col_flag=F.col("n_tokens")
+        toked, [F.asc("doc_id")], "__rank", cum_col_flag=F.col("n_tokens"),
+        caches=caches,
     )
     return ranked.select(
         "doc_id",
@@ -554,29 +557,38 @@ def write_training_shards(
 
     Scale shape: one doc_id-keyed join brings the text to the layout (the
     layout side is slim bigints), one repartition("shard_id") colocates each
-    shard, partitionBy writes one directory per shard. Returns stats
-    {docs, tokens, bins, shards}.
+    shard, partitionBy writes one directory per shard. The joined rows are
+    persisted by the write, so the stats read that cache instead of
+    recomputing the layout and the join; every cache is released before
+    return. Returns stats {docs, tokens, bins, shards}.
     """
-    layout = pack_sequences(df, budget, text_col, id_col)
-    joined = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).join(layout, "doc_id")
-    shards = joined.withColumn(
-        "shard_id", F.expr(f"bin_id DIV {int(bins_per_shard)}")
-    )
-    (
-        shards.repartition("shard_id")
-        .sortWithinPartitions("shard_id", "bin_id", "bin_offset")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(out_dir)
-    )
-    agg = shards.agg(
-        F.count("*").alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-        (F.max("bin_id") + 1).alias("bins"),
-        F.countDistinct("shard_id").alias("shards"),
-    ).collect()[0]
+    from ..session import CACHE_LEVEL, release
+
+    caches: list = []
+    try:
+        layout = pack_sequences(df, budget, text_col, id_col, caches=caches)
+        joined = df.select(
+            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+        ).join(layout, "doc_id")
+        shards = joined.withColumn(
+            "shard_id", F.expr(f"bin_id DIV {int(bins_per_shard)}")
+        ).persist(CACHE_LEVEL)
+        caches.append(shards)
+        (
+            shards.repartition("shard_id")
+            .sortWithinPartitions("shard_id", "bin_id", "bin_offset")
+            .write.mode("overwrite")
+            .partitionBy("shard_id")
+            .parquet(out_dir)
+        )
+        agg = shards.agg(
+            F.count("*").alias("docs"),
+            F.sum("n_tokens").alias("tokens"),
+            (F.max("bin_id") + 1).alias("bins"),
+            F.countDistinct("shard_id").alias("shards"),
+        ).collect()[0]
+    finally:
+        release(caches)
     return {
         "docs": agg["docs"],
         "tokens": int(agg["tokens"] or 0),

@@ -557,7 +557,7 @@ def window_dup_sql(
 
 def remove_duplicated_spans(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    window: int = SUBSTR_WINDOW,
+    window: int = SUBSTR_WINDOW, caches: list | None = None,
 ) -> DataFrame:
     """The curation ACTION behind window_dup_stats: cut every token covered
     by a cross-doc duplicated window (Lee et al. ACL 2022 remove step) and
@@ -577,6 +577,12 @@ def remove_duplicated_spans(
     with pathological dup density would pre-merge positions into ranges —
     O(n·|dup_pos|) is the simple form). The text column is touched only in
     the final join-back; it never crosses the hash shuffles.
+
+    ``caches``: a list to persist the per-doc window reduce into, so one
+    hashing pass feeds both the per-hash doc count and the positions join.
+    The caller releases it (``session.release``) once the output is
+    materialized. Without it nothing outlives the call, and each branch
+    runs its own hashing pass.
     """
     # tokens materialize as a projection BEFORE any lambda references them —
     # no CSE inside higher-order lambdas (see window_hashes)
@@ -597,14 +603,16 @@ def remove_duplicated_spans(
         F.col(id_col), F.explode(pos_hash).alias("w")
     ).select(id_col, F.col("w.pos").alias("pos"), F.col("w.h").alias("win_hash"))
 
-    # same skew-proof shape as window_dup_stats: persist the slim reduced
-    # table, combiner-friendly groupBy for the per-hash doc count (hot
-    # boilerplate hashes pre-aggregate map-side), AQE-splittable join back
-    from pyspark.storagelevel import StorageLevel
-
+    # same skew-proof shape as window_dup_stats: the slim reduced table,
+    # combiner-friendly groupBy for the per-hash doc count (hot boilerplate
+    # hashes pre-aggregate map-side), AQE-splittable join back
     reduced = wins.groupBy(id_col, "win_hash").agg(
         F.collect_list("pos").alias("__poss")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    if caches is not None:
+        from pyspark.storagelevel import StorageLevel
+
+        caches.append(reduced.persist(StorageLevel.MEMORY_AND_DISK))
     nd = reduced.groupBy("win_hash").agg(F.count("*").alias("__nd"))
     dup_pos = (
         reduced.join(nd.filter(F.col("__nd") >= 2), "win_hash")

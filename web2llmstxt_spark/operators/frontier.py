@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
+from .. import schemas
 from ..functions import kernels, linkexpand, udfs
 from ..oracle.crawl_oracle import CrawlConfig
 from ..session import CACHE_LEVEL
@@ -385,7 +386,8 @@ class FrontierCrawler:
 
         run_dir set   -> parquet snapshot (the Iceberg-table pattern:
                          resumable runs + truncated lineage; see
-                         state/checkpoint.py).
+                         state/checkpoint.py), read back with its known
+                         schema (schemas.SNAPSHOTS: no inference job).
         run_dir unset -> eager localCheckpoint. Lineage MUST be truncated at
                          superstep boundaries: state DataFrames (seen,
                          frontier) are referenced several times by the next
@@ -395,9 +397,18 @@ class FrontierCrawler:
         """
         if self.run_dir is None:
             return df.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
+        schema = schemas.SNAPSHOTS[name]
+        if [(f.name, f.dataType) for f in df.schema] != [
+            (f.name, f.dataType) for f in schema
+        ]:
+            # reading back with a stale schema would drop or null columns
+            raise ValueError(
+                f"{name} snapshot is {df.schema.simpleString()}, "
+                f"schemas.SNAPSHOTS says {schema.simpleString()}"
+            )
         path = os.path.join(self.run_dir, f"superstep={superstep}", name)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _bucket_lineage(self, df: DataFrame) -> dict[str, int]:
         """Per-partition (host-hash bucket) row counts for the durable

@@ -12,11 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def global_rank(df: DataFrame, order, rank_col: str, cum_col_flag=None) -> DataFrame:
+def global_rank(
+    df: DataFrame, order, rank_col: str, cum_col_flag=None,
+    caches: list | None = None,
+) -> DataFrame:
     """Global ordering WITHOUT a single-partition window or driver merge.
 
     With ``cum_col_flag`` also emits ``__cum_before``: the global running sum
     of the flag EXCLUDING the current row (the comprehensive-mode budget cut).
+    ``caches`` receives the range-partitioned checkpoint, for the caller to
+    release (``session.release``) once the result is materialized.
     """
     spark = df.sparkSession
     p = max(spark.sparkContext.defaultParallelism, 4)
@@ -28,6 +33,8 @@ def global_rank(df: DataFrame, order, rank_col: str, cum_col_flag=None) -> DataF
     # before this fix). Checkpointing severs lineage: recompute is
     # impossible, offsets always match the data.
     d = d.localCheckpoint(eager=True)
+    if caches is not None:
+        caches.append(d)
     aggs = [F.count("*").alias("n")]
     if cum_col_flag is not None:
         aggs.append(F.sum(cum_col_flag.cast("long")).alias("s"))

@@ -121,6 +121,34 @@ SEEN = StructType(
     ]
 )
 
+#: Durable superstep snapshot tables (run_dir/superstep=N/<name>/, written
+#: by FrontierCrawler._snapshot). Read back with these schemas — by the
+#: crawler and by state.checkpoint.load_state — so no read runs a
+#: schema-inference job. Nullable, as every parquet read is.
+SNAPSHOTS = {
+    "pages": StructType(
+        [
+            StructField("url", StringType()),
+            StructField("title", StringType()),
+            StructField("content", StringType()),
+            StructField("word_count", IntegerType()),
+            StructField("score", DoubleType()),
+            StructField("depth", IntegerType()),
+            StructField("discovery_phase", StringType()),
+            StructField("seed_id", IntegerType()),
+        ]
+    ),
+    "seen": StructType([StructField("url", StringType())]),
+    "frontier": StructType(
+        [
+            StructField("url", StringType()),
+            StructField("seed_id", IntegerType()),
+            StructField("base_url", StringType()),
+            StructField("base_domain", StringType()),
+        ]
+    ),
+}
+
 #: Per-superstep, per-partition lineage + metrics (north rule).
 METRICS = StructType(
     [

@@ -26,6 +26,17 @@ from pyspark.sql import SparkSession
 CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
+def release(frames) -> None:
+    """Free the executor storage behind each DataFrame, once nothing will
+    read it again: ``unpersist`` for a cache, and for a ``localCheckpoint``
+    (which ``unpersist`` does not reach) the checkpointed RDD's blocks."""
+    for df in frames:
+        if df.is_cached:
+            df.unpersist()
+        else:  # a localCheckpoint: its plan is a LogicalRDD over the blocks
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def package_zip() -> str:
     """Zip this package for shipment to executors (spark-submit --py-files).
 

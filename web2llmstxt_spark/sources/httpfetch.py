@@ -276,6 +276,22 @@ class HttpFetcher:
         self._last_hits: dict[str, float] = {}
         self._hit_acc = None
 
+    def _pacing_seed(self, now: float) -> dict[str, float]:
+        """The host -> last-hit snapshot that seeds the next fetch job's
+        tasks. The previous fetch job has been materialized by the frontier
+        before fetch() is called again, so its accumulator value is
+        complete: fold it into the carried map first. Then drop hits older
+        than the per-host delay: only a hit within the delay of ``now`` can
+        still make a task wait, and pruning keeps the map (and every task
+        closure) O(active hosts) over a long crawl."""
+        if self._hit_acc is not None:
+            for k, t in self._hit_acc.value.items():
+                if t > self._last_hits.get(k, 0.0):
+                    self._last_hits[k] = t
+        horizon = now - self.per_host_delay_ms / 1000.0
+        self._last_hits = {h: t for h, t in self._last_hits.items() if t > horizon}
+        return dict(self._last_hits)
+
     def fetch(self, cand: DataFrame, url_hint=None) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import (
@@ -323,15 +339,7 @@ class HttpFetcher:
         hit_acc = None
         seed_hits: dict[str, float] = {}
         if delay_ms > 0:
-            # the previous fetch job has been materialized by the frontier
-            # before fetch() is called again, so its accumulator value is
-            # complete: fold it into the carried host -> last-hit map and
-            # seed this job's tasks with a snapshot.
-            if self._hit_acc is not None:
-                for k, t in self._hit_acc.value.items():
-                    if t > self._last_hits.get(k, 0.0):
-                        self._last_hits[k] = t
-            seed_hits = dict(self._last_hits)
+            seed_hits = self._pacing_seed(time.time())
             hit_acc = cand.sparkSession.sparkContext.accumulator(
                 {}, _MaxDictParam()
             )

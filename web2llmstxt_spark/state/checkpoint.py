@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .. import schemas
 from ..oracle.crawl_oracle import CrawlConfig
 from ..operators.frontier import FrontierCrawler
 
@@ -63,19 +64,24 @@ def last_complete_superstep(run_dir: str) -> int | None:
     return best
 
 
+def _read(spark: SparkSession, path: str, name: str):
+    """One snapshot table, read with its known schema (no inference job)."""
+    return spark.read.schema(schemas.SNAPSHOTS[name]).parquet(path)
+
+
 def load_state(spark: SparkSession, run_dir: str, superstep: int):
     base = os.path.join(run_dir, f"superstep={superstep}")
     pages_parts = []
     for n in range(superstep + 1):
         p = os.path.join(run_dir, f"superstep={n}", "pages")
         if _complete(p):
-            pages_parts.append(spark.read.parquet(p))
+            pages_parts.append(_read(spark, p, "pages"))
     pages = pages_parts[0]
     for df in pages_parts[1:]:
         pages = pages.unionByName(df)
-    seen = spark.read.parquet(os.path.join(base, "seen"))
+    seen = _read(spark, os.path.join(base, "seen"), "seen")
     fr_path = os.path.join(base, "frontier")
-    frontier = spark.read.parquet(fr_path) if _complete(fr_path) else None
+    frontier = _read(spark, fr_path, "frontier") if _complete(fr_path) else None
     return pages, seen, frontier
 
 
