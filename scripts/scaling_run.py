@@ -150,7 +150,7 @@ def main() -> None:
 
     cfg = CrawlConfig(max_pages=budget, safety_limit=budget)
     crawler = FrontierCrawler(
-        spark, site, cfg, use_bloom=True, use_native_scorer=True, run_dir=None,
+        spark, site, cfg, use_bloom=True, run_dir=None,
         fetcher=fetcher,
     )
     seeds = [(i, u) for i, u in enumerate(meta["seeds"])]

@@ -79,16 +79,6 @@ def test_batched_bestfirst_default(spark):
     assert_parity(*run_both(spark, corpus, base, max_pages=25, batch_size=10))
 
 
-def test_udf_keyword_scorer_parity(spark):
-    """The native JVM keyword scorer is the default since r4; the pandas-UDF
-    kernel stays as the bit-exactness oracle twin and must still match."""
-    corpus = generate_corpus(seed=33, n_hosts=1, pages_per_host=30)
-    base = corpus.seeds[0][1]
-    assert_parity(*run_both(
-        spark, corpus, base, max_pages=25, batch_size=10, use_native_scorer=False
-    ))
-
-
 def test_budget_counts_attempts_not_pages(spark):
     """max_pages bounds ATTEMPTS (failed fetches included)."""
     corpus = generate_corpus(seed=35, n_hosts=2, pages_per_host=25)

@@ -3,6 +3,7 @@ never rebuilt from the full seen table — plus the doubling rebuild path when a
 bucket outgrows its load factor, with the bloom==exact equality preserved
 throughout (round-1 judge item #4)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from web2llmstxt_spark import schemas
@@ -10,6 +11,8 @@ from web2llmstxt_spark.operators import bloom
 from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.oracle.crawl_oracle import CrawlConfig, crawl
 from web2llmstxt_spark.sources.corpus import generate_corpus
+
+PAGE_FIELDS = ["url", "title", "content", "word_count", "score", "depth", "discovery_phase", "seed_id"]
 
 
 def _run(spark, corpus, cfg, **kw):
@@ -60,28 +63,35 @@ def test_bloom_skips_dead_final_delta(spark):
     assert engine.bloom_rebuilds == 0
 
 
-def test_bloom_overload_triggers_doubling_rebuild(spark):
-    """With a deliberately tiny bitmap, the load-factor check must fire and
-    rebuild at double width — and results must STILL equal the exact path."""
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_bloom_overload_triggers_doubling_rebuild(spark, seen_filter):
+    """With a deliberately tiny filter, the load-factor check must fire and
+    rebuild at double width — for both seen filters, which share one
+    rebuild path — and the crawl must STILL equal the oracle's, field for
+    field in rank order, with the same seen set."""
     corpus = generate_corpus(seed=19, n_hosts=1, pages_per_host=60)
     cfg = CrawlConfig(max_pages=20)
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
 
-    engine = FrontierCrawler(spark, site, cfg, robots_rules=corpus.robots_rules, use_bloom=True)
-    engine.bloom_m_bits = 64  # capacity ~6 URLs/bucket at 10 bits/key
+    engine = FrontierCrawler(
+        spark, site, cfg, robots_rules=corpus.robots_rules, seen_filter=seen_filter
+    )
+    # capacity ~6 URLs/bucket for a Bloom bitmap at 10 bits/key, 3 for a
+    # 4-slot cuckoo table at its 0.84 load bound
+    engine.bloom_m_bits = 64
     seeds = [(sid, url) for sid, url, _ in corpus.seeds]
     pages_df, seen_df = engine.crawl(seeds)
-    pages_on = [tuple(r) for r in pages_df.select("rank", "url", "depth").orderBy("rank").collect()]
-    seen_on = {r.url for r in seen_df.collect()}
-    assert engine.bloom_rebuilds >= 1, "tiny bitmap must trigger the doubling rebuild"
+    pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
+    seen = {r.url for r in seen_df.collect()}
+    assert engine.bloom_rebuilds >= 1, "tiny filter must trigger the doubling rebuild"
     assert engine.bloom_m_bits > 64
 
-    exact = FrontierCrawler(spark, site, cfg, robots_rules=corpus.robots_rules, use_bloom=False)
-    pages_df2, seen_df2 = exact.crawl(seeds)
-    pages_off = [tuple(r) for r in pages_df2.select("rank", "url", "depth").orderBy("rank").collect()]
-    seen_off = {r.url for r in seen_df2.collect()}
-    assert pages_on == pages_off
-    assert seen_on == seen_off
+    oracle_res = crawl(corpus, cfg, seeds)
+    assert seen == oracle_res.seen
+    assert len(pages) == len(oracle_res.pages)
+    for i, (e, o) in enumerate(zip(pages, oracle_res.pages)):
+        for f in PAGE_FIELDS:
+            assert e[f] == o[f], f"rank {i} field {f}: engine={e[f]!r} oracle={o[f]!r}"
 
 
 def test_merge_bitmaps_unit(spark):

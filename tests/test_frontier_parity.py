@@ -17,7 +17,7 @@ from web2llmstxt_spark.sources.corpus import generate_corpus
 PAGE_FIELDS = ["url", "title", "content", "word_count", "score", "depth", "discovery_phase", "seed_id"]
 
 
-def run_both(spark, corpus, cfg, seeds=None, use_bloom=False, run_dir=None):
+def run_both(spark, corpus, cfg, seeds=None, use_bloom=True, run_dir=None):
     oracle_res = crawl(corpus, cfg, seeds)
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
     engine = FrontierCrawler(
@@ -86,6 +86,27 @@ def test_bloom_off_equals_on(spark):
     assert pages_on == pages_off
 
 
+def test_state_compaction_parity(spark, monkeypatch):
+    """The in-memory crawl keeps seen/frontier as unions of per-superstep
+    parts and folds them into one checkpoint past STATE_COMPACT_PARTS.
+    With the bound at 1 every advancing superstep compacts; the crawl must
+    still equal the oracle's."""
+    from web2llmstxt_spark.operators import frontier
+
+    monkeypatch.setattr(frontier, "STATE_COMPACT_PARTS", 1)
+    tags = []
+    checkpoint = FrontierCrawler._checkpoint_state
+
+    def spy(self, frontier_df, bloom_df, tag, seen_df=None):
+        tags.append((str(tag), seen_df is not None))
+        return checkpoint(self, frontier_df, bloom_df, tag, seen_df=seen_df)
+
+    monkeypatch.setattr(FrontierCrawler, "_checkpoint_state", spy)
+    corpus = generate_corpus(seed=19, n_hosts=2, pages_per_host=40)
+    assert_parity(*run_both(spark, corpus, CrawlConfig(max_pages=12)))
+    assert any(t.endswith("c") and full for t, full in tags), tags
+
+
 def test_failed_fetches_enter_seen(spark):
     # quirk Q5: attempted-but-failed URLs are in seen, never retried
     corpus = generate_corpus(seed=23, n_hosts=1, pages_per_host=30, p_fetch_fail=0.4)
@@ -96,23 +117,8 @@ def test_failed_fetches_enter_seen(spark):
     assert engine_seen - crawled_urls, "expected some attempted-but-not-kept URLs in seen"
 
 
-def test_udf_scorer_parity(spark):
-    # the native JVM scorer is the DEFAULT since r4; the pandas-UDF kernel is
-    # kept as the bit-exactness oracle twin and must STILL reproduce the
-    # oracle exactly when explicitly selected
-    corpus = generate_corpus(seed=29, n_hosts=2, pages_per_host=25)
-    cfg = CrawlConfig(max_pages=10)
-    oracle_res = crawl(corpus, cfg)
-    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES)
-    engine = FrontierCrawler(spark, site, cfg, use_bloom=False, use_native_scorer=False)
-    pages_df, seen_df = engine.crawl([(sid, url) for sid, url, _ in corpus.seeds])
-    engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
-    engine_seen = {r.url for r in seen_df.collect()}
-    assert_parity(oracle_res, engine_pages, engine_seen)
-
-
 def test_midscale_budget_cut_parity(spark, tmp_path):
-    """Regression net for the distributed budget cut (_with_global_rank):
+    """Regression net for the distributed budget cut (ranking.global_rank):
     a bulk corpus where the cut bites at depth>=2; engine (bloom + native
     scorer + distributed top-k) must match the oracle exactly."""
     from web2llmstxt_spark.sources.corpus import corpus_from_parquet, generate_corpus_fast
@@ -124,7 +130,7 @@ def test_midscale_budget_cut_parity(spark, tmp_path):
     cfg = CrawlConfig(max_pages=150, safety_limit=700)  # cut bites mid-crawl
     oracle_res = crawl(corpus, cfg)
     site = spark.read.parquet(f"{out}/site_pages.parquet")
-    engine = FrontierCrawler(spark, site, cfg, use_bloom=True, use_native_scorer=True)
+    engine = FrontierCrawler(spark, site, cfg, use_bloom=True)
     pages_df, seen_df = engine.crawl([(i, u) for i, u in enumerate(meta["seeds"])])
     engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
     engine_seen = {r.url for r in seen_df.collect()}
@@ -173,11 +179,15 @@ def test_superstep_metrics_match_oracle_depth_counts(spark, tmp_path):
         assert _json.load(open(p)) == m
 
 
-def test_native_robots_matches_oracle(spark):
-    """S6 native twin: the compiled WHEN-chain robots matcher must agree
-    with oracle.robots_disallowed on every URL of a two-host corpus PLUS
-    hand-built edge cases (empty path, query-only, duplicate-prefix
-    allow/disallow tie, nested allow-under-disallow)."""
+def test_native_robots_matches_oracle():
+    """The registry's DuckDB robots oracle (native.robots_disallowed_sql,
+    used by q_robots_filter) must agree with oracle.robots_disallowed on
+    every URL of a two-host corpus PLUS hand-built edge cases (empty path,
+    query-only, duplicate-prefix allow/disallow tie, nested
+    allow-under-disallow, host case). The engine's own matcher is held to
+    the same oracle by test_properties::test_robots_join_matches_oracle."""
+    import duckdb
+
     from web2llmstxt_spark.functions import native
     from web2llmstxt_spark.oracle.crawl_oracle import robots_disallowed
 
@@ -201,23 +211,13 @@ def test_native_robots_matches_oracle(spark):
         "https://edge.example/dup/inside",
         "https://EDGE.example/private/y",  # host case-insensitivity
     ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = {
-        r.url: r.d
-        for r in df.select(
-            "url", native.robots_disallowed_native(F.col("url"), rules_by_host).alias("d")
-        ).collect()
-    }
-    for u in urls:
-        assert got[u] == robots_disallowed(u, rules_by_host), u
-    # and the DuckDB SQL twin agrees row-for-row
-    import duckdb
-
     con = duckdb.connect()
     con.execute("CREATE TABLE urls(url VARCHAR)")
     con.executemany("INSERT INTO urls VALUES (?)", [(u,) for u in urls])
     sql = native.robots_disallowed_sql("url", rules_by_host)
-    for u, d in con.execute(f"SELECT url, {sql} FROM urls").fetchall():
+    rows = con.execute(f"SELECT url, {sql} FROM urls").fetchall()
+    assert len(rows) == len(urls)
+    for u, d in rows:
         assert d == robots_disallowed(u, rules_by_host), u
 
 
@@ -351,7 +351,7 @@ def test_trap_denylist_parity(spark):
 def test_join_robots_matches_oracle(spark):
     """S6 r5 hot path: the broadcast-join rule-array matcher
     (robots.with_robots_decision) must agree with oracle.robots_disallowed
-    on the same edge battery the WHEN-chain twin is held to — through BOTH
+    on the same edge battery the DuckDB oracle is held to — through BOTH
     the broadcast and the shuffled-join carrier."""
     from web2llmstxt_spark.operators import robots as robots_mod
     from web2llmstxt_spark.oracle.crawl_oracle import robots_disallowed
@@ -388,10 +388,10 @@ def test_join_robots_matches_oracle(spark):
 
 
 def test_join_robots_many_hosts(spark):
-    """The join carrier at the scale the closure dict could not survive:
-    10^4 hosts x 5 rules (5x the old NATIVE_ROBOTS_MAX_RULES=512 WHEN-chain
-    gate PER HOST GROUP, 100x total). Decisions must match the oracle on a
-    deterministic URL sample hitting allowed, disallowed, tie, and
+    """The join carrier at a scale a closure dict or a compiled WHEN chain
+    could not carry: 10^4 hosts x 5 rules (5 x 10^4 rules, 100x the 512-rule
+    bound a WHEN chain stays practical at). Decisions must match the oracle
+    on a deterministic URL sample hitting allowed, disallowed, tie, and
     rule-less hosts."""
     from web2llmstxt_spark.operators import robots as robots_mod
     from web2llmstxt_spark.oracle.crawl_oracle import robots_disallowed
@@ -430,26 +430,3 @@ def test_join_robots_many_hosts(spark):
         r.url for r in robots_mod.enforce_robots_join(df, rules_df).collect()
     }
     assert kept == {u for u in urls if not robots_disallowed(u, rules_by_host)}
-
-
-def test_robots_mode_three_way_crawl_parity(spark):
-    """The full crawl is invariant across the three S6 carriers (join =
-    default hot path, native WHEN chain, pandas-UDF oracle twin): identical
-    page sequence and seen set."""
-    from web2llmstxt_spark import schemas as _schemas
-
-    corpus = generate_corpus(seed=17, n_hosts=2, pages_per_host=25)
-    cfg = CrawlConfig(max_pages=12, enforce_robots=True)
-    site = spark.createDataFrame(corpus.site_pages_rows(), _schemas.SITE_PAGES).cache()
-    seeds = [(sid, url) for sid, url, _ in corpus.seeds]
-    results = {}
-    for mode in ("join", "native", "udf"):
-        eng = FrontierCrawler(
-            spark, site, cfg, robots_rules=corpus.robots_rules, robots_mode=mode
-        )
-        pages_df, seen_df = eng.crawl(seeds)
-        results[mode] = (
-            [tuple(r[f] for f in PAGE_FIELDS) for r in pages_df.orderBy("rank").collect()],
-            {r.url for r in seen_df.collect()},
-        )
-    assert results["join"] == results["native"] == results["udf"]

@@ -1,10 +1,14 @@
-"""Property-based tests (hypothesis) for the pure kernels and codecs.
+"""Property-based tests (hypothesis) for the pure kernels and codecs, and
+for the engine's JVM matchers against those kernels.
 
-These run WITHOUT a SparkSession — they pin the driver-side Python kernels
+Most run WITHOUT a SparkSession — they pin the driver-side Python kernels
 and the stdlib codecs over randomized inputs, complementing the
 example-based parity tests (SURVEY §5: the reference's own test strategy is
 example-based; property tests harden the from-scratch pieces the reference
-never had, the codecs above all)."""
+never had, the codecs above all). The last section holds the crawl
+engine's Column-algebra scorers and robots matcher to the kernels the
+oracles run; each example evaluates one generated list in one Spark
+action."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -214,3 +218,135 @@ def test_bm25_sql_matches_spec(corpus, qterms):
         if sc > 0:
             want[i] = round(sc, 4)
     assert {r[0]: r[1] for r in got} == want
+
+
+# ------------------------------------- engine matchers vs the oracle kernels
+# The crawl engine scores and robots-filters every frontier candidate with
+# JVM Column expressions; the oracles run the pure-Python kernels. Crawl
+# order and the seen set depend on the two agreeing row for row.
+
+from hypothesis import example
+from pyspark.sql import functions as F
+
+from web2llmstxt_spark.functions import native
+from web2llmstxt_spark.operators import robots
+from web2llmstxt_spark.oracle.crawl_oracle import robots_disallowed
+
+_BASES = [
+    "https://ex.example", "https://ex.example/", "https://docs.ex.example/api",
+    "https://www.Acme.example/", "http://blog.example/news/",
+]
+_WORDS = sorted(
+    set(kernels.HIGH_VALUE_KEYWORDS + kernels.MEDIUM_VALUE_KEYWORDS
+        + kernels.LOW_VALUE_KEYWORDS + kernels.BESTFIRST_KEYWORDS)
+) + ["page", "acme", "Docs", "LOGIN", "x"]
+# ASCII only: the native isalpha test is ^[A-Za-z]+$ (native.py docstring)
+_seg = st.one_of(
+    st.sampled_from(_WORDS),
+    st.text(alphabet="abcXYZ0189-_.", max_size=8),
+)
+_suffix = st.sampled_from(["", "/", ".png", ".PDF", ".html", ".js", "/page/2"])
+_query = st.sampled_from([
+    "", "?", "?page=2", "?q=1&page=3", "?q=short", "?q=a-much-longer-query",
+    "?a=1?bb=22222222222",  # double '?': the kernel reads the middle part
+])
+
+
+@st.composite
+def _scored_url(draw):
+    """(url, base_url): the url usually extends its base (so the path-depth
+    terms see a stripped path), sometimes another site's."""
+    base = draw(st.sampled_from(_BASES))
+    root = draw(st.one_of(st.just(base), st.sampled_from(_BASES)))
+    segs = draw(st.lists(_seg, max_size=6))
+    url = root.rstrip("/") + "/" + "/".join(segs) + draw(_suffix) + draw(_query)
+    return url, base
+
+
+@given(st.lists(_scored_url(), min_size=1, max_size=100))
+@settings(max_examples=8, deadline=None)
+def test_score_url_native_matches_kernel(spark, pairs):
+    df = spark.createDataFrame(pairs, "url string, base_url string")
+    rows = df.select(
+        "url", "base_url",
+        native.score_url_native(F.col("url"), F.col("base_url")).alias("s"),
+    ).collect()
+    assert len(rows) == len(pairs)
+    for r in rows:
+        assert r.s == kernels.score_url_importance(r.url, r.base_url), (r.url, r.base_url)
+
+
+@given(
+    urls=st.lists(st.one_of(st.none(), _scored_url().map(lambda p: p[0])),
+                  min_size=1, max_size=100),
+    base=st.sampled_from(_BASES),
+    weight=st.sampled_from([1.0, 0.5, 3.0]),
+)
+@settings(max_examples=8, deadline=None)
+def test_keyword_score_native_matches_kernel(spark, urls, base, weight):
+    kws = kernels.bestfirst_keywords(base)
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rows = df.select(
+        "url", native.keyword_score_native(F.col("url"), kws, weight).alias("s")
+    ).collect()
+    assert len(rows) == len(urls)
+    for r in rows:
+        assert r.s == kernels.keyword_relevance_score(r.url, kws, weight), (r.url, kws)
+
+
+_HOSTS = ["a.example", "b.example", "edge.example"]
+_path_seg = st.sampled_from(["private", "docs", "dup", "a", "ab", ""])
+_prefix = st.builds(
+    lambda segs, slash: "/" + "/".join(segs) + slash,
+    st.lists(_path_seg, max_size=3), st.sampled_from(["", "/"]),
+)
+_rules = st.dictionaries(
+    st.sampled_from(_HOSTS),
+    st.lists(st.tuples(st.sampled_from(["allow", "disallow"]), _prefix), max_size=6),
+)
+
+
+@st.composite
+def _robots_url(draw):
+    host = draw(st.sampled_from(_HOSTS + ["other.example"]))
+    if draw(st.booleans()):
+        host = host.upper()  # host matching is case-insensitive
+    path = draw(st.one_of(
+        st.just(""),  # empty path decides as '/'
+        st.lists(_path_seg, min_size=1, max_size=4).map(lambda s: "/" + "/".join(s)),
+    ))
+    return f"https://{host}{path}" + draw(st.sampled_from(["", "?page=2"]))
+
+
+_EDGE_RULES = {"edge.example": [
+    ("disallow", "/private/"),
+    ("allow", "/private/docs/"),  # nested allow under a disallow
+    ("allow", "/dup"),
+    ("disallow", "/dup"),         # duplicate prefix: allow wins the tie
+]}
+_EDGE_URLS = [
+    "https://edge.example",       # empty path -> '/'
+    "https://edge.example/",
+    "https://edge.example?page=2",
+    "https://edge.example/private/x",
+    "https://edge.example/private/docs/x",
+    "https://edge.example/dup/inside",
+    "https://EDGE.example/private/y",
+    "https://nohost.example/private/x",
+]
+
+
+@given(rules_by_host=_rules, urls=st.lists(_robots_url(), min_size=1, max_size=100),
+       broadcast=st.booleans())
+@example(rules_by_host=_EDGE_RULES, urls=_EDGE_URLS, broadcast=True)
+@example(rules_by_host=_EDGE_RULES, urls=_EDGE_URLS, broadcast=False)
+@settings(max_examples=6, deadline=None)
+def test_robots_join_matches_oracle(spark, rules_by_host, urls, broadcast):
+    """The frontier's only robots matcher (rule-array join + longest-prefix
+    Column algebra) decides every URL as oracle.robots_disallowed does."""
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rules_df = robots.rules_array_from_list(spark, rules_by_host)
+    rows = robots.with_robots_decision(df, rules_df, broadcast=broadcast).collect()
+    assert sorted(r.url for r in rows) == sorted(urls)
+    for r in rows:
+        assert r.disallowed == robots_disallowed(r.url, rules_by_host), (r.url, rules_by_host)

@@ -302,11 +302,13 @@ def keyword_relevance_score(url: str, keywords: tuple[str, ...], weight: float =
     llmsgen/crawler/web_crawler.py:251+ (pyc) with weight=1.0); the
     substring-hit-fraction form is the library's documented public behavior,
     reimplemented here so ordering is reproducible without the dependency.
+    Matching is case-insensitive on both sides, so a keyword taken from a
+    mixed-case host (``www.Acme.example`` -> ``Acme``) still hits.
     """
     if not keywords:
         return 0.0
     u = (url or "").lower()
-    hits = sum(1 for k in keywords if k in u)
+    hits = sum(1 for k in keywords if k.lower() in u)
     return weight * (hits / len(keywords))
 
 

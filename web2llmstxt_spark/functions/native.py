@@ -2,8 +2,9 @@
 
 These stay entirely JVM-side (whole-stage codegen, no Python boundary) — the
 fast path for bulk scoring/categorization at 100 TB. Parity with the
-pure-Python kernels is enforced by tests/test_native_parity.py; the pandas
-UDFs remain the bit-exactness reference for the crawl-order gate.
+pure-Python kernels (which the oracles run) is enforced by property tests
+over generated inputs (tests/test_properties.py) and by the engine-vs-oracle
+crawl gates.
 
 Caveats (documented deviations, covered by parity tests on our URL corpora):
 - ``str.isalpha`` is replicated as ``^[A-Za-z]+$`` (ASCII); the reference
@@ -169,45 +170,18 @@ def host_bucket_native(value: Column, num_buckets) -> Column:
     ).cast("int")
 
 
-#: above this total rule count the compiled WHEN chain stops being a win
-#: (codegen time + expression-tree depth); frontier falls back to the
-#: pandas-UDF matcher. Real robots files are tens of rules per host.
-NATIVE_ROBOTS_MAX_RULES = 512
-
-
 def _ordered_robots_rules(rules_by_host: dict) -> list[tuple[str, str, str]]:
-    """Flatten rules_by_host into the evaluation order under which
-    FIRST-match == longest-prefix-match with allow-on-tie: per host, sort by
-    (prefix length desc, allow before disallow). Two same-length prefixes
-    that both match a path are the same string, so the only real tie is a
-    duplicate prefix with conflicting rules — allow sorts first and wins,
-    matching oracle.robots_disallowed."""
+    """Flatten rules_by_host into the evaluation order under which a flat
+    FIRST-match CASE == longest-prefix-match with allow-on-tie: per host,
+    sort by (prefix length desc, allow before disallow). Two same-length
+    prefixes that both match a path are the same string, so the only real
+    tie is a duplicate prefix with conflicting rules — allow sorts first and
+    wins, matching oracle.robots_disallowed."""
     out = []
     for host, rules in rules_by_host.items():
         for rule, prefix in sorted(rules, key=lambda rp: (-len(rp[1]), rp[0] != "allow")):
             out.append((host.lower(), rule, prefix))
     return out
-
-
-def robots_disallowed_native(url: Column, rules_by_host: dict) -> Column:
-    """JVM Column twin of oracle.crawl_oracle.robots_disallowed (S6).
-
-    Compiles the bounded per-host ruleset into ONE flat WHEN chain over
-    (host equality AND path startswith prefix) — rows of other hosts fall
-    through a host's rules, and within a host the first match in
-    _ordered_robots_rules order decides. No Python boundary: at a 10^10-URL
-    frontier, robots evaluation is per-candidate hot-path work, same as C1
-    scoring. Host via parse_url HOST (ports/userinfo never appear in crawl
-    URLs — normalize_url output); empty path coalesces to '/' like the
-    oracle's ``parsed.path or '/'``."""
-    host = F.lower(F.parse_url(url, F.lit("HOST")))
-    p = F.parse_url(url, F.lit("PATH"))
-    path = F.when(p.isNull() | (p == ""), F.lit("/")).otherwise(p)
-    decision = F.lit(False)
-    for h, rule, prefix in reversed(_ordered_robots_rules(rules_by_host)):
-        cond = (host == F.lit(h)) & path.startswith(F.lit(prefix))
-        decision = F.when(cond, F.lit(rule == "disallow")).otherwise(decision)
-    return decision
 
 
 # ------------------------------------------------------------------ SQL twins
@@ -304,9 +278,10 @@ def categorize_sql(url_expr: str, title_expr: str, content_expr: str) -> str:
 
 
 def robots_disallowed_sql(url_expr: str, rules_by_host: dict) -> str:
-    """DuckDB twin of robots_disallowed_native: same flat first-match CASE
-    over the same _ordered_robots_rules order; host/path via regexp (DuckDB
-    has no parse_url), path falling back to '/'."""
+    """DuckDB expression for oracle.robots_disallowed (the registry's
+    q_robots_filter oracle): one flat first-match CASE over the
+    _ordered_robots_rules order; host/path via regexp (DuckDB has no
+    parse_url), path falling back to '/'."""
     host = f"lower(regexp_extract({url_expr}, '^[a-zA-Z]+://([^/?#]+)', 1))"
     path = (
         f"coalesce(nullif(regexp_extract({url_expr}, "

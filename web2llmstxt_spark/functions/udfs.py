@@ -18,7 +18,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
     IntegerType,
     StringType,
 )
@@ -30,15 +29,6 @@ from . import kernels
 def normalize_url_udf(urls: pd.Series) -> pd.Series:
     """URL-seen identity (P1). Ref: crawler/web_crawler.py:371-395."""
     return urls.map(kernels.normalize_url)
-
-
-@pandas_udf(DoubleType())
-def score_url_udf(urls: pd.Series, base_urls: pd.Series) -> pd.Series:
-    """Frontier priority (C1). Ref: llmsgen/crawler/web_crawler.py:147-167 (pyc)."""
-    return pd.Series(
-        [kernels.score_url_importance(u, b) for u, b in zip(urls, base_urls)],
-        dtype="float64",
-    )
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -27,10 +27,7 @@ from __future__ import annotations
 
 import urllib.parse
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from ..functions import kernels, linkexpand, native, udfs
 from ..oracle.bestfirst_oracle import depth_for_max_pages
@@ -64,17 +61,6 @@ def auto_batch_size(max_pages: int) -> int:
     return max(10, -(-max_pages // AUTO_BATCH_TARGET_STEPS))
 
 
-def _kw_score_udf(keywords: tuple[str, ...], weight: float = 1.0):
-    @pandas_udf(DoubleType())
-    def score(urls: pd.Series) -> pd.Series:
-        return pd.Series(
-            [kernels.keyword_relevance_score(u, keywords, weight) for u in urls],
-            dtype="float64",
-        )
-
-    return score
-
-
 class BestFirstCrawler:
     def __init__(
         self,
@@ -85,7 +71,6 @@ class BestFirstCrawler:
         batch_size: int | str | None = 10,
         max_depth: int | None = None,
         run_id: str = "bf",
-        use_native_scorer: bool = True,
     ):
         self.spark = spark
         self.fetcher = TableFetcher(site_pages)
@@ -99,11 +84,9 @@ class BestFirstCrawler:
             auto_batch_size(max_pages) if batch_size in (None, "auto") else batch_size
         )
         self.max_depth = depth_for_max_pages(max_pages) if max_depth is None else max_depth
+        # link scoring is the per-URL hot loop: the JVM Column twin of
+        # kernels.keyword_relevance_score (native.keyword_score_native)
         self.keywords = kernels.bestfirst_keywords(base_url)
-        # JVM Column twin of the keyword scorer (functions/native.py) —
-        # DEFAULT ON: link scoring is the per-URL hot loop; the pandas UDF
-        # stays as the bit-exactness oracle twin (use_native_scorer=False).
-        self.use_native_scorer = use_native_scorer
         self.run_id = run_id
         self.metrics: list[dict] = []
 
@@ -154,10 +137,6 @@ class BestFirstCrawler:
         attempted = 0
         superstep = 0
         page_parts: list[DataFrame] = []
-        if self.use_native_scorer:
-            kw_score = lambda c: native.keyword_score_native(c, self.keywords)
-        else:
-            kw_score = _kw_score_udf(self.keywords)
 
         while frontier_count > 0 and attempted < self.max_pages:
             b = min(self.batch_size, self.max_pages - attempted)
@@ -198,7 +177,7 @@ class BestFirstCrawler:
                 .groupBy("url")
                 .agg(F.min("depth").alias("depth"))  # min parent depth (spec)
                 .join(seen, "url", "left_anti")
-                .withColumn("score", kw_score(F.col("url")))
+                .withColumn("score", native.keyword_score_native(F.col("url"), self.keywords))
             )
             frontier_next = frontier.join(batch.select("url"), "url", "left_anti").unionByName(
                 links

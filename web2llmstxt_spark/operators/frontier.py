@@ -4,8 +4,8 @@ Rebuilds v2 ``discover_all_links_first`` (llmsgen/crawler/web_crawler.py:
 169-249 (pyc), SURVEY.md §3-EP3) as a driver-side superstep loop where each
 depth is ONE declarative DataFrame job:
 
-    frontier ──left_anti(seen)──► score(pandas UDF) ──filter(>thr)──►
-    robots filter ──► per-host politeness cap (window) ──►
+    frontier ──left_anti(seen)──► score (JVM Column) ──filter(>thr)──►
+    robots filter (rule-array join) ──► per-host politeness cap (window) ──►
     global priority order (score desc, url asc) ──► budget cut ──►
     FETCH (join site_pages / pluggable fetcher) ──► quality filter wc>=50 ──►
     emit pages + explode(out-links) ──► union into frontier; seen += attempted
@@ -27,8 +27,9 @@ Scale design (10^10-URL frontier, north rule):
   The window is the only single-partition step and operates on the
   already-budget-bounded candidate slice; for budgets beyond one partition
   swap in the documented two-phase threshold selection.
-- the fetch is pluggable: in production a politeness-gated HTTP pandas UDF
-  (``HttpFetcher`` stub); in tests/bench the corpus join (``TableFetcher``,
+- the fetch is pluggable: in production a politeness-gated HTTP
+  mapInPandas (``sources/httpfetch.HttpFetcher``); in tests/bench the
+  corpus join (``TableFetcher``,
   candidate side broadcast — the site table scan is a simulation artifact,
   not the design point).
 - per-superstep state (frontier/seen/pages/metrics) is written to parquet
@@ -46,13 +47,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import StringType
 
 from .. import schemas
-from ..functions import kernels, linkexpand, udfs
+from ..functions import kernels, linkexpand, native, udfs
 from ..oracle.crawl_oracle import CrawlConfig
 from ..session import CACHE_LEVEL
-from . import bloom, ranking
+from . import bloom, ranking, robots
 
 #: below this kept-page count the finalize (url, rank) table is broadcast
 #: (~120 B/row -> ≤500 MB build side), so finalize never shuffles content;
@@ -66,33 +67,38 @@ STATE_COMPACT_PARTS = 32
 
 
 def _union_parts(parts: list[DataFrame]) -> DataFrame:
-    """Lazy union of individually-materialized state parts (append-only
-    tables: seen = depth-0 checkpoint + one cached attempt set per
-    superstep; frontier = depth-0 checkpoint + one checkpointed fresh-link
-    delta per superstep). Scanning the union costs the same as scanning one
-    checkpointed table of the same rows; building it writes nothing."""
+    """Lazy union of individually-materialized parts (append-only tables:
+    seen = depth-0 checkpoint + one cached attempt set per superstep;
+    frontier = depth-0 checkpoint + one checkpointed fresh-link delta per
+    superstep; pages = one part per superstep). Scanning the union costs the
+    same as scanning one checkpointed table of the same rows; building it
+    writes nothing."""
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
 
+#: column layout of the combined state checkpoint: every state table is one
+#: 'kind' of a single union, the columns it does not have left null
+_STATE_COLS = {
+    "url": "string", "seed_id": "int", "base_url": "string",
+    "base_domain": "string", "bucket": "int", "bitmap": "binary", "n_keys": "long",
+}
+
+
+def _state_part(df: DataFrame, kind: str, cols: tuple[str, ...]) -> DataFrame:
+    """``df``'s ``cols`` in the combined-state layout, tagged ``kind``."""
+    return df.select(F.lit(kind).alias("kind"), *[
+        F.col(c) if c in cols else F.lit(None).cast(t).alias(c)
+        for c, t in _STATE_COLS.items()
+    ])
+
+
 @pandas_udf(StringType())
 def base_domain_udf(base_urls: pd.Series) -> pd.Series:
     """urlparse(base_url).netloc — ref llmsgen/crawler/web_crawler.py:186 (pyc)."""
     return base_urls.map(lambda u: urllib.parse.urlparse(u).netloc)
-
-
-def _robots_match_udf(rules_by_host: dict):
-    """Closure UDF: longest-prefix robots decision (same as oracle)."""
-
-    @pandas_udf(BooleanType())
-    def disallowed(urls: pd.Series) -> pd.Series:
-        from web2llmstxt_spark.oracle.crawl_oracle import robots_disallowed
-
-        return urls.map(lambda u: robots_disallowed(u, rules_by_host))
-
-    return disallowed
 
 
 class TableFetcher:
@@ -262,17 +268,6 @@ class ClosedFormFetcher:
         return _fetch_post(cand.mapInPandas(gen, out_schema))
 
 
-def HttpFetcher(*args, **kwargs):
-    """Production fetch path (S2): real stdlib-urllib HTTP transport via
-    mapInPandas with UDF-internal retry — implemented in
-    sources/httpfetch.py (kept there with its HTML round-trip kernels and
-    the loopback CorpusHTTPServer the byte-parity tests crawl against).
-    This constructor is the back-compatible entry point at the old name."""
-    from ..sources.httpfetch import HttpFetcher as _Impl
-
-    return _Impl(*args, **kwargs)
-
-
 class FrontierCrawler:
     def __init__(
         self,
@@ -284,11 +279,9 @@ class FrontierCrawler:
         num_buckets: int = 32,
         use_bloom: bool = True,
         seen_filter: str = "bloom",
-        use_native_scorer: bool = True,
         run_id: str = "run",
         fetcher=None,
         salt_hosts: dict[str, int] | None = None,
-        robots_mode: str = "join",
     ):
         self.spark = spark
         self.cfg = cfg
@@ -316,12 +309,6 @@ class FrontierCrawler:
         # mega-host's URLs spread over k partitions on both the bitmap and
         # probe sides. Results are unchanged (test_salted_crawl_parity).
         self.salt_hosts = salt_hosts
-        # JVM Column-algebra scorer (functions/native.py): same results as the
-        # pandas-UDF kernel (parity-tested), ~no Python boundary. DEFAULT ON —
-        # scoring is the highest-volume per-URL computation at a 10^10-URL
-        # frontier; the pandas-UDF kernel remains the bit-exactness oracle
-        # twin (use_native_scorer=False) for parity tests.
-        self.use_native_scorer = use_native_scorer
         self.run_id = run_id
         self.metrics: list[dict] = []
         # incremental Bloom state (north rule "merged per superstep"): the
@@ -333,34 +320,24 @@ class FrontierCrawler:
         self.bloom_rebuilds = 0
         self.bloom_deltas = 0
         self._bloom_rebuild_pending = False
-        # S6 enforcement carrier (r5, scale-safe default): 'join' keeps
-        # policies as a per-host rule-array DataFrame broadcast-joined to
-        # candidates with a Column-algebra longest-prefix decision — no
-        # driver dict in task closures, no per-rule plan growth, works at
-        # 10^6+ hosts. 'native' (compiled WHEN chain) and 'udf' (pandas
-        # closure) remain as bounded-ruleset parity twins of the same
-        # semantics (test_frontier_parity exercises all three).
-        if robots_mode not in ("join", "native", "udf"):
-            raise ValueError(f"robots_mode must be join|native|udf, got {robots_mode!r}")
-        self.robots_mode = robots_mode
-        self.rules_by_host: dict = {}
+        # S6 enforcement: policies stay a per-host rule-array DataFrame
+        # broadcast-joined to candidates with a Column-algebra longest-prefix
+        # decision (robots.enforce_robots_join) — no Python rules dict in
+        # task closures, no per-rule plan growth, works at 10^6+ hosts
         self._robots_rules_df: DataFrame | None = None
         self._robots_broadcastable = True
         if cfg.enforce_robots and robots_rules:
+            rules_by_host: dict = {}
             for host, _agent, rule, prefix in robots_rules:
-                self.rules_by_host.setdefault(host, []).append((rule, prefix))
-            if robots_mode == "join":
-                from . import robots as _robots
-
-                n_rules = sum(len(r) for r in self.rules_by_host.values())
-                self._robots_broadcastable = (
-                    n_rules <= _robots.ROBOTS_BROADCAST_MAX_RULES
-                )
-                # tiny per-host table, cached once: every superstep's join
-                # reuses the aggregated arrays instead of re-running the agg
-                self._robots_rules_df = _robots.rules_array_from_list(
-                    spark, self.rules_by_host
-                ).cache()
+                rules_by_host.setdefault(host, []).append((rule, prefix))
+            self._robots_broadcastable = (
+                len(robots_rules) <= robots.ROBOTS_BROADCAST_MAX_RULES
+            )
+            # tiny per-host table, cached once: every superstep's join
+            # reuses the aggregated arrays instead of re-running the agg
+            self._robots_rules_df = robots.rules_array_from_list(
+                spark, rules_by_host
+            ).cache()
 
     # ------------------------------------------------------------------ utils
     def _with_host(self, df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -439,6 +416,20 @@ class FrontierCrawler:
             f.write("ok")
 
     # ------------------------------------------------------- superstep state
+    def _filter_state(self, urls: DataFrame, state: DataFrame | None = None) -> DataFrame:
+        """Seen-filter state over ``urls`` merged into ``state`` (None: a
+        fresh filter), as a lazy plan at the current ``bloom_m_bits``.
+
+        The ONE place the filter is built: salt_hosts must reach the build
+        side (a salted host's keys must land in the bucket the probe reads,
+        else they become false negatives and are re-crawled), and the merge
+        must always see m_bits (cuckoo sizes a fresh table from it; a raw
+        cuckoo delta only becomes a probe-able table through merge_state)."""
+        delta = self._filter_mod.delta_state(
+            urls, self.num_buckets, self.bloom_m_bits, self.salt_hosts
+        )
+        return self._filter_mod.merge_state(state, delta, self.bloom_m_bits)
+
     def _advance_bloom(self, attempted_urls: DataFrame, seen_next: DataFrame):
         """Next Bloom state as a lazy plan: OR in only this superstep's
         attempted URLs (O(|delta|), the round-1 fix vs rebuilding from the
@@ -449,14 +440,9 @@ class FrontierCrawler:
                 self.bloom_m_bits *= 2
                 self.bloom_rebuilds += 1
             self._bloom_rebuild_pending = False
-            return self._filter_mod.merge_state(
-                None, self._filter_mod.delta_state(seen_next, self.num_buckets, self.bloom_m_bits,
-                                    self.salt_hosts)
-            )
+            return self._filter_state(seen_next)
         self.bloom_deltas += 1
-        delta = self._filter_mod.delta_state(attempted_urls, self.num_buckets, self.bloom_m_bits,
-                                    self.salt_hosts)
-        return self._filter_mod.merge_state(self._bloom, delta, self.bloom_m_bits)
+        return self._filter_state(attempted_urls, self._bloom)
 
     def _fetch_attempts(
         self, todo: DataFrame, bound: int | None, materialized: bool = False
@@ -501,44 +487,28 @@ class FrontierCrawler:
             return f.fetch(todo)
         return f.fetch(todo, url_hint=urls)
 
-    def _checkpoint_state(self, seen_df: DataFrame, frontier_df: DataFrame,
-                          bloom_df: DataFrame | None, tag) -> tuple:
-        """ONE combined checkpoint job for all superstep state (seen +
-        frontier + Bloom bitmaps share a 'kind' discriminator), with an
-        Observation riding the same job to return the frontier size and the
-        max per-bucket Bloom key count — no extra count() actions.
+    def _checkpoint_state(self, frontier_df: DataFrame, bloom_df: DataFrame | None,
+                          tag, seen_df: DataFrame | None = None) -> tuple:
+        """ONE combined checkpoint job for the superstep state (frontier,
+        optional seen and Bloom bitmaps share a 'kind' discriminator), with
+        an Observation riding the same job to return the frontier row count
+        and the max per-bucket Bloom key count — no extra count() actions.
 
-        Returns (seen, frontier, bloom_state, frontier_count).
+        ``seen_df`` None is the incremental advance: ``frontier_df`` is only
+        this superstep's frontier delta (already anti-joined disjoint from
+        the live frontier) and the seen delta needs NO job at all — it is
+        exactly the attempt set, which the superstep's stats action already
+        materialized into the cache.
+
+        Returns (seen or None, frontier, bloom_state, frontier_count).
         """
-        nulls = [
-            F.lit(None).cast("int").alias("bucket"),
-            F.lit(None).cast("binary").alias("bitmap"),
-            F.lit(None).cast("long").alias("n_keys"),
-        ]
-        seen_part = seen_df.select(
-            F.lit("seen").alias("kind"),
-            "url",
-            F.lit(None).cast("int").alias("seed_id"),
-            F.lit(None).cast("string").alias("base_url"),
-            F.lit(None).cast("string").alias("base_domain"),
-            *nulls,
-        )
-        frontier_part = frontier_df.select(
-            F.lit("frontier").alias("kind"),
-            "url", "seed_id", "base_url", "base_domain",
-            *nulls,
-        )
-        parts = seen_part.unionByName(frontier_part)
+        link_cols = ("url", "seed_id", "base_url", "base_domain")
+        parts = _state_part(frontier_df, "frontier", link_cols)
+        if seen_df is not None:
+            parts = _state_part(seen_df, "seen", ("url",)).unionByName(parts)
         if bloom_df is not None:
             parts = parts.unionByName(
-                bloom_df.select(
-                    F.lit("bloom").alias("kind"),
-                    F.lit(None).cast("string").alias("url"),
-                    F.lit(None).cast("int").alias("seed_id"),
-                    F.lit(None).cast("string").alias("base_url"),
-                    F.lit(None).cast("string").alias("base_domain"),
-                    "bucket", "bitmap", "n_keys",
-                )
+                _state_part(bloom_df, "bloom", ("bucket", "bitmap", "n_keys"))
             )
         obs = Observation(f"state_{self.run_id}_{tag}")
         parts = parts.observe(
@@ -548,10 +518,10 @@ class FrontierCrawler:
         )
         state = parts.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
         m = obs.get
-        seen = state.filter(F.col("kind") == "seen").select("url")
-        frontier = state.filter(F.col("kind") == "frontier").select(
-            "url", "seed_id", "base_url", "base_domain"
-        )
+        seen = None
+        if seen_df is not None:
+            seen = state.filter(F.col("kind") == "seen").select("url")
+        frontier = state.filter(F.col("kind") == "frontier").select(*link_cols)
         bloom_state = None
         if bloom_df is not None:
             bloom_state = state.filter(F.col("kind") == "bloom").select(
@@ -562,64 +532,6 @@ class FrontierCrawler:
                 self._bloom_rebuild_pending = True
         frontier_count = int(m["frontier_n"]) if m.get("frontier_n") is not None else 0
         return seen, frontier, bloom_state, frontier_count
-
-    def _checkpoint_delta(self, fresh_df: DataFrame, bloom_df: DataFrame | None,
-                          tag) -> tuple:
-        """Incremental counterpart of _checkpoint_state: ONE combined job
-        materializing only this superstep's frontier delta (`fresh` —
-        already anti-joined disjoint from the live frontier) plus the Bloom
-        bitmap state, with an Observation returning |fresh| and the max
-        per-bucket Bloom key count. The seen delta needs NO job at all: it
-        is exactly the attempt set, which this superstep's stats action
-        already materialized into the cache.
-
-        Returns (fresh_ckpt, bloom_state, fresh_count).
-        """
-        parts = fresh_df.select(
-            F.lit("frontier").alias("kind"),
-            "url", "seed_id", "base_url", "base_domain",
-            F.lit(None).cast("int").alias("bucket"),
-            F.lit(None).cast("binary").alias("bitmap"),
-            F.lit(None).cast("long").alias("n_keys"),
-        )
-        if bloom_df is not None:
-            parts = parts.unionByName(
-                bloom_df.select(
-                    F.lit("bloom").alias("kind"),
-                    F.lit(None).cast("string").alias("url"),
-                    F.lit(None).cast("int").alias("seed_id"),
-                    F.lit(None).cast("string").alias("base_url"),
-                    F.lit(None).cast("string").alias("base_domain"),
-                    "bucket", "bitmap", "n_keys",
-                )
-            )
-        obs = Observation(f"delta_{self.run_id}_{tag}")
-        parts = parts.observe(
-            obs,
-            F.sum(F.when(F.col("kind") == "frontier", 1).otherwise(0)).alias("fresh_n"),
-            F.max(F.when(F.col("kind") == "bloom", F.col("n_keys"))).alias("bloom_max_keys"),
-        )
-        state = parts.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
-        m = obs.get
-        fresh_ckpt = state.filter(F.col("kind") == "frontier").select(
-            "url", "seed_id", "base_url", "base_domain"
-        )
-        bloom_state = None
-        if bloom_df is not None:
-            bloom_state = state.filter(F.col("kind") == "bloom").select(
-                "bucket", "bitmap", "n_keys"
-            )
-            mk = m.get("bloom_max_keys")
-            if mk is not None and self._filter_mod.needs_rebuild(int(mk), self.bloom_m_bits):
-                self._bloom_rebuild_pending = True
-        fresh_n = int(m["fresh_n"]) if m.get("fresh_n") is not None else 0
-        return fresh_ckpt, bloom_state, fresh_n
-
-    # --------------------------------------------------------- distributed rank
-    def _with_global_rank(self, df: DataFrame, order, rank_col: str,
-                          cum_col_flag=None) -> DataFrame:
-        """Two-pass distributed rank (shared impl: operators/ranking.py)."""
-        return ranking.global_rank(df, order, rank_col, cum_col_flag)
 
     def _jobdesc(self, tag: str) -> None:
         """Crawl-phase tag for event-log / Spark-UI attribution: every job
@@ -712,11 +624,7 @@ class FrontierCrawler:
                 return self._finalize(all_pages, pages_count), seen
             start_depth = last + 1
             if self.use_bloom:  # resume: rebuild filter state from seen ONCE
-                self._bloom = self._filter_mod.merge_state(
-                    None, self._filter_mod.delta_state(seen, self.num_buckets, self.bloom_m_bits,
-                                        self.salt_hosts),
-                    self.bloom_m_bits,
-                ).localCheckpoint(eager=True)
+                self._bloom = self._filter_state(seen).localCheckpoint(eager=True)
         elif self.run_dir is not None:
             main0 = main0.persist(CACHE_LEVEL)
             pages = self._snapshot(main0.select(*PAGES_COL_NAMES), "pages", 0)
@@ -745,39 +653,19 @@ class FrontierCrawler:
             self._commit_superstep(0)
             all_pages = [pages]
             if self.use_bloom:
-                self._bloom = self._filter_mod.merge_state(
-                    None, self._filter_mod.delta_state(seen, self.num_buckets, self.bloom_m_bits,
-                                        self.salt_hosts),
-                    self.bloom_m_bits,
-                ).localCheckpoint(eager=True)
+                self._bloom = self._filter_state(seen).localCheckpoint(eager=True)
         else:
             main0 = main0.persist(CACHE_LEVEL)
             pages = main0.select(*PAGES_COL_NAMES)
             self._jobdesc("d0-fetch")
             pages_count = main0.count()
             self.phase_walls["d0_fetch_ms"] = int((time.time() - t_crawl) * 1000)
-            bloom0 = None
-            if self.use_bloom:
-                # salt_hosts MUST reach the build side too: a salted seed
-                # host's bits must land in the same bucket the probe reads,
-                # else depth-0 URLs become Bloom false negatives (re-crawled)
-                # merged (not raw-delta) form: the checkpoint stores these
-                # rows as probe-able state, and a cuckoo delta (packed
-                # hashes) only becomes a table through merge_state
-                bloom0 = self._filter_mod.merge_state(
-                    None,
-                    self._filter_mod.delta_state(
-                        pages.select("url"), self.num_buckets, self.bloom_m_bits,
-                        self.salt_hosts,
-                    ),
-                    self.bloom_m_bits,
-                )
+            bloom0 = self._filter_state(pages.select("url")) if self.use_bloom else None
             self._jobdesc("d0-state")
             t_d0s = time.time()
             seen, frontier, self._bloom, frontier_count = self._checkpoint_state(
-                pages.select("url"),
                 self._new_links(main0.select(*LINK_COL_NAMES), from_depth=0),
-                bloom0, 0,
+                bloom0, 0, seen_df=pages.select("url"),
             )
             self.phase_walls["d0_state_ms"] = int((time.time() - t_d0s) * 1000)
             all_pages = [pages]
@@ -805,40 +693,14 @@ class FrontierCrawler:
             else:
                 cand = frontier.join(seen, "url", "left_anti")  # J1 exact
 
-            if self.use_native_scorer:
-                from ..functions import native
-
-                cand = cand.withColumn(
-                    "score", native.score_url_native(F.col("url"), F.col("base_url"))
-                )
-            else:
-                cand = cand.withColumn(
-                    "score", udfs.score_url_udf(F.col("url"), F.col("base_url"))
-                )
+            cand = cand.withColumn(
+                "score", native.score_url_native(F.col("url"), F.col("base_url"))
+            )
             cand = cand.filter(F.col("score") > F.lit(cfg.score_threshold))  # :218
-            if cfg.enforce_robots and self.rules_by_host:
-                if self.robots_mode == "join" and self._robots_rules_df is not None:
-                    # hot path: broadcast-joined per-host rule arrays +
-                    # Column-algebra longest-prefix decision — the carrier
-                    # that survives 10^6+ hosts (no closure capture, no
-                    # WHEN-chain plan growth)
-                    from . import robots as _robots
-
-                    cand = _robots.enforce_robots_join(
-                        cand,
-                        self._robots_rules_df,
-                        broadcast=self._robots_broadcastable,
-                    )
-                elif self.robots_mode == "native":
-                    from ..functions import native
-
-                    # parity twin: compiled WHEN chain (bounded rulesets)
-                    cand = cand.filter(
-                        ~native.robots_disallowed_native(F.col("url"), self.rules_by_host)
-                    )
-                else:
-                    # parity twin: the oracle's own matcher as a pandas UDF
-                    cand = cand.filter(~_robots_match_udf(self.rules_by_host)(F.col("url")))
+            if self._robots_rules_df is not None:
+                cand = robots.enforce_robots_join(
+                    cand, self._robots_rules_df, broadcast=self._robots_broadcastable
+                )
             if cfg.deny_hosts:
                 # trap-host denylist (operators/traps): enforcement is a
                 # broadcast anti-join, same cost shape as the robots chain —
@@ -881,7 +743,7 @@ class FrontierCrawler:
                 ).persist(CACHE_LEVEL)
                 appended = F.col("success") & (F.col("wc") >= 50)
                 slim = fetched_cache.select("url", "score", "success", "wc")
-                ranked = self._with_global_rank(
+                ranked = ranking.global_rank(
                     slim, order, "__r", cum_col_flag=appended
                 ).select("url", "__cum_before")
                 attempted = (
@@ -905,7 +767,7 @@ class FrontierCrawler:
                     cand = cand.localCheckpoint(eager=True)
                     n_cand = cand.count()
                     if n_cand > remaining:
-                        ranked = self._with_global_rank(cand, order, "__r")
+                        ranked = ranking.global_rank(cand, order, "__r")
                         todo = ranked.filter(F.col("__r") <= remaining).drop("__r")
                     else:
                         todo = cand
@@ -1003,7 +865,7 @@ class FrontierCrawler:
                 # one checkpoint every STATE_COMPACT_PARTS supersteps so
                 # plan width stays bounded on deep/auto-batched crawls.
                 seen_parts.append(attempted.select("url"))
-                fresh_ckpt, self._bloom, fresh_n = self._checkpoint_delta(
+                _, fresh_ckpt, self._bloom, fresh_n = self._checkpoint_state(
                     fresh, bloom_next, depth
                 )
                 frontier_parts.append(fresh_ckpt)
@@ -1012,8 +874,8 @@ class FrontierCrawler:
                 if len(frontier_parts) > STATE_COMPACT_PARTS:
                     seen, frontier, self._bloom, frontier_count = (
                         self._checkpoint_state(
-                            _union_parts(seen_parts), _union_parts(frontier_parts),
-                            self._bloom, f"{depth}c",
+                            _union_parts(frontier_parts), self._bloom, f"{depth}c",
+                            seen_df=_union_parts(seen_parts),
                         )
                     )
                     seen_parts = [seen]
@@ -1079,10 +941,7 @@ class FrontierCrawler:
         broadcast, so page content never shuffles AT ALL during finalize;
         above it (or unknown) a hash join shuffles content once.
         """
-        result = all_pages[0]
-        for df in all_pages[1:]:
-            result = result.unionByName(df)
-        result = result.withColumn(
+        result = _union_parts(all_pages).withColumn(
             "__seed0",
             F.when(F.col("depth") == 0, F.col("seed_id")).otherwise(F.lit(0)),
         )
@@ -1100,7 +959,7 @@ class FrontierCrawler:
         # only the (url, rank) table shuffles. url is unique per page (seen
         # dedup), so the inner join is exactly row-preserving.
         slim = result.select("url", "depth", "__seed0", "score")
-        ranked = self._with_global_rank(slim, final_order, "rank").select("url", "rank")
+        ranked = ranking.global_rank(slim, final_order, "rank").select("url", "rank")
         if n_pages is not None and n_pages <= BROADCAST_RANK_MAX:
             ranked = F.broadcast(ranked)
         result = result.drop("__seed0").join(ranked, "url")

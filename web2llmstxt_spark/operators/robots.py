@@ -20,12 +20,18 @@ Semantics implemented (RFC 9309 + the de-facto Crawl-delay extension):
 - ``Crawl-delay``: seconds (int or decimal) from the selected group
 - ``Sitemap``: global, collected regardless of group
 
+Enforcement lives here too (`with_robots_decision`/`enforce_robots_join`):
+the per-host rules become one rule array per host, joined to candidates and
+decided by longest prefix in Column algebra — the frontier's only robots
+matcher. `oracle.robots_disallowed` is its pure-Python spec and
+`native.robots_disallowed_sql` its DuckDB oracle.
+
 Scale shape: robots bodies are fetched per HOST (10^6-10^7 rows at
 web scale, not 10^10) and parsed in ONE mapInPandas pass; the output rules
-table is exactly what `FrontierCrawler(robots_rules=...)` and
-`native.robots_disallowed_native` already consume, and Crawl-delays become
-per-host superstep caps (`crawl_delay_to_caps`) enforced by the existing
-host-cap window — parse once per robots fetch, enforce JVM-side forever.
+table is exactly what `FrontierCrawler(robots_rules=...)` consumes, and
+Crawl-delays become per-host superstep caps (`crawl_delay_to_caps`)
+enforced by the existing host-cap window — parse once per robots fetch,
+enforce JVM-side forever.
 """
 
 from __future__ import annotations
@@ -194,11 +200,10 @@ def crawl_delay_to_caps(policies: DataFrame, superstep_seconds: float) -> dict:
 
 # ------------------------------------------------- scale-safe enforcement
 #
-# The frontier's original enforcement shipped rules_by_host as a driver-side
-# dict inside UDF closures (with a compiled WHEN chain below 512 rules).
-# Fine at corpus scale; at a 10^10-URL frontier with 10^6+ hosts the dict
-# serializes into every task and the WHEN-chain gate stops applying. The
-# scalable carrier is a JOIN: keep policies as a DataFrame, pre-aggregate to
+# A Python rules dict captured in task closures (or a WHEN chain compiled
+# from it) serializes into every task and grows the plan per rule — fine at
+# corpus scale, not at a 10^10-URL frontier with 10^6+ hosts. The scalable
+# carrier is a JOIN: keep policies as a DataFrame, pre-aggregate to
 # ONE row per host holding its (tiny) rule array, broadcast-join candidates
 # on host, and decide longest-prefix/allow-on-tie with Column algebra over
 # the array — no Python boundary, no closure capture, no per-rule plan
@@ -238,8 +243,8 @@ RULES_ARRAY_SCHEMA = "host string, robots_rules array<struct<l:int,a:int,p:strin
 
 
 def rules_array_from_list(spark, rules_by_host: dict) -> DataFrame:
-    """The per-host array table built directly from the
-    {host: [(rule, prefix), ...]} dict the legacy closure paths consume —
+    """The per-host array table built directly from a
+    {host: [(rule, prefix), ...]} dict (the oracle's rules shape) —
     arrays assembled driver-side (the dict is already local), so this is a
     pure createDataFrame with NO aggregation job; element order within an
     array is irrelevant to the array_max decision."""
@@ -270,9 +275,8 @@ def with_robots_decision(
     candidates matching no prefix fall through as allowed, like the oracle.
 
     Host identity is lower(parse_url HOST), path coalesces '' -> '/' —
-    identical to native.robots_disallowed_native so the three
-    implementations (join / WHEN chain / pandas-UDF oracle) stay
-    interchangeable parity twins.
+    the semantics of oracle.robots_disallowed, which property tests hold
+    this matcher to over generated per-host rule sets.
     """
     host = F.lower(F.parse_url(F.col(url_col), F.lit("HOST")))
     p = F.parse_url(F.col(url_col), F.lit("PATH"))
@@ -305,7 +309,7 @@ def enforce_robots_join(
     broadcast: bool = True,
 ) -> DataFrame:
     """Drop disallowed candidate rows (`with_robots_decision` + filter) —
-    the frontier's S6 hot-path carrier since r5."""
+    the frontier's S6 robots filter."""
     return (
         with_robots_decision(
             cand, rules_df, url_col=url_col, broadcast=broadcast, out_col="__rdeny"

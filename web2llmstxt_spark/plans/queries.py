@@ -1979,8 +1979,8 @@ def q_robots_filter(spark, sf_dir):
     runs) — evaluated over the synth URL corpus against a fixed overlapping
     ruleset; returns every URL with its decision so the value hash covers
     allowed AND disallowed outcomes. Ref: north-rule robots extension;
-    oracle twin is the equivalent first-match CASE compiled for DuckDB (the
-    WHEN-chain twin of the same semantics)."""
+    the oracle is the equivalent first-match CASE compiled for DuckDB
+    (native.robots_disallowed_sql)."""
     from ..operators import robots as robots_mod
 
     docs = load(spark, sf_dir, "documents")
