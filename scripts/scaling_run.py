@@ -203,7 +203,8 @@ def main() -> None:
                 "pages": n_pages,
                 "urls_attempted": n_seen,
                 "urls_per_sec": round(n_seen / wall, 2),
-                "supersteps": [m["wall_ms"] for m in crawler.metrics],
+                "supersteps": [m["wall_ms"] for m in crawler.metrics
+                               if m["superstep"] >= 1],
                 "phase_walls": dict(crawler.phase_walls,
                                     cache_build_ms=int(cache_build_wall * 1000)),
                 "superstep_phases": [

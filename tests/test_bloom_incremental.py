@@ -25,23 +25,26 @@ def _run(spark, corpus, cfg, **kw):
     return engine, pages, seen
 
 
-def test_bloom_state_is_incremental(spark, tmp_path):
-    """Every advancing superstep must OR in exactly one delta (attempted
-    URLs), zero full-seen rebuilds — per-superstep Bloom cost O(|attempted|).
-    Durable mode (run_dir) advances state on EVERY superstep (resume needs
-    it), so the full-coverage probe below holds for all of seen; non-durable
-    crawls additionally skip the final superstep's dead delta
-    (test_bloom_skips_dead_final_delta)."""
-    corpus = generate_corpus(seed=19, n_hosts=2, pages_per_host=40)
-    cfg = CrawlConfig(max_pages=12)
-    engine, pages, seen = _run(
-        spark, corpus, cfg, use_bloom=True, run_dir=str(tmp_path / "bloomrun")
-    )
-    # durable mode also records a superstep-0 entry (seed fetch); the BSP
-    # loop's advancing supersteps are the entries with superstep >= 1
-    supersteps = sum(1 for m in engine.metrics if m["superstep"] >= 1)
-    assert supersteps >= 2, "need a multi-superstep crawl to prove incrementality"
-    assert engine.bloom_deltas == supersteps
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+def test_bloom_state_is_incremental(spark, tmp_path, durable):
+    """Every superstep after depth 0 ORs in exactly one delta (its attempted
+    URLs) and never rebuilds from the full seen table — per-superstep Bloom
+    cost O(|attempted|) — and a durable crawl (run_dir) advances the filter
+    exactly as an in-memory one does: deltas = supersteps - 1, the depth-0
+    entry being the fresh build. The crawl ends by running out of
+    candidates, so every superstep continued and the last advance covers
+    all of seen; a crawl that exits on budget or depth skips that dead
+    delta instead (test_superstep_metrics_match_oracle_depth_counts)."""
+    corpus = generate_corpus(seed=19, n_hosts=1, pages_per_host=15)
+    cfg = CrawlConfig(max_pages=100)
+    run_dir = str(tmp_path / "bloomrun") if durable else None
+    engine, pages, seen = _run(spark, corpus, cfg, use_bloom=True, run_dir=run_dir)
+    supersteps = len(engine.metrics)
+    last = engine.metrics[-1]
+    assert last["superstep"] < cfg.depth_limit and last["pages_total"] < cfg.effective_safety_limit, \
+        "the crawl must end by running out of candidates"
+    assert supersteps >= 3, "need a multi-superstep crawl to prove incrementality"
+    assert engine.bloom_deltas == supersteps - 1
     assert engine.bloom_rebuilds == 0
     # the accumulated state must cover all of seen (no false negatives):
     # probing the seen set itself must flag every row maybe_seen
@@ -49,18 +52,6 @@ def test_bloom_state_is_incremental(spark, tmp_path):
     probed = bloom.probe_state(seen_df, engine._bloom, engine.num_buckets)
     misses = [r.url for r in probed.filter(~F.col("maybe_seen")).collect()]
     assert not misses, f"false negatives: {misses[:5]}"
-
-
-def test_bloom_skips_dead_final_delta(spark):
-    """Non-durable crawls skip the final superstep's Bloom delta — the loop
-    exits and the state is never read. Deltas = supersteps - 1."""
-    corpus = generate_corpus(seed=19, n_hosts=2, pages_per_host=40)
-    cfg = CrawlConfig(max_pages=12)
-    engine, pages, seen = _run(spark, corpus, cfg, use_bloom=True)
-    supersteps = len(engine.metrics)
-    assert supersteps >= 2
-    assert engine.bloom_deltas == supersteps - 1
-    assert engine.bloom_rebuilds == 0
 
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])

@@ -47,18 +47,30 @@ def assert_parity(oracle_res, engine_pages, engine_seen):
             assert e[f] == o[f], f"rank {i} field {f}: engine={e[f]!r} oracle={o[f]!r}"
 
 
-@pytest.mark.parametrize("seed,n_hosts,ppl", [(7, 1, 25), (21, 2, 30)])
-def test_normal_mode_parity(spark, seed, n_hosts, ppl):
+# durable crawls (run_dir) go through the same gates: they are the in-memory
+# crawl plus a commit of the state it holds
+DURABLE = pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+
+
+@pytest.mark.parametrize("seed,n_hosts,ppl,durable", [
+    pytest.param(7, 1, 25, False, id="7-1-25"),
+    pytest.param(7, 1, 25, True, id="7-1-25-durable"),
+    pytest.param(21, 2, 30, False, id="21-2-30"),
+])
+def test_normal_mode_parity(spark, tmp_path, seed, n_hosts, ppl, durable):
     corpus = generate_corpus(seed=seed, n_hosts=n_hosts, pages_per_host=ppl)
     cfg = CrawlConfig(max_pages=10, comprehensive=False)
-    assert_parity(*run_both(spark, corpus, cfg))
+    run_dir = str(tmp_path) if durable else None
+    assert_parity(*run_both(spark, corpus, cfg, run_dir=run_dir))
 
 
-def test_comprehensive_mode_parity(spark):
+@DURABLE
+def test_comprehensive_mode_parity(spark, tmp_path, durable):
     # comprehensive: depth 5, threshold 0.0, no slice, mid-depth budget cut
     corpus = generate_corpus(seed=11, n_hosts=1, pages_per_host=35)
     cfg = CrawlConfig(max_pages=6, comprehensive=True)
-    assert_parity(*run_both(spark, corpus, cfg))
+    run_dir = str(tmp_path) if durable else None
+    assert_parity(*run_both(spark, corpus, cfg, run_dir=run_dir))
 
 
 def test_multi_seed_merged_frontier(spark):
@@ -67,11 +79,13 @@ def test_multi_seed_merged_frontier(spark):
     assert_parity(*run_both(spark, corpus, cfg))
 
 
-def test_robots_and_host_caps(spark):
+@DURABLE
+def test_robots_and_host_caps(spark, tmp_path, durable):
     corpus = generate_corpus(seed=17, n_hosts=2, pages_per_host=25)
     caps = {h: c for h, _r, c, _d in corpus.host_policies}
     cfg = CrawlConfig(max_pages=12, enforce_robots=True, host_caps=caps)
-    oracle_res, engine_pages, engine_seen = run_both(spark, corpus, cfg)
+    run_dir = str(tmp_path) if durable else None
+    oracle_res, engine_pages, engine_seen = run_both(spark, corpus, cfg, run_dir=run_dir)
     assert_parity(oracle_res, engine_pages, engine_seen)
     # robots actually bit: no crawled page under a disallowed prefix
     assert not any("/signup" in p["url"] or "/search" in p["url"] for p in engine_pages)
@@ -165,11 +179,19 @@ def test_superstep_metrics_match_oracle_depth_counts(spark, tmp_path):
         assert m["attempted"] >= m["pages_kept"]
     # oracle seen at depth 0 holds only SUCCESSFUL seed fetches (quirk Q5
     # applies from depth 1 on), so the attempted identity sums depths >= 1;
-    # the durable superstep-0 entry reports the deduped seed count instead
+    # the superstep-0 entry reports the deduped seed count instead
     n_depth0 = kept_by_depth.get(0, 0)
     assert sum(
         m["attempted"] for d, m in by_step.items() if d >= 1
     ) == len(oracle_res.seen) - n_depth0
+    # one metrics schema: every entry, superstep 0 included, has the keys
+    assert all(m.keys() == engine.metrics[0].keys() for m in engine.metrics)
+    # an exit superstep (budget or depth reached) does not advance the
+    # filter, durable or not: resume rebuilds it from seen
+    last = engine.metrics[-1]
+    exited = (last["pages_total"] >= cfg.effective_safety_limit
+              or last["superstep"] == cfg.depth_limit)
+    assert engine.bloom_deltas == len(engine.metrics) - 1 - exited
     # persisted metrics.json per superstep agrees with the in-memory list
     import json as _json
     import os as _os

@@ -4,7 +4,11 @@ the identical final pages (order included) and URL-seen set (north rule)."""
 import os
 import shutil
 
+import pytest
+from pyspark.sql import functions as F
+
 from web2llmstxt_spark import schemas
+from web2llmstxt_spark.operators import bloom
 from web2llmstxt_spark.oracle.crawl_oracle import CrawlConfig
 from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.sources.corpus import generate_corpus
@@ -59,6 +63,11 @@ def test_partial_snapshot_detected(spark, tmp_path):
     os.remove(os.path.join(run_dir, f"superstep={last}", "_COMMIT"))
     os.remove(os.path.join(run_dir, f"superstep={last}", "seen", "_SUCCESS"))
     assert checkpoint.last_complete_superstep(run_dir) == last - 1
+    # one commit rule: all three tables carrying _SUCCESS does not make a
+    # superstep complete — the crash hit before metrics.json and _COMMIT
+    open(os.path.join(run_dir, f"superstep={last}", "seen", "_SUCCESS"), "w").close()
+    os.remove(os.path.join(run_dir, f"superstep={last}", "metrics.json"))
+    assert checkpoint.last_complete_superstep(run_dir) == last - 1
 
 
 def test_crash_between_seen_and_frontier_rolls_back(spark, tmp_path):
@@ -92,6 +101,25 @@ def test_crash_between_seen_and_frontier_rolls_back(spark, tmp_path):
     assert got_seen == full_seen
 
 
+def test_incomplete_committed_table_raises(spark, tmp_path):
+    """A committed superstep whose table lacks _SUCCESS must fail the
+    resume loudly: skipping a pages part (or reading a half-written seen or
+    frontier) used to return a truncated crawl with no error."""
+    corpus = generate_corpus(seed=37, n_hosts=1, pages_per_host=30)
+    cfg = CrawlConfig(max_pages=8)
+    run_dir = str(tmp_path / "full")
+    _, _, site, seeds = run_full(spark, corpus, cfg, run_dir)
+    last = checkpoint.last_complete_superstep(run_dir)
+    assert last >= 1
+    # pages of an earlier superstep are read too; seen/frontier of the last
+    for table, n in (("pages", 1), ("seen", last), ("frontier", last)):
+        broken = str(tmp_path / f"no_{table}")
+        shutil.copytree(run_dir, broken)
+        os.remove(os.path.join(broken, f"superstep={n}", table, "_SUCCESS"))
+        with pytest.raises(ValueError, match="incomplete"):
+            checkpoint.resume_crawl(spark, site, cfg, broken, seeds)
+
+
 def test_snapshot_metrics_carry_partition_lineage(spark, tmp_path):
     """Every committed superstep's metrics.json records per-partition
     (host-hash bucket) frontier and page counts whose totals equal the
@@ -113,9 +141,13 @@ def test_snapshot_metrics_carry_partition_lineage(spark, tmp_path):
         pg = spark.read.parquet(os.path.join(base, "pages"))
         assert sum(m["frontier_by_bucket"].values()) == fr.count()
         assert sum(m["pages_by_bucket"].values()) == pg.count()
-        # bucket ids are valid state-partition ids (default num_buckets=32)
-        assert all(0 <= int(k) < 32 for k in m["frontier_by_bucket"])
-        assert all(0 <= int(k) < 32 for k in m["pages_by_bucket"])
+        # exact per bucket: the salted host-hash bucket of the Bloom/seen
+        # state (default num_buckets=32), empty buckets left out
+        for key, df in (("frontier_by_bucket", fr), ("pages_by_bucket", pg)):
+            by_bucket = df.groupBy(
+                bloom._bucket_col(F.col("url"), 32).alias("b")
+            ).count().collect()
+            assert m[key] == {str(r["b"]): r["count"] for r in by_bucket}, (n, key)
 
 
 def test_snapshots_read_back_with_their_known_schema(spark, tmp_path):

@@ -32,8 +32,9 @@ Scale design (10^10-URL frontier, north rule):
   corpus join (``TableFetcher``,
   candidate side broadcast — the site table scan is a simulation artifact,
   not the design point).
-- per-superstep state (frontier/seen/pages/metrics) is written to parquet
-  snapshots (Iceberg-shaped layout) => resumable runs + truncated lineage.
+- per-superstep state has ONE path: append-only seen/frontier parts
+  advanced by one checkpoint job (``_checkpoint_state``); a durable crawl
+  (run_dir) adds a parquet commit of that state (``_commit``) => resume.
 """
 
 from __future__ import annotations
@@ -85,6 +86,11 @@ _STATE_COLS = {
     "url": "string", "seed_id": "int", "base_url": "string",
     "base_domain": "string", "bucket": "int", "bitmap": "binary", "n_keys": "long",
 }
+
+
+def _lineage(counts) -> dict[str, int]:
+    """Per-bucket counts as metrics record them: non-empty buckets only."""
+    return {str(b): int(n) for b, n in enumerate(counts) if n}
 
 
 def _state_part(df: DataFrame, kind: str, cols: tuple[str, ...]) -> DataFrame:
@@ -358,61 +364,60 @@ class FrontierCrawler:
         )
         return df.repartition(self.num_buckets, "bucket")
 
-    def _snapshot(self, df: DataFrame, name: str, superstep: int) -> DataFrame:
-        """Superstep state handoff.
+    def _bucket(self):
+        """The salted bucket id of ``url`` that partitions the Bloom/seen
+        state (bloom._bucket_col): lineage keyed by it names a partition."""
+        return bloom._bucket_col(F.col("url"), self.num_buckets, self.salt_hosts)
 
-        run_dir set   -> parquet snapshot (the Iceberg-table pattern:
-                         resumable runs + truncated lineage; see
-                         state/checkpoint.py), read back with its known
-                         schema (schemas.SNAPSHOTS: no inference job).
-        run_dir unset -> eager localCheckpoint. Lineage MUST be truncated at
-                         superstep boundaries: state DataFrames (seen,
-                         frontier) are referenced several times by the next
-                         superstep's DAG, and lazy chains re-run every prior
-                         superstep's shuffles (measured: superstep wall grew
-                         9s -> 14s -> 46s -> 98s lazily vs flat ~3s eager).
-        """
-        if self.run_dir is None:
-            return df.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
-        schema = schemas.SNAPSHOTS[name]
-        if [(f.name, f.dataType) for f in df.schema] != [
-            (f.name, f.dataType) for f in schema
-        ]:
-            # reading back with a stale schema would drop or null columns
-            raise ValueError(
-                f"{name} snapshot is {df.schema.simpleString()}, "
-                f"schemas.SNAPSHOTS says {schema.simpleString()}"
+    def _bucket_counts(self, where):
+        """Per-bucket counts of the rows where ``where`` holds (over a
+        ``bucket`` column) as ONE array aggregate: per-partition lineage that
+        rides an action or Observation the step already runs, never a job."""
+        b = F.col("bucket")
+        return F.array(*[
+            F.count(F.when(where & (b == i), True)) for i in range(self.num_buckets)
+        ])
+
+    def _commit(self, superstep: int, pages: DataFrame, seen: DataFrame,
+                frontier: DataFrame, entry: dict, fresh: DataFrame | None = None) -> None:
+        """Durable commit of superstep N: write the tables the step already
+        holds (schemas.SNAPSHOTS), then ``entry`` as metrics.json, then LAST
+        ``_COMMIT`` — a crash anywhere before it rolls resume back to N-1.
+        Runs under the step's state job description; its wall is added to
+        the entry's state_ms and wall_ms. ``fresh``: an exiting step's
+        frontier delta, never materialized (dead state) — written with
+        ``frontier``, its lineage observed on that write."""
+        t = time.time()
+        obs = None
+        if fresh is not None:
+            obs = Observation(f"commit_{self.run_id}_{superstep}")
+            frontier = frontier.unionByName(
+                fresh.withColumn("bucket", self._bucket())
+                .observe(obs, self._bucket_counts(F.lit(True)).alias("by_bucket"))
+                .drop("bucket")
             )
-        path = os.path.join(self.run_dir, f"superstep={superstep}", name)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.schema(schema).parquet(path)
-
-    def _bucket_lineage(self, df: DataFrame) -> dict[str, int]:
-        """Per-partition (host-hash bucket) row counts for the durable
-        snapshot's metrics.json (north rule: per-partition lineage +
-        metrics). Keyed by the SAME salted bucket id that partitions the
-        Bloom/seen state (bloom._bucket_col), so an operator reading the
-        metrics can attribute frontier growth or skew to a concrete state
-        partition. Bounded at num_buckets keys and column-pruned to `url`
-        against the just-written parquet — run only in run_dir mode, where
-        the snapshot write already dominates the superstep wall."""
-        rows = (
-            df.groupBy(
-                bloom._bucket_col(F.col("url"), self.num_buckets, self.salt_hosts)
-                .alias("bucket")
-            )
-            .count()
-            .collect()
-        )
-        return {str(r["bucket"]): r["count"] for r in rows}
-
-    def _commit_superstep(self, superstep: int) -> None:
-        """Write the per-superstep commit marker LAST — a snapshot is only
-        resumable once pages+seen+frontier (and metrics) are all on disk. A
-        driver crash between the seen and frontier writes must NOT leave a
-        superstep that load_state would treat as complete (round-1 advice:
-        that silently truncated resumed crawls)."""
-        with open(os.path.join(self.run_dir, f"superstep={superstep}", "_COMMIT"), "w") as f:
+        base = os.path.join(self.run_dir, f"superstep={superstep}")
+        for name, df in (("pages", pages), ("seen", seen), ("frontier", frontier)):
+            schema = schemas.SNAPSHOTS[name]
+            if [(f.name, f.dataType) for f in df.schema] != [
+                (f.name, f.dataType) for f in schema
+            ]:
+                # read back with a stale schema it would lose columns
+                raise ValueError(
+                    f"{name} snapshot is {df.schema.simpleString()}, "
+                    f"schemas.SNAPSHOTS says {schema.simpleString()}"
+                )
+            df.write.mode("overwrite").parquet(os.path.join(base, name))
+        if obs is not None:
+            held = entry["frontier_by_bucket"]
+            entry["frontier_by_bucket"] = _lineage(
+                held.get(str(b), 0) + n for b, n in enumerate(obs.get["by_bucket"]))
+        ms = int((time.time() - t) * 1000)
+        entry["state_ms"] += ms
+        entry["wall_ms"] += ms
+        with open(os.path.join(base, "metrics.json"), "w") as f:
+            json.dump(entry, f)
+        with open(os.path.join(base, "_COMMIT"), "w") as f:
             f.write("ok")
 
     # ------------------------------------------------------- superstep state
@@ -491,19 +496,24 @@ class FrontierCrawler:
                           tag, seen_df: DataFrame | None = None) -> tuple:
         """ONE combined checkpoint job for the superstep state (frontier,
         optional seen and Bloom bitmaps share a 'kind' discriminator), with
-        an Observation riding the same job to return the frontier row count
-        and the max per-bucket Bloom key count — no extra count() actions.
+        an Observation riding the same job to return the frontier rows per
+        state bucket (their sum is the row count) and the max per-bucket
+        Bloom key count — no extra count() or groupBy actions.
 
         ``seen_df`` None is the incremental advance: ``frontier_df`` is only
         this superstep's frontier delta (already anti-joined disjoint from
         the live frontier) and the seen delta needs NO job at all — it is
         exactly the attempt set, which the superstep's stats action already
-        materialized into the cache.
+        materialized into the cache. With ``seen_df`` (depth 0, compaction)
+        the whole state is checkpointed, durable crawl or not.
 
-        Returns (seen or None, frontier, bloom_state, frontier_count).
+        Returns (seen or None, frontier, bloom_state, frontier_by_bucket).
         """
         link_cols = ("url", "seed_id", "base_url", "base_domain")
-        parts = _state_part(frontier_df, "frontier", link_cols)
+        parts = _state_part(
+            frontier_df.withColumn("bucket", self._bucket()), "frontier",
+            link_cols + ("bucket",),
+        )
         if seen_df is not None:
             parts = _state_part(seen_df, "seen", ("url",)).unionByName(parts)
         if bloom_df is not None:
@@ -513,7 +523,7 @@ class FrontierCrawler:
         obs = Observation(f"state_{self.run_id}_{tag}")
         parts = parts.observe(
             obs,
-            F.sum(F.when(F.col("kind") == "frontier", 1).otherwise(0)).alias("frontier_n"),
+            self._bucket_counts(F.col("kind") == "frontier").alias("frontier_by_bucket"),
             F.max(F.when(F.col("kind") == "bloom", F.col("n_keys"))).alias("bloom_max_keys"),
         )
         state = parts.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
@@ -530,8 +540,33 @@ class FrontierCrawler:
             mk = m.get("bloom_max_keys")
             if mk is not None and self._filter_mod.needs_rebuild(int(mk), self.bloom_m_bits):
                 self._bloom_rebuild_pending = True
-        frontier_count = int(m["frontier_n"]) if m.get("frontier_n") is not None else 0
-        return seen, frontier, bloom_state, frontier_count
+        return seen, frontier, bloom_state, [int(n) for n in m["frontier_by_bucket"]]
+
+    def _record(self, superstep: int, attempted: int, kept: int, total: int,
+                pages_by_bucket, frontier_by_bucket, attempt_ms: int,
+                t_state: float, t_step: float) -> dict:
+        """Append superstep N's metrics entry — the same keys for depth 0
+        and every superstep, durable or not — and return it."""
+        now = time.time()
+        entry = {
+            "run_id": self.run_id,
+            "superstep": superstep,
+            "attempted": attempted,
+            "pages_kept": kept,
+            "pages_total": total,
+            # attempt_ms = the prefilter+score+fetch job (depth 0: the seed
+            # fetch), state_ms = the state checkpoint (+ a durable commit)
+            "attempt_ms": attempt_ms,
+            "state_ms": int((now - t_state) * 1000),
+            "wall_ms": int((now - t_step) * 1000),
+            "bloom_deltas": self.bloom_deltas,
+            "bloom_rebuilds": self.bloom_rebuilds,
+            "bloom_m_bits": self.bloom_m_bits,
+            "frontier_by_bucket": _lineage(frontier_by_bucket),
+            "pages_by_bucket": _lineage(pages_by_bucket),
+        }
+        self.metrics.append(entry)
+        return entry
 
     def _jobdesc(self, tag: str) -> None:
         """Crawl-phase tag for event-log / Spark-UI attribution: every job
@@ -544,8 +579,9 @@ class FrontierCrawler:
     def crawl(self, seeds: list[tuple[int, str]], _resume=None):
         """Run the full BFS; returns (pages_df ordered by rank, seen_df).
 
-        ``_resume=(last_superstep, pages, seen, frontier)`` continues from a
-        state/checkpoint.py snapshot instead of fetching the seeds again.
+        ``_resume=(last_superstep, pages, seen, frontier, metrics.json)``
+        continues from a committed state/checkpoint.py snapshot instead of
+        fetching the seeds again.
         """
         spark = self.spark
         cfg = self.cfg
@@ -571,7 +607,7 @@ class FrontierCrawler:
             .drop("__sr")
         )
         # deduped seed count, driver-side (same normalize kernel as the UDF):
-        # feeds the durable superstep-0 metrics' `attempted` without a job
+        # the superstep-0 metrics' `attempted` without a job
         seed_urls = sorted({kernels.normalize_url(u) for _, u in seeds})
         n_seeds = len(seed_urls)
 
@@ -611,68 +647,53 @@ class FrontierCrawler:
         ]
         LINK_COL_NAMES = ["url", "out_links", "seed_id", "base_url", "base_domain"]
         start_depth = 1
-        # Known frontier size from the last state checkpoint's Observation:
-        # lets the budget cut be SKIPPED without a count job whenever
-        # |frontier| <= remaining (cand ⊆ frontier). None = unknown (durable
-        # snapshot modes) -> fall back to the explicit count.
-        frontier_count: int | None = None
+        # Known frontier size (the last state checkpoint's Observation, or a
+        # resumed superstep's metrics.json): lets the budget cut be SKIPPED
+        # without a count job whenever |frontier| <= remaining (cand ⊆
+        # frontier), and bounds the attempt set for the fetch's URL hint.
         if _resume is not None:
-            last, pages, seen, frontier = _resume
-            pages_count = pages.count()
+            last, pages, seen, frontier, committed = _resume
+            pages_count = committed["pages_total"]
+            held = committed["frontier_by_bucket"]
+            frontier_buckets = [held.get(str(b), 0) for b in range(self.num_buckets)]
+            if sum(frontier_buckets) != sum(held.values()):  # a wrong size would mis-cut
+                raise ValueError("resume needs the num_buckets the run committed with")
             all_pages = [pages]
-            if frontier is None or last >= cfg.depth_limit:
+            if last >= cfg.depth_limit or pages_count >= budget:
+                # the committed superstep was the last one: nothing to run
                 return self._finalize(all_pages, pages_count), seen
             start_depth = last + 1
             if self.use_bloom:  # resume: rebuild filter state from seen ONCE
-                self._bloom = self._filter_state(seen).localCheckpoint(eager=True)
-        elif self.run_dir is not None:
-            main0 = main0.persist(CACHE_LEVEL)
-            pages = self._snapshot(main0.select(*PAGES_COL_NAMES), "pages", 0)
-            pages_count = pages.count()
-            seen = self._snapshot(pages.select("url"), "seen", 0)
-            frontier = self._snapshot(
-                self._new_links(main0.select(*LINK_COL_NAMES), from_depth=0),
-                "frontier", 0,
-            )
-            self.metrics.append(
-                {
-                    "run_id": self.run_id,
-                    "superstep": 0,
-                    "attempted": n_seeds,
-                    "pages_kept": pages_count,
-                    "pages_total": pages_count,
-                    "bloom_deltas": self.bloom_deltas,
-                    "bloom_rebuilds": self.bloom_rebuilds,
-                    "bloom_m_bits": self.bloom_m_bits,
-                    "frontier_by_bucket": self._bucket_lineage(frontier),
-                    "pages_by_bucket": self._bucket_lineage(pages),
-                }
-            )
-            with open(os.path.join(self.run_dir, "superstep=0", "metrics.json"), "w") as f:
-                json.dump(self.metrics[-1], f)
-            self._commit_superstep(0)
-            all_pages = [pages]
-            if self.use_bloom:
+                self._jobdesc("d0-state")
                 self._bloom = self._filter_state(seen).localCheckpoint(eager=True)
         else:
             main0 = main0.persist(CACHE_LEVEL)
             pages = main0.select(*PAGES_COL_NAMES)
             self._jobdesc("d0-fetch")
-            pages_count = main0.count()
-            self.phase_walls["d0_fetch_ms"] = int((time.time() - t_crawl) * 1000)
+            pages_by_bucket = main0.select(self._bucket().alias("bucket")).agg(
+                self._bucket_counts(F.lit(True))).first()[0]
+            pages_count = sum(pages_by_bucket)
+            d0_fetch_ms = int((time.time() - t_crawl) * 1000)
             bloom0 = self._filter_state(pages.select("url")) if self.use_bloom else None
             self._jobdesc("d0-state")
             t_d0s = time.time()
-            seen, frontier, self._bloom, frontier_count = self._checkpoint_state(
+            seen, frontier, self._bloom, frontier_buckets = self._checkpoint_state(
                 self._new_links(main0.select(*LINK_COL_NAMES), from_depth=0),
                 bloom0, 0, seen_df=pages.select("url"),
             )
-            self.phase_walls["d0_state_ms"] = int((time.time() - t_d0s) * 1000)
+            entry = self._record(
+                0, n_seeds, pages_count, pages_count, pages_by_bucket,
+                frontier_buckets, d0_fetch_ms, t_d0s, t_crawl,
+            )
+            if self.run_dir is not None:
+                self._commit(0, pages, seen, frontier, entry)
+            self.phase_walls["d0_fetch_ms"] = d0_fetch_ms
+            self.phase_walls["d0_state_ms"] = entry["state_ms"]
             all_pages = [pages]
 
         self.phase_walls["depth0_ms"] = int((time.time() - t_crawl) * 1000)
-        # append-only state parts for the in-memory incremental advance
-        # (durable runs keep full per-superstep snapshots for resume instead)
+        # append-only state parts: seen grows by each superstep's attempt
+        # set, frontier by each checkpointed fresh-link delta
         seen_parts: list[DataFrame] = [seen]
         frontier_parts: list[DataFrame] = [frontier]
         t_loop = time.time()
@@ -683,6 +704,7 @@ class FrontierCrawler:
             self._jobdesc(f"ss{depth}-attempt")
             t0 = time.time()
             remaining = budget - pages_count
+            frontier_count = sum(frontier_buckets)
 
             if self.use_bloom:
                 # Bloom fast path + exact check on maybes == exact anti-join;
@@ -760,7 +782,7 @@ class FrontierCrawler:
                 # common path).
                 todo_bound: int | None = None   # proven |todo| upper bound
                 todo_materialized = False
-                if frontier_count is not None and frontier_count <= remaining:
+                if frontier_count <= remaining:
                     todo = cand
                     todo_bound = frontier_count   # cand ⊆ frontier
                 else:
@@ -777,23 +799,24 @@ class FrontierCrawler:
             attempted = attempted.persist(CACHE_LEVEL)
             # the ONE action of this superstep: materializes the whole chain
             # (anti-join/bloom, scoring, sort, budget cut, fetch) into the
-            # cache and returns both loop-control counters at once
-            appended_flag = (F.col("success") & (F.col("wc") >= 50)).cast("long")
+            # cache and returns the loop-control counters and the new pages'
+            # per-bucket lineage at once
+            kept = F.col("success") & (F.col("wc") >= 50)
             t_attempt = time.time()
-            stats = attempted.agg(
-                F.count("*").alias("att"), F.coalesce(F.sum(appended_flag), F.lit(0)).alias("added")
-            ).first()
+            attempted_count, pages_by_bucket = attempted.select(
+                self._bucket().alias("bucket"), kept.alias("kept")
+            ).agg(F.count("*"), self._bucket_counts(F.col("kept"))).first()
             attempt_ms = int((time.time() - t_attempt) * 1000)
             if fetched_cache is not None:
                 # attempted is materialized; the pre-cut fetch cache is dead
                 fetched_cache.unpersist()
-            attempted_count, added = stats["att"], stats["added"]
+            added = sum(pages_by_bucket)
             if attempted_count == 0:                       # :216/:221
                 attempted.unpersist()
                 break
 
             new_pages = (
-                attempted.filter(F.col("success") & (F.col("wc") >= 50))  # :237
+                attempted.filter(kept)  # :237
                 .withColumn("title2", udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")))
                 .withColumn("depth", F.lit(depth))
                 .withColumn("discovery_phase", F.lit(f"depth_{depth}"))
@@ -809,7 +832,6 @@ class FrontierCrawler:
             # re-shuffled the FULL seen set every superstep — O(|seen|)
             # per-superstep shuffle for an invariant that already holds.
             seen_next = seen.unionByName(attempted.select("url"))
-            frontier_next = frontier
             fresh = None
             if depth < cfg.depth_limit:                   # Q7: last depth no expand
                 links = self._new_links(
@@ -821,69 +843,56 @@ class FrontierCrawler:
                 )
                 # Q6: union AFTER the depth; first-discovery ctx wins
                 fresh = links.join(frontier, "url", "left_anti")
-                frontier_next = frontier.unionByName(fresh)
 
             # The loop exits after this superstep when the depth limit or the
             # page budget is reached — then frontier/Bloom state is dead
-            # weight: the frontier rewrite (O(|frontier|)) and the Bloom
-            # delta build (4 probe positions/URL) would never be read. The
-            # last superstep is typically the LARGEST (budget exhaustion), so
+            # weight: the frontier delta checkpoint and the Bloom delta build
+            # (4 probe positions/URL) would never be read. The last
+            # superstep is typically the LARGEST (budget exhaustion), so
             # skipping its state advance removes the single biggest
-            # checkpoint. Durable runs (run_dir) still write everything —
-            # resume needs the full state history.
+            # checkpoint. A resume from it runs no superstep either.
             will_continue = depth < cfg.depth_limit and pages_count < budget
             self._jobdesc(f"ss{depth}-state")
             t_state = time.time()
-            bloom_next = (
-                self._advance_bloom(attempted.select("url"), seen_next)
-                if self.use_bloom and (will_continue or self.run_dir is not None)
-                else None
-            )
-            if self.run_dir is not None:
-                # resumable layout: one parquet per state table
-                new_pages = self._snapshot(new_pages, "pages", depth)
-                seen = self._snapshot(seen_next, "seen", depth)
-                frontier = self._snapshot(frontier_next, "frontier", depth)
-                if bloom_next is not None:
-                    self._bloom = bloom_next.localCheckpoint(eager=True)
-            elif will_continue:
+            new_pages = new_pages.persist(CACHE_LEVEL)
+            if will_continue:
                 # INCREMENTAL state advance, O(|delta|) per superstep: both
                 # state tables are append-only (seen grows by exactly this
                 # superstep's attempt set, which is ALREADY cached; frontier
                 # by `fresh`, already anti-joined disjoint), so only the
                 # frontier delta + Bloom bitmaps are checkpointed — ONE
-                # combined job with an Observation returning |fresh| for
-                # free — and the live tables become lazy unions of cached
-                # parts. The previous design re-checkpointed the FULL
-                # seen+frontier every superstep: O(|state|) memory-bus
-                # read+write per superstep, the `ss-state` term the round-4
-                # scaling decomposition measured at eff 0.78 (BENCH_
-                # SCALING.md). Reads over the union cost the same as over
-                # one table (each part is individually materialized; the
-                # columnar cache still prunes to `url`); writes drop from
-                # cumulative-state size to delta size. Compacted back into
-                # one checkpoint every STATE_COMPACT_PARTS supersteps so
-                # plan width stays bounded on deep/auto-batched crawls.
+                # combined job with an Observation returning |fresh| per
+                # bucket for free — and the live tables become lazy unions
+                # of cached parts. Re-checkpointing the FULL seen+frontier
+                # every superstep cost O(|state|) memory-bus read+write per
+                # superstep, the `ss-state` term the round-4 scaling
+                # decomposition measured at eff 0.78 (BENCH_SCALING.md).
+                # Reads over the union cost the same as over one table
+                # (each part is individually materialized; the columnar
+                # cache still prunes to `url`). Compacted back into one
+                # checkpoint every STATE_COMPACT_PARTS supersteps so plan
+                # width stays bounded on deep/auto-batched crawls.
+                bloom_next = (
+                    self._advance_bloom(attempted.select("url"), seen_next)
+                    if self.use_bloom else None
+                )
                 seen_parts.append(attempted.select("url"))
-                _, fresh_ckpt, self._bloom, fresh_n = self._checkpoint_state(
+                _, fresh_ckpt, self._bloom, fresh_buckets = self._checkpoint_state(
                     fresh, bloom_next, depth
                 )
                 frontier_parts.append(fresh_ckpt)
-                if frontier_count is not None:
-                    frontier_count += fresh_n
+                frontier_buckets = [a + b for a, b in zip(frontier_buckets, fresh_buckets)]
+                fresh = None  # now part of the frontier
                 if len(frontier_parts) > STATE_COMPACT_PARTS:
-                    seen, frontier, self._bloom, frontier_count = (
-                        self._checkpoint_state(
-                            _union_parts(frontier_parts), self._bloom, f"{depth}c",
-                            seen_df=_union_parts(seen_parts),
-                        )
+                    seen, frontier, self._bloom, _ = self._checkpoint_state(
+                        _union_parts(frontier_parts), self._bloom, f"{depth}c",
+                        seen_df=_union_parts(seen_parts),
                     )
                     seen_parts = [seen]
                     frontier_parts = [frontier]
                 else:
                     seen = _union_parts(seen_parts)
                     frontier = _union_parts(frontier_parts)
-                new_pages = new_pages.persist(CACHE_LEVEL)
             else:
                 # exiting: seen stays lazy on (checkpointed seen ∪ cached
                 # attempted) — shallow lineage, no full-state job. self._bloom
@@ -893,36 +902,15 @@ class FrontierCrawler:
                 # the stale handle instead of silently reading old state
                 seen = seen_next
                 self._bloom = None
-                new_pages = new_pages.persist(CACHE_LEVEL)
-            state_ms = int((time.time() - t_state) * 1000)
             all_pages.append(new_pages)
             # NB: attempted stays persisted — lazy pages reference it
-            self.metrics.append(
-                {
-                    "run_id": self.run_id,
-                    "superstep": depth,
-                    "attempted": attempted_count,
-                    "pages_kept": added,
-                    "pages_total": pages_count,
-                    # phase split: attempt_ms = the prefilter+score+fetch job,
-                    # state_ms = the combined state checkpoint / snapshots
-                    "attempt_ms": attempt_ms,
-                    "state_ms": state_ms,
-                    "wall_ms": int((time.time() - t0) * 1000),
-                    "bloom_deltas": self.bloom_deltas,
-                    "bloom_rebuilds": self.bloom_rebuilds,
-                    "bloom_m_bits": self.bloom_m_bits,
-                }
+            entry = self._record(
+                depth, attempted_count, added, pages_count, pages_by_bucket,
+                frontier_buckets, attempt_ms, t_state, t0,
             )
             if self.run_dir is not None:
-                # per-partition lineage rides the durable snapshot only: the
-                # two bounded aggs read back the parquet just written (url
-                # column pruned), invisible next to the snapshot write itself
-                self.metrics[-1]["frontier_by_bucket"] = self._bucket_lineage(frontier)
-                self.metrics[-1]["pages_by_bucket"] = self._bucket_lineage(new_pages)
-                with open(os.path.join(self.run_dir, f"superstep={depth}", "metrics.json"), "w") as f:
-                    json.dump(self.metrics[-1], f)
-                self._commit_superstep(depth)
+                # the exit superstep's frontier is frontier ∪ fresh, lazy
+                self._commit(depth, new_pages, seen, frontier, entry, fresh)
 
         self.phase_walls["loop_ms"] = int((time.time() - t_loop) * 1000)
         self._jobdesc("finalize")

@@ -122,8 +122,8 @@ SEEN = StructType(
 )
 
 #: Durable superstep snapshot tables (run_dir/superstep=N/<name>/, written
-#: by FrontierCrawler._snapshot). Read back with these schemas — by the
-#: crawler and by state.checkpoint.load_state — so no read runs a
+#: by FrontierCrawler._commit, which checks each table against them). Read
+#: back with these schemas by state.checkpoint.load_state, so no read runs a
 #: schema-inference job. Nullable, as every parquet read is.
 SNAPSHOTS = {
     "pages": StructType(

@@ -1,25 +1,30 @@
 """Resumable crawl state (north rule: checkpointed frontier/seen, resume).
 
-Layout written by FrontierCrawler(run_dir=...):
+Layout committed by FrontierCrawler(run_dir=...):
 
     run_dir/
-      superstep=0/ pages/ seen/ frontier/ metrics.json
-      superstep=1/ pages/ seen/ frontier/ metrics.json
+      superstep=0/ pages/ seen/ frontier/ metrics.json _COMMIT
+      superstep=1/ pages/ seen/ frontier/ metrics.json _COMMIT
       ...
 
-Each metrics.json carries the superstep's counters plus per-partition
-lineage: ``frontier_by_bucket`` / ``pages_by_bucket`` row counts keyed by
-the salted host-hash bucket id that partitions the Bloom/seen state.
+A durable crawl is the in-memory crawl plus a commit: after superstep N
+advances its state, ``FrontierCrawler._commit`` writes the tables it holds
+(N's pages, the full seen set and frontier), then metrics.json, then
+``_COMMIT``. A superstep is complete once its ``_COMMIT`` exists, and only
+then. metrics.json carries the counters plus per-partition lineage:
+``frontier_by_bucket`` / ``pages_by_bucket`` row counts keyed by the salted
+host-hash bucket that partitions the Bloom/seen state, taken from the state
+checkpoint's Observation and the attempt set's stats action. A resume reads
+its page total and frontier size from them instead of counting.
 
-Each ``superstep=N`` directory is a consistent snapshot AFTER superstep N
-(parquet `_SUCCESS` markers make partial writes detectable). This is the
-Iceberg-snapshot pattern with plain parquet so the sandbox needs no extra
-jars; swap ``_read``/``_write`` for Iceberg `snapshot-id` travel on a real
-cluster.
+This is the Iceberg-snapshot pattern with plain parquet so the sandbox needs
+no extra jars; swap ``_read`` and the commit's writes for Iceberg
+`snapshot-id` travel on a real cluster.
 
-``resume_crawl`` restores the latest complete snapshot and continues the BFS
-from the next depth — killing the driver mid-crawl and resuming yields the
-identical final result (tests/test_resume.py).
+``resume_crawl`` restores the latest committed snapshot and continues the
+BFS from the next depth — killing the driver mid-crawl and resuming yields
+the identical final result (tests/test_resume.py); an incomplete table in a
+committed snapshot raises instead of resuming from partial state.
 """
 
 from __future__ import annotations
@@ -34,54 +39,44 @@ from ..oracle.crawl_oracle import CrawlConfig
 from ..operators.frontier import FrontierCrawler
 
 
-def _complete(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
 def last_complete_superstep(run_dir: str) -> int | None:
-    """Highest N whose snapshot committed.
+    """Highest N whose snapshot committed: its ``_COMMIT`` marker exists.
 
-    A superstep counts as complete ONLY once its ``_COMMIT`` marker exists —
-    written strictly after pages, seen, frontier and metrics (see
-    FrontierCrawler._commit_superstep). A crash between the seen and frontier
-    writes therefore rolls back to the previous superstep instead of
-    resuming from a half-snapshot (which silently truncated the crawl).
-    Legacy fallback (pre-marker run dirs): all three state tables _SUCCESS.
+    The marker is written strictly after pages, seen, frontier and
+    metrics.json (FrontierCrawler._commit), so a crash anywhere in a commit
+    rolls back to the previous superstep instead of resuming from a
+    half-snapshot (which silently truncated the crawl).
     """
-    best = None
     if not os.path.isdir(run_dir):
         return None
-    for name in os.listdir(run_dir):
-        if not name.startswith("superstep="):
-            continue
-        n = int(name.split("=")[1])
-        base = os.path.join(run_dir, name)
-        committed = os.path.exists(os.path.join(base, "_COMMIT")) or all(
-            _complete(os.path.join(base, t)) for t in ["pages", "seen", "frontier"]
-        )
-        if committed and (best is None or n > best):
-            best = n
-    return best
+    committed = [
+        int(name.split("=")[1])
+        for name in os.listdir(run_dir)
+        if name.startswith("superstep=")
+        and os.path.exists(os.path.join(run_dir, name, "_COMMIT"))
+    ]
+    return max(committed, default=None)
 
 
 def _read(spark: SparkSession, path: str, name: str):
-    """One snapshot table, read with its known schema (no inference job)."""
+    """One committed snapshot table, read with its known schema (no
+    inference job). Raises if the table's parquet write did not complete."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        raise ValueError(f"committed snapshot table {path} is incomplete (no _SUCCESS)")
     return spark.read.schema(schemas.SNAPSHOTS[name]).parquet(path)
 
 
 def load_state(spark: SparkSession, run_dir: str, superstep: int):
+    """(pages of supersteps 0..N, seen and frontier after N) of a committed
+    superstep N."""
     base = os.path.join(run_dir, f"superstep={superstep}")
-    pages_parts = []
-    for n in range(superstep + 1):
-        p = os.path.join(run_dir, f"superstep={n}", "pages")
-        if _complete(p):
-            pages_parts.append(_read(spark, p, "pages"))
-    pages = pages_parts[0]
-    for df in pages_parts[1:]:
-        pages = pages.unionByName(df)
+    pages = _read(spark, os.path.join(run_dir, "superstep=0", "pages"), "pages")
+    for n in range(1, superstep + 1):
+        pages = pages.unionByName(
+            _read(spark, os.path.join(run_dir, f"superstep={n}", "pages"), "pages")
+        )
     seen = _read(spark, os.path.join(base, "seen"), "seen")
-    fr_path = os.path.join(base, "frontier")
-    frontier = _read(spark, fr_path, "frontier") if _complete(fr_path) else None
+    frontier = _read(spark, os.path.join(base, "frontier"), "frontier")
     return pages, seen, frontier
 
 
@@ -99,4 +94,6 @@ def resume_crawl(
     if last is None:
         return crawler.crawl(seeds)
     pages, seen, frontier = load_state(spark, run_dir, last)
-    return crawler.crawl(seeds, _resume=(last, pages, seen, frontier))
+    with open(os.path.join(run_dir, f"superstep={last}", "metrics.json")) as f:
+        committed = json.load(f)
+    return crawler.crawl(seeds, _resume=(last, pages, seen, frontier, committed))
