@@ -4,16 +4,34 @@ The reference's only end-to-end golden is
 /root/reference/output/example.com-llms.txt, produced through the baked-in
 mock crawl path (llmsgen/crawler/web_crawler.py:171-179 (pyc)) with the
 deterministic description fallback. We reproduce the exact bytes.
+
+The two byte-equality tests (test_golden_llms_txt_bytes,
+test_mock_page_through_spark_distill) read that file themselves and need the
+reference checkout; they are skipped where the file is absent. The pipeline
+test (test_full_pipeline_end_to_end) and the render_desc twin test
+(test_render_desc_twin_on_adversarial_content) do not read it and always run.
 """
 
 import json
 import os
 
+import pytest
+
 from web2llmstxt_spark import schemas
 from web2llmstxt_spark.plans import distill, pipeline
 from web2llmstxt_spark.sinks import writers
 
-GOLDEN = open("/root/reference/output/example.com-llms.txt", encoding="utf-8").read()
+GOLDEN_PATH = "/root/reference/output/example.com-llms.txt"
+
+needs_golden = pytest.mark.skipif(
+    not os.path.exists(GOLDEN_PATH),
+    reason=f"reference golden {GOLDEN_PATH} is not present",
+)
+
+
+def read_golden():
+    with open(GOLDEN_PATH, encoding="utf-8") as f:
+        return f.read()
 
 # the mock page baked into the v2 pyc (llmsgen/crawler/web_crawler.py:171-179)
 MOCK_BASE = "https://example.com/test_mock_crawl"
@@ -28,6 +46,7 @@ MOCK_PAGE = {
 }
 
 
+@needs_golden
 def test_golden_llms_txt_bytes():
     entries = [
         {
@@ -40,9 +59,10 @@ def test_golden_llms_txt_bytes():
     ]
     metadata = {"total_pages_crawled": 1, "generated_at": "2025-06-26T12:00:00"}
     rendered = writers.render_llms_txt(MOCK_BASE, entries, [MOCK_PAGE], metadata)
-    assert rendered == GOLDEN
+    assert rendered == read_golden()
 
 
+@needs_golden
 def test_mock_page_through_spark_distill(spark):
     """The same golden, but with description+category computed by the engine
     (pandas UDFs) instead of hand-written."""
@@ -59,7 +79,7 @@ def test_mock_page_through_spark_distill(spark):
     entries = [r.asDict() for r in entries_df.collect()]
     metadata = {"total_pages_crawled": 1, "generated_at": "2025-06-26T12:00:00"}
     rendered = writers.render_llms_txt(MOCK_BASE, entries, [MOCK_PAGE], metadata)
-    assert rendered == GOLDEN
+    assert rendered == read_golden()
 
 
 def test_full_pipeline_end_to_end(spark, tmp_path):

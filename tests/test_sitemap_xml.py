@@ -173,9 +173,11 @@ def test_cli_crawl_all_strategies(tmp_path):
     """python -m web2llmstxt_spark.cli crawl works for every strategy
     (the reference's run.py surface)."""
     import json
+    import os
     import subprocess
     import sys
 
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     for strategy in ("systematic", "bestfirst", "sitemap"):
         out = subprocess.run(
             [sys.executable, "-m", "web2llmstxt_spark.cli", "crawl",
@@ -183,7 +185,7 @@ def test_cli_crawl_all_strategies(tmp_path):
              "--strategy", strategy, "--cores", "4",
              "--out", str(tmp_path / strategy)],
             capture_output=True, text=True, timeout=900,
-            cwd="/root/repo",
+            cwd=repo_root,
         )
         assert out.returncode == 0, (strategy, out.stderr[-2000:])
         res = json.loads(out.stdout.strip().splitlines()[-1])
