@@ -6,6 +6,9 @@ field-by-field (url, title, content, word_count, score, depth, phase) in
 exact rank order.
 """
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,10 +76,93 @@ def test_comprehensive_mode_parity(spark, tmp_path, durable):
     assert_parity(*run_both(spark, corpus, cfg, run_dir=run_dir))
 
 
+@DURABLE
+def test_comprehensive_cut_skipped_when_it_cannot_bite(spark, tmp_path, monkeypatch, durable):
+    """Comprehensive mode runs its budget cut (ranking.global_rank, the
+    join-back) only on a superstep whose observed |frontier| exceeds the
+    budget left: cand ⊆ frontier, so below that every candidate is
+    attempted. Here superstep 1 holds 18 frontier URLs against 19 pages
+    left and superstep 2 holds 31 against 6 and is cut mid-depth. The
+    crawl equals the oracle's, and a durable crawl resumed from each
+    committed superstep equals the uninterrupted one."""
+    from web2llmstxt_spark.operators import ranking
+    from web2llmstxt_spark.state import checkpoint
+
+    calls = []
+    rank = ranking.global_rank
+
+    def spy(*args, **kwargs):
+        calls.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return rank(*args, **kwargs)
+
+    monkeypatch.setattr(ranking, "global_rank", spy)
+    corpus = generate_corpus(seed=1, n_hosts=1, pages_per_host=30)
+    cfg = CrawlConfig(max_pages=2, comprehensive=True)
+    oracle_res = crawl(corpus, cfg)
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    seeds = [(sid, url) for sid, url, _ in corpus.seeds]
+    run_dir = str(tmp_path / "full") if durable else None
+    engine = FrontierCrawler(spark, site, cfg, run_dir=run_dir)
+    pages_df, seen_df = engine.crawl(seeds)
+    engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
+    engine_seen = {r.url for r in seen_df.collect()}
+    assert_parity(oracle_res, engine_pages, engine_seen)
+    steps = {m["superstep"]: m for m in engine.metrics}
+    budget = cfg.effective_safety_limit
+    assert sum(steps[0]["frontier_by_bucket"].values()) <= budget - steps[0]["pages_total"]
+    assert steps[2]["pages_total"] == budget  # the cut bit
+    # the rank runs on the cut superstep and in finalize, not on superstep 1
+    assert calls == ["crawl:ss2-attempt", "crawl:finalize"]
+    if not durable:
+        return
+
+    def rows(df):
+        return [tuple(r) for r in df.select(*PAGE_FIELDS).orderBy("rank").collect()]
+
+    full_pages = rows(pages_df)
+    for cut in range(checkpoint.last_complete_superstep(run_dir)):
+        resume_dir = str(tmp_path / f"resume_{cut}")
+        for n in range(cut + 1):
+            shutil.copytree(os.path.join(run_dir, f"superstep={n}"),
+                            os.path.join(resume_dir, f"superstep={n}"))
+        calls.clear()
+        pages, seen = checkpoint.resume_crawl(spark, site, cfg, resume_dir, seeds)
+        assert rows(pages) == full_pages, f"resume from {cut}: pages mismatch"
+        assert {r.url for r in seen.collect()} == engine_seen, f"resume from {cut}"
+        assert calls == ["crawl:ss2-attempt", "crawl:finalize"], (cut, calls)
+
+
 def test_multi_seed_merged_frontier(spark):
     corpus = generate_corpus(seed=13, n_hosts=3, pages_per_host=20)
     cfg = CrawlConfig(max_pages=15)
     assert_parity(*run_both(spark, corpus, cfg))
+
+
+def test_duplicate_seeds_lowest_seed_id_wins(spark):
+    """The depth-0 seed frame keeps one row per normalized URL, the one
+    with the lowest seed_id, whatever the input order. Host-case and
+    trailing-slash variants with higher ids are given first (descending
+    seed_id): the crawl equals the oracle's over the three canonical seeds,
+    and superstep 0 attempts each normalized URL once."""
+    corpus = generate_corpus(seed=13, n_hosts=3, pages_per_host=20)
+    cfg = CrawlConfig(max_pages=15)
+    canonical = [(sid, url) for sid, url, _ in corpus.seeds]   # ex0..ex2, ids 0..2
+    seeds = [
+        (7, "https://EX0.example/"),
+        (6, "https://ex1.example"),
+        (5, "https://Ex2.Example"),
+        (4, "https://ex0.example"),
+    ] + canonical[::-1]
+    oracle_res = crawl(corpus, cfg, canonical)
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    engine = FrontierCrawler(spark, site, cfg)
+    pages_df, seen_df = engine.crawl(seeds)
+    engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
+    assert_parity(oracle_res, engine_pages, {r.url for r in seen_df.collect()})
+    assert [(p["seed_id"], p["url"]) for p in engine_pages if p["depth"] == 0] == canonical
+    assert {p["seed_id"] for p in engine_pages} == {0, 1, 2}
+    assert engine.metrics[0]["superstep"] == 0
+    assert engine.metrics[0]["attempted"] == len(canonical)
 
 
 @DURABLE
@@ -301,6 +387,20 @@ def test_fetch_url_hint_parity(spark):
     big_hint = urls + [f"https://pad.example/{i}" for i in range(TableFetcher.URL_HINT_MAX + 1)]
     over = {tuple(r) for r in fetcher.fetch(cand, url_hint=big_hint).select(*cols).collect()}
     assert over == plain
+    # the hint is parsed as SQL string literals: quotes, backslashes,
+    # escape-like sequences and non-ASCII must round-trip exactly
+    tricky = ["https://q.example/it's", "https://b.example/a\\b",
+              "https://n.example/x\\n\\'y", "https://u.example/ü/é"]
+    odd_site = spark.createDataFrame(
+        [(u,) + r[1:] for u, r in zip(tricky, corpus.site_pages_rows())], schemas.SITE_PAGES)
+    odd = TableFetcher(odd_site)
+    odd_cand = spark.createDataFrame(list(enumerate(tricky)), "seed_id int, url string")
+    odd_hinted = {tuple(r) for r in odd.fetch(odd_cand, url_hint=tricky).select(*cols).collect()}
+    assert odd_hinted == {tuple(r) for r in odd.fetch(odd_cand).select(*cols).collect()}
+    assert all(r[1] for r in odd_hinted)
+    # an empty hint keeps no corpus row
+    empty = odd.fetch(odd_cand, url_hint=[]).select("url", "found").collect()
+    assert {tuple(r) for r in empty} == {(u, False) for u in tricky}
 
 
 def test_superstep_url_hint_taken_and_invariant(spark):

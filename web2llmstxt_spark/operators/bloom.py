@@ -137,8 +137,12 @@ def merge_bitmaps(state: DataFrame | None, delta: DataFrame) -> DataFrame:
     """OR the delta into the accumulated state (same m_bits generation).
     Both sides are ≤num_buckets rows of fixed-size bitmaps — the merge
     shuffles kilobytes, not URLs. n_keys accumulates insertion counts (an
-    upper bound on distinct keys; used only for the load-factor rebuild)."""
-    both = delta if state is None else state.unionByName(delta)
+    upper bound on distinct keys; used only for the load-factor rebuild).
+    A fresh filter is the delta itself: delta_bitmaps already holds one row
+    per bucket, so grouping it again would only add a pass."""
+    if state is None:
+        return delta
+    both = state.unionByName(delta)
 
     def _or(pdf: pd.DataFrame) -> pd.DataFrame:
         arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]

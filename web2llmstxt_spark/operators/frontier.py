@@ -2,7 +2,7 @@
 
 Rebuilds v2 ``discover_all_links_first`` (llmsgen/crawler/web_crawler.py:
 169-249 (pyc), SURVEY.md §3-EP3) as a driver-side superstep loop where each
-depth is ONE declarative DataFrame job:
+depth is ONE declarative DataFrame chain, closed by one stats action:
 
     frontier ──left_anti(seen)──► score (JVM Column) ──filter(>thr)──►
     robots filter (rule-array join) ──► per-host politeness cap (window) ──►
@@ -22,11 +22,16 @@ Scale design (10^10-URL frontier, north rule):
   Bloom pre-filter in ``operators/bloom.py`` which removes the vast majority
   of already-seen URLs WITHOUT shuffling the full seen table.
 - the global priority order is a range-partitioned sort (Spark samples
-  boundaries; no driver collect); the budget cut uses ``limit`` (distributed
-  top-k) in normal mode and a running-success window in comprehensive mode.
-  The window is the only single-partition step and operates on the
-  already-budget-bounded candidate slice; for budgets beyond one partition
-  swap in the documented two-phase threshold selection.
+  boundaries; no driver collect); the budget cut uses a distributed top-k
+  in normal mode and a running-success window in comprehensive mode. Both
+  modes skip the cut outright when the last state checkpoint observed
+  |frontier| <= remaining budget (cand ⊆ frontier, so the cut cannot
+  bite): no count, rank or join-back job on that superstep. The window is
+  the only single-partition step and operates on the already-budget-bounded
+  candidate slice; for budgets beyond one partition swap in the documented
+  two-phase threshold selection.
+- the depth-0 seed frame (seed_id, base_url, base_domain, url) is built on
+  the driver from the seed list: no Spark pass normalizes the input.
 - the fetch is pluggable: in production a politeness-gated HTTP
   mapInPandas (``sources/httpfetch.HttpFetcher``); in tests/bench the
   corpus join (``TableFetcher``,
@@ -44,11 +49,8 @@ import os
 import time
 import urllib.parse
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from .. import schemas
 from ..functions import kernels, linkexpand, native, udfs
@@ -101,10 +103,10 @@ def _state_part(df: DataFrame, kind: str, cols: tuple[str, ...]) -> DataFrame:
     ])
 
 
-@pandas_udf(StringType())
-def base_domain_udf(base_urls: pd.Series) -> pd.Series:
-    """urlparse(base_url).netloc — ref llmsgen/crawler/web_crawler.py:186 (pyc)."""
-    return base_urls.map(lambda u: urllib.parse.urlparse(u).netloc)
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the parser's default backslash
+    escaping): any character round-trips, quotes and backslashes included."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 class TableFetcher:
@@ -117,7 +119,7 @@ class TableFetcher:
     # user-injected fetcher with the plain fetch(cand) signature keeps working
     supports_url_hint = True
 
-    # isin() pushdown bound: past this the In-list itself is the bottleneck
+    # IN-list pushdown bound: past this the In-list itself is the bottleneck
     # (expression tree size, per-batch evaluation) and a scan-side prefilter
     # stops paying for itself vs just streaming the corpus into the join
     URL_HINT_MAX = 8192
@@ -146,7 +148,10 @@ class TableFetcher:
         """
         site = self.site
         if url_hint is not None and len(url_hint) <= self.URL_HINT_MAX:
-            site = site.filter(F.col("url").isin(list(url_hint)))
+            # one parsed IN-list (the plan isin() builds), not one py4j
+            # literal call per url (~0.6 ms each on the driver)
+            in_list = ", ".join(map(_sql_string, url_hint))
+            site = site.filter(F.expr(f"url IN ({in_list})" if url_hint else "false"))
         site = site.select(
             "url", "title", "spans", "out_links", "fetch_ok"
         ).withColumn("found", F.lit(True))
@@ -369,14 +374,15 @@ class FrontierCrawler:
         state (bloom._bucket_col): lineage keyed by it names a partition."""
         return bloom._bucket_col(F.col("url"), self.num_buckets, self.salt_hosts)
 
-    def _bucket_counts(self, where):
-        """Per-bucket counts of the rows where ``where`` holds (over a
-        ``bucket`` column) as ONE array aggregate: per-partition lineage that
-        rides an action or Observation the step already runs, never a job."""
-        b = F.col("bucket")
-        return F.array(*[
-            F.count(F.when(where & (b == i), True)) for i in range(self.num_buckets)
-        ])
+    def _bucket_counts(self, where: str):
+        """Per-bucket counts of the rows where the SQL predicate ``where``
+        holds (over a ``bucket`` column) as ONE array aggregate: per-partition
+        lineage that rides an action or Observation the step already runs,
+        never a job. Built as one SQL expression: one py4j call, not
+        num_buckets Column trees assembled call by call on the driver."""
+        return F.expr("array({})".format(", ".join(
+            f"count_if(({where}) AND bucket = {i})" for i in range(self.num_buckets)
+        )))
 
     def _commit(self, superstep: int, pages: DataFrame, seen: DataFrame,
                 frontier: DataFrame, entry: dict, fresh: DataFrame | None = None) -> None:
@@ -393,7 +399,7 @@ class FrontierCrawler:
             obs = Observation(f"commit_{self.run_id}_{superstep}")
             frontier = frontier.unionByName(
                 fresh.withColumn("bucket", self._bucket())
-                .observe(obs, self._bucket_counts(F.lit(True)).alias("by_bucket"))
+                .observe(obs, self._bucket_counts("true").alias("by_bucket"))
                 .drop("bucket")
             )
         base = os.path.join(self.run_dir, f"superstep={superstep}")
@@ -523,7 +529,7 @@ class FrontierCrawler:
         obs = Observation(f"state_{self.run_id}_{tag}")
         parts = parts.observe(
             obs,
-            self._bucket_counts(F.col("kind") == "frontier").alias("frontier_by_bucket"),
+            self._bucket_counts("kind = 'frontier'").alias("frontier_by_bucket"),
             F.max(F.when(F.col("kind") == "bloom", F.col("n_keys"))).alias("bloom_max_keys"),
         )
         state = parts.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
@@ -554,8 +560,10 @@ class FrontierCrawler:
             "attempted": attempted,
             "pages_kept": kept,
             "pages_total": total,
-            # attempt_ms = the prefilter+score+fetch job (depth 0: the seed
-            # fetch), state_ms = the state checkpoint (+ a durable commit)
+            # attempt_ms = the whole attempt phase, from the superstep's start
+            # to its stats result: prefilter, score, budget cut, fetch (depth
+            # 0: the seed fetch); state_ms = the state checkpoint (+ a
+            # durable commit)
             "attempt_ms": attempt_ms,
             "state_ms": int((now - t_state) * 1000),
             "wall_ms": int((now - t_step) * 1000),
@@ -591,25 +599,25 @@ class FrontierCrawler:
         # loop vs finalize); purely driver-side clocks, no extra jobs
         self.phase_walls: dict[str, int] = {}
 
+        # The seed frame is built on the driver: the seed list IS the input,
+        # so no Spark pass normalizes it. base_domain = urlparse(base_url)
+        # .netloc (ref llmsgen/crawler/web_crawler.py:186 (pyc)). Dedup on
+        # the NORMALIZED url: _finalize (and the comprehensive-mode budget
+        # cut) join ranks back by url assuming uniqueness — two seeds that
+        # normalize to the same URL (trailing-slash or host-case variants)
+        # would otherwise duplicate depth-0 rows and fan that join out.
+        # Lowest seed_id wins, keeping the crawl order deterministic.
+        seed_rows: dict[str, tuple] = {}
+        for sid, base_url in sorted(seeds):
+            url = kernels.normalize_url(base_url)
+            seed_rows.setdefault(
+                url, (sid, base_url, urllib.parse.urlparse(base_url).netloc, url))
         seeds_df = spark.createDataFrame(
-            [(sid, url) for sid, url in seeds], "seed_id int, base_url string"
-        ).withColumn("base_domain", base_domain_udf(F.col("base_url")))
-        # Dedup on the NORMALIZED url: _finalize (and the comprehensive-mode
-        # budget cut) join ranks back by url assuming uniqueness — two seeds
-        # that normalize to the same URL (trailing-slash variants) would
-        # otherwise duplicate depth-0 rows and fan that join out. Lowest
-        # seed_id wins, keeping the crawl order deterministic.
-        w_seed = Window.partitionBy("url").orderBy(F.asc("seed_id"))
-        seeds_df = (
-            seeds_df.withColumn("url", udfs.normalize_url_udf(F.col("base_url")))
-            .withColumn("__sr", F.row_number().over(w_seed))
-            .filter(F.col("__sr") == 1)
-            .drop("__sr")
+            list(seed_rows.values()),
+            "seed_id int, base_url string, base_domain string, url string",
         )
-        # deduped seed count, driver-side (same normalize kernel as the UDF):
-        # the superstep-0 metrics' `attempted` without a job
-        seed_urls = sorted({kernels.normalize_url(u) for _, u in seeds})
-        n_seeds = len(seed_urls)
+        seed_urls = sorted(seed_rows)
+        n_seeds = len(seed_urls)  # superstep 0's `attempted`, without a job
 
         # --- depth 0: main pages (ref :196-206 (pyc); score 10.0, no wc gate)
         # The seed URL set is known driver-side (it IS the input), so push it
@@ -671,7 +679,7 @@ class FrontierCrawler:
             pages = main0.select(*PAGES_COL_NAMES)
             self._jobdesc("d0-fetch")
             pages_by_bucket = main0.select(self._bucket().alias("bucket")).agg(
-                self._bucket_counts(F.lit(True))).first()[0]
+                self._bucket_counts("true")).first()[0]
             pages_count = sum(pages_by_bucket)
             d0_fetch_ms = int((time.time() - t_crawl) * 1000)
             bloom0 = self._filter_state(pages.select("url")) if self.use_bloom else None
@@ -751,7 +759,16 @@ class FrontierCrawler:
 
             order = (F.desc("score"), F.asc("url"))        # canonical Q1 tie-break
             fetched_cache = None
-            if cfg.comprehensive:
+            if frontier_count <= remaining:
+                # Neither mode's budget cut can bite: cand ⊆ frontier and the
+                # last checkpoint observed |frontier| <= remaining, so the
+                # normal-mode slice keeps every candidate, and in
+                # comprehensive mode __cum_before <= |cand| - 1 < remaining
+                # for each one. Skip the count, rank and join-back (zero
+                # extra jobs on the common path: usually only one superstep
+                # per crawl is cut).
+                attempted = self._fetch_attempts(cand, frontier_count)
+            elif cfg.comprehensive:
                 # no slice (:220); budget bites mid-depth (:227): a candidate
                 # is ATTEMPTED iff fewer than `remaining` successes precede it
                 # in the global priority order (distributed running sum).
@@ -774,39 +791,28 @@ class FrontierCrawler:
                     .drop("__cum_before")
                 )
             else:
-                # :220 slice — but only pay for the distributed top-k when
-                # the cut can actually bite (usually one superstep per crawl).
-                # cand ⊆ frontier, so when the last checkpoint observed
-                # |frontier| <= remaining the cut CANNOT bite and the whole
-                # count/checkpoint detour is skipped (zero extra jobs on the
-                # common path).
-                todo_bound: int | None = None   # proven |todo| upper bound
-                todo_materialized = False
-                if frontier_count <= remaining:
-                    todo = cand
-                    todo_bound = frontier_count   # cand ⊆ frontier
+                # :220 slice: count cand, and pay for the distributed top-k
+                # only when the count exceeds what the budget leaves
+                cand = cand.localCheckpoint(eager=True)
+                n_cand = cand.count()
+                if n_cand > remaining:
+                    ranked = ranking.global_rank(cand, order, "__r")
+                    attempted = self._fetch_attempts(
+                        ranked.filter(F.col("__r") <= remaining).drop("__r"), None
+                    )
                 else:
-                    cand = cand.localCheckpoint(eager=True)
-                    n_cand = cand.count()
-                    if n_cand > remaining:
-                        ranked = ranking.global_rank(cand, order, "__r")
-                        todo = ranked.filter(F.col("__r") <= remaining).drop("__r")
-                    else:
-                        todo = cand
-                        todo_bound = n_cand
-                        todo_materialized = True
-                attempted = self._fetch_attempts(todo, todo_bound, todo_materialized)
+                    attempted = self._fetch_attempts(cand, n_cand, materialized=True)
             attempted = attempted.persist(CACHE_LEVEL)
-            # the ONE action of this superstep: materializes the whole chain
-            # (anti-join/bloom, scoring, sort, budget cut, fetch) into the
-            # cache and returns the loop-control counters and the new pages'
-            # per-bucket lineage at once
+            # the stats action that closes the attempt phase: materializes
+            # what is still lazy of the chain (anti-join/bloom, scoring, cut,
+            # fetch) into the cache and returns the loop-control counters and
+            # the new pages' per-bucket lineage at once. attempt_ms covers
+            # the whole phase, from t0 to this result.
             kept = F.col("success") & (F.col("wc") >= 50)
-            t_attempt = time.time()
             attempted_count, pages_by_bucket = attempted.select(
                 self._bucket().alias("bucket"), kept.alias("kept")
-            ).agg(F.count("*"), self._bucket_counts(F.col("kept"))).first()
-            attempt_ms = int((time.time() - t_attempt) * 1000)
+            ).agg(F.count("*"), self._bucket_counts("kept")).first()
+            attempt_ms = int((time.time() - t0) * 1000)
             if fetched_cache is not None:
                 # attempted is materialized; the pre-cut fetch cache is dead
                 fetched_cache.unpersist()
