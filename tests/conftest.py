@@ -13,3 +13,10 @@ def spark():
     s = get_spark("tests", cores=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
     yield s
     s.stop()
+
+
+@pytest.fixture
+def persisted(spark):
+    """Ids of the persisted RDDs, read on each call. Compare them as sets:
+    Spark's cleaner may drop another test's leftovers at any moment."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

@@ -97,13 +97,7 @@ def test_curate_pack_out_writes_training_shards(spark, tmp_path):
     assert pk["shards"] >= 2  # the tiny budget actually sharded
 
 
-def _persisted(spark):
-    """Ids of the persisted RDDs. Compared as sets: Spark's cleaner may
-    drop another test's leftovers at any moment."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def test_curate_releases_caches_and_rereads_rewritten_input(spark, tmp_path):
+def test_curate_releases_caches_and_rereads_rewritten_input(spark, tmp_path, persisted):
     """Every cache run_curate creates is released on return, so a second
     call on the same path reads the rewritten file, not a cache of the
     first one. The file is rewritten outside Spark, as an upstream job
@@ -119,11 +113,11 @@ def test_curate_releases_caches_and_rereads_rewritten_input(spark, tmp_path):
         pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
                                  "text": [r[1] for r in rows]}),
                        os.path.join(p, "part-0.parquet"))
-        before = _persisted(spark)
+        before = persisted()
         args = _args(tmp_path, p, pack_out=str(tmp_path / "shards"),
                      pack_budget=8, bins_per_shard=2)
         got.append(run_curate(spark, args))
-        assert _persisted(spark) <= before  # nothing the call persisted remains
+        assert persisted() <= before  # nothing the call persisted remains
     assert got[0]["in_docs"] == 5 and got[0]["dropped_repetition"] == 0
     assert got[1]["in_docs"] == 9 and got[1]["dropped_repetition"] == 1
     assert got[1]["kept_docs"] == got[1]["pack"]["docs"] == 8

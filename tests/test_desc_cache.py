@@ -9,7 +9,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from web2llmstxt_spark import schemas
-from web2llmstxt_spark.plans.pipeline import generate_llmstxt
+from web2llmstxt_spark.plans.pipeline import distill_to_output, generate_llmstxt
 from web2llmstxt_spark.sources.corpus import generate_corpus
 from web2llmstxt_spark.state.desc_cache import cache_key_col
 
@@ -196,3 +196,28 @@ def test_injected_model_sees_only_cache_misses(spark, tmp_path):
     key = lambda r: [(e["url"], e["description"], e["index"]) for e in r["entries"]]
     assert key(r1) == key(r2)
     assert all(e["description"].startswith("MODEL: ") for e in r2["entries"])
+
+
+def test_distill_releases_its_caches(spark, tmp_path, persisted):
+    """distill_to_output with the description cache persists the pages, the
+    describe checkpoint and the cache delta's checkpoint; none of them may
+    outlive the call. Two calls in one session, the second warm."""
+    pages_df = spark.createDataFrame(
+        [
+            (f"https://r.example/p{i}", f"Page {i}", f"body text number {i} " * 6, None,
+             24, 1.0, 1, "crawl", 0, i)
+            for i in range(12)
+        ],
+        schemas.PAGES,
+    )
+    cache_dir = str(tmp_path / "desc_cache")
+    news = []
+    for run in range(2):
+        before = persisted()
+        res = distill_to_output(
+            pages_df, "https://r.example/", str(tmp_path / f"o{run}"),
+            desc_cache_dir=cache_dir,
+        )
+        assert persisted() <= before, f"call {run} left persisted RDDs"
+        news.append(res["desc_cache_new"])
+    assert news == [12, 0]

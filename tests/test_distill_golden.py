@@ -18,6 +18,7 @@ import os
 import pytest
 
 from web2llmstxt_spark import schemas
+from web2llmstxt_spark.functions import kernels
 from web2llmstxt_spark.plans import distill, pipeline
 from web2llmstxt_spark.sinks import writers
 
@@ -47,25 +48,36 @@ MOCK_PAGE = {
 
 
 @needs_golden
-def test_golden_llms_txt_bytes():
+def test_golden_llms_txt_bytes(tmp_path):
+    """The production llms.txt writer over hand-written entries, with the
+    site name, summary and description fallback from the reference kernels."""
+    description = "Content related to Mock Page 1 Title. From example.com."
     entries = [
         {
             "url": MOCK_PAGE["url"],
             "title": MOCK_PAGE["title"],
-            "description": "Content related to Mock Page 1 Title. From example.com.",
+            "description": description,
             "word_count": 10,
             "category": "General Information",
+            "render_desc": kernels.final_description(description, MOCK_PAGE["content"]),
         }
     ]
     metadata = {"total_pages_crawled": 1, "generated_at": "2025-06-26T12:00:00"}
-    rendered = writers.render_llms_txt(MOCK_BASE, entries, [MOCK_PAGE], metadata)
-    assert rendered == read_golden()
+    path = str(tmp_path / "llms.txt")
+    writers.write_llms_txt_stream(
+        path,
+        kernels.extract_site_name(MOCK_BASE, [MOCK_PAGE]),
+        kernels.generate_site_summary([MOCK_PAGE]),
+        iter(entries),
+        metadata,
+    )
+    assert open(path, encoding="utf-8").read() == read_golden()
 
 
 @needs_golden
-def test_mock_page_through_spark_distill(spark):
-    """The same golden, but with description+category computed by the engine
-    (pandas UDFs) instead of hand-written."""
+def test_mock_page_through_spark_distill(spark, tmp_path):
+    """The same golden through the product path: description, category,
+    site name, summary and the sink all computed by the engine."""
     pages_df = spark.createDataFrame(
         [
             (
@@ -75,11 +87,11 @@ def test_mock_page_through_spark_distill(spark):
         ],
         schemas.PAGES,
     )
-    entries_df = distill.categorize_entries(distill.describe_pages(pages_df), pages_df)
-    entries = [r.asDict() for r in entries_df.collect()]
-    metadata = {"total_pages_crawled": 1, "generated_at": "2025-06-26T12:00:00"}
-    rendered = writers.render_llms_txt(MOCK_BASE, entries, [MOCK_PAGE], metadata)
-    assert rendered == read_golden()
+    res = pipeline.distill_to_output(
+        pages_df, MOCK_BASE, str(tmp_path), generated_at="2025-06-26T12:00:00"
+    )
+    (path,) = res["paths"]
+    assert open(path, encoding="utf-8").read() == read_golden()
 
 
 def test_full_pipeline_end_to_end(spark, tmp_path):
@@ -120,6 +132,11 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     data = json.load(open(jpath, encoding="utf-8"))
     assert set(data) == {"metadata", "llms_entries"}
     assert len(data["metadata"]) == 15
+    # the default run forms no O(pages) lists and counts every page
+    assert result_json["entries"] is None and result_json["pages"] is None
+    meta = result_json["metadata"]
+    assert meta["total_entries_processed"] == meta["total_pages_crawled"]
+    assert len(data["llms_entries"]) == meta["total_pages_crawled"]
 
     # full-text sink
     result_full = pipeline.generate_llmstxt(
@@ -135,7 +152,7 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
 
 def test_render_desc_twin_on_adversarial_content(spark):
     """The distributed render_desc column (plans/distill.py) and the
-    render-time Python twin (writers.final_description) must stay
+    Python reference (kernels.final_description) must stay
     byte-identical on content the golden corpus never exercises: a page whose
     first 30 'words' span >4096 chars (minified-JS shape), a word straddling
     the 4096 boundary, and NBSP/ideographic-space joints (non-boundaries
@@ -163,5 +180,5 @@ def test_render_desc_twin_on_adversarial_content(spark):
     got = {r.url: r.render_desc for r in out.collect()}
     for i, c in enumerate(contents):
         url = f"https://x.example/p{i}"
-        expect = writers.final_description("N/A (full_text_only mode)", c)
+        expect = kernels.final_description("N/A (full_text_only mode)", c)
         assert got[url] == expect, (url, got[url][:80], expect[:80])

@@ -1,9 +1,14 @@
-"""Streaming sinks: byte parity with the legacy full-list renderers, and the
-pipeline's llms.txt bytes unchanged by the no-content-collect refactor."""
+"""Streaming sinks: the one dispatch per format over hand-built tables, the
+JSON/YAML stream encoders against one-shot dumps, and the pipeline's llms.txt
+against the reference kernels."""
 
 import json
 
+import pytest
+from pyspark.sql import Row
+
 from web2llmstxt_spark import schemas
+from web2llmstxt_spark.functions import kernels
 from web2llmstxt_spark.oracle.crawl_oracle import CrawlConfig
 from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.plans import pipeline
@@ -23,13 +28,11 @@ META = {
 }
 
 
-def test_llms_full_stream_matches_render(tmp_path):
-    for max_full in (None, 4, 100):
-        meta = {**META, "max_full_text_pages": max_full}
-        path = str(tmp_path / f"full_{max_full}.txt")
-        writers.write_llms_full_stream(path, "https://x.example", iter(PAGES), len(PAGES), meta)
-        legacy = writers.render_llms_full_txt("https://x.example", PAGES, meta)
-        assert open(path, encoding="utf-8").read() == legacy, f"max_full={max_full}"
+def _sink_meta(export_format="text", include_full_text=False, full_text_only=False, **kw):
+    """META plus the keys of the pipeline's metadata the dispatch reads."""
+    return {**META, "total_entries_processed": META["total_pages_crawled"],
+            "export_format": export_format, "include_full_text": include_full_text,
+            "full_text_only_mode": full_text_only, **kw}
 
 
 def test_json_stream_valid(tmp_path):
@@ -49,40 +52,55 @@ def test_json_stream_valid(tmp_path):
 
 
 def test_pipeline_llms_txt_bytes_match_legacy_render(spark, tmp_path):
-    """The streaming assembly (bounded collects + distributed render_desc)
-    must produce the exact bytes the legacy full-collect path produced."""
+    """The streamed llms.txt follows the reference's rendering rules, checked
+    line by line against the kernel oracles over the fully collected crawl:
+    the H1 is kernels.extract_site_name, the summary is
+    kernels.generate_site_summary, and every bullet's description is
+    kernels.final_description(description, content)."""
+    base = "https://ex0.example/"
     corpus = generate_corpus(seed=31, n_hosts=1, pages_per_host=25)
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
     result = pipeline.generate_llmstxt(
-        spark, site, "https://ex0.example/", str(tmp_path), max_pages=6,
+        spark, site, base, str(tmp_path), max_pages=6,
         generated_at="2026-08-16T00:00:00", collect_entries=True,
     )
     (path,) = result["paths"]
-    got = open(path, encoding="utf-8").read()
+    lines = open(path, encoding="utf-8").read().splitlines()
 
-    # legacy path: full pages (content included) collected test-side from an
-    # identical deterministic crawl
+    # full pages (content included) from an identical deterministic crawl
     cfg = CrawlConfig(max_pages=6, safety_limit=6 * 5)
     crawler = FrontierCrawler(spark, site, cfg, use_bloom=True)
-    pages_df, _ = crawler.crawl([(0, "https://ex0.example/")])
+    pages_df, _ = crawler.crawl([(0, base)])
     pages_full = [r.asDict() for r in pages_df.orderBy("rank").collect()]
-    entries = [{k: v for k, v in e.items() if k != "render_desc"} for e in result["entries"]]
-    legacy = writers.render_llms_txt(
-        "https://ex0.example/", entries, pages_full, result["metadata"]
+    assert [p["url"] for p in pages_full] == [p["url"] for p in result["pages"]]
+    content = {p["url"]: p["content"] for p in pages_full}
+
+    assert lines[0] == f"# {kernels.extract_site_name(base, pages_full)}"
+    assert lines[2] == f"> {kernels.generate_site_summary(pages_full)}"
+    assert lines[4] == (
+        f"Generated from {len(pages_full)} pages on 2026-08-16 using automated crawling."
     )
-    assert got == legacy
+    bullets = [ln for ln in lines if ln.startswith("- [")]
+    want = [
+        f"- [{e['title']}]({e['url']}): "
+        + kernels.final_description(e["description"], content[e["url"]])
+        for e in result["entries"]
+    ]
+    assert sorted(bullets) == sorted(want)
 
 
 def test_v1_style_output(tmp_path, spark):
     """v1 format variants (generator/llms_generator.py:789-821): header
-    shapes, `--- Page i ---` blocks, 80-char separators; full file streamed."""
+    shapes, `--- Page i ---` blocks, 80-char separators; both files streamed."""
     entries = [
         {"url": p["url"], "title": p["title"], "description": f"desc {i}",
          "word_count": 20, "index": i + 1, "category": "Other Pages",
          "render_desc": f"desc {i}"}
         for i, p in enumerate(PAGES[:3])
     ]
-    txt = writers.render_llms_txt_v1("x.example", entries, "2026-08-16 00:00:00")
+    path = str(tmp_path / "v1.txt")
+    writers.write_llms_txt_v1_stream(path, "x.example", iter(entries), 3, "2026-08-16 00:00:00")
+    txt = open(path, encoding="utf-8").read()
     assert txt.startswith("# X.EXAMPLE - LLMs.txt\n# Generated on 2026-08-16 00:00:00\n# Total pages: 3\n\n")
     assert "## Page 0\nURL: https://x.example/p0\nDescription: desc 0\n\n" in txt
 
@@ -108,6 +126,23 @@ def test_v1_style_output(tmp_path, spark):
     assert body.splitlines()[0].endswith("- LLMs.txt")
 
 
+class _Frame:
+    """Duck-typed stand-in for a DataFrame already in the order asked for:
+    orderBy/select are no-ops and toLocalIterator yields the rows."""
+
+    def __init__(self, rows):
+        self.rows = rows
+
+    def orderBy(self, *_):
+        return self
+
+    def select(self, *_):
+        return self
+
+    def toLocalIterator(self):
+        return iter(self.rows)
+
+
 def test_yaml_full_text_bounded_consumption(tmp_path):
     """The YAML sink must SLICE the page iterator (islice), never materialize
     it: with pages >> max_full_text_pages, only ~max_full rows may be pulled
@@ -116,36 +151,19 @@ def test_yaml_full_text_bounded_consumption(tmp_path):
     yaml = __import__("yaml")
     consumed = []
 
-    class _Row:
-        def __init__(self, i):
-            self.i = i
+    def pages():
+        for i in range(10_000):
+            consumed.append(i)
+            yield Row(title=f"Page {i}", url=f"https://x.example/p{i}", content=f"body {i}")
 
-        def asDict(self):
-            return {"title": f"Page {self.i}", "url": f"https://x.example/p{self.i}",
-                    "content": f"body {self.i}"}
-
-    class _FakePagesDF:
-        """Duck-typed stand-in for the rank-ordered crawl DataFrame."""
-
-        def orderBy(self, *_):
-            return self
-
-        def select(self, *_):
-            return self
-
-        def toLocalIterator(self):
-            for i in range(10_000):
-                consumed.append(i)
-                yield _Row(i)
-
-    entries = [
-        {"url": "https://x.example/p0", "title": "P", "description": "d",
-         "word_count": 5, "index": 1, "category": "Other Pages", "render_desc": "d"}
-    ]
-    meta = {**META, "max_full_text_pages": 7}
+    entries = _Frame([
+        Row(url="https://x.example/p0", title="P", description="d", word_count=5,
+            index=1, category="Other Pages", render_desc="d")
+    ])
+    meta = _sink_meta("yaml", include_full_text=True, max_full_text_pages=7)
     paths = writers.write_output_files(
-        str(tmp_path / "yaml_bounded"), "https://x.example", entries, meta,
-        export_format="yaml", include_full_text=True, pages_df=_FakePagesDF(),
+        str(tmp_path / "yaml_bounded"), "https://x.example", entries, _Frame(pages()),
+        meta, "X", "Summary.",
     )
     assert len(consumed) <= 8, f"driver pulled {len(consumed)} rows for max_full=7"
     data = yaml.safe_load(open(paths[0], encoding="utf-8"))
@@ -153,26 +171,91 @@ def test_yaml_full_text_bounded_consumption(tmp_path):
     assert data["full_content_pages"][0]["url"] == "https://x.example/p0"
 
 
-def test_llms_txt_stream_no_entry_collect(spark, tmp_path):
-    """collect_entries=False must stream the v2 llms.txt body category-
-    grouped via toLocalIterator — byte-identical to the collected path — and
-    return None for the O(pages) entries/pages lists."""
-    corpus = generate_corpus(seed=31, n_hosts=1, pages_per_host=25)
-    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
-    kw = dict(max_pages=6, generated_at="2026-08-16T00:00:00")
-    ref = pipeline.generate_llmstxt(
-        spark, site, "https://ex0.example/", str(tmp_path / "collected"),
-        collect_entries=True, **kw
+def test_write_output_files_entry_orders(spark, tmp_path):
+    """The one dispatch builds both entry orders from the entries table:
+    v2 llms.txt sections follow CATEGORY_ORDER (an unknown category is
+    dropped) with bullets in index order; json, yaml and v1 list every entry
+    in index order, and json/yaml leave out render_desc. llms-full.txt is
+    rank-ordered under its header and the max_full_text_pages notice."""
+    yaml = __import__("yaml")
+    u = "https://x.example/p{}".format
+    # (index, category), deliberately out of both orders
+    spec = [(3, "Other Pages"), (1, "Key Documentation"), (4, "Key Documentation"),
+            (2, "Not A Section"), (0, "Guides & Tutorials")]
+    entries_df = spark.createDataFrame(
+        [(u(i), f"P{i}", f"d{i}", 10 + i, i, cat, f"r{i}") for i, cat in spec],
+        "url string, title string, description string, word_count int, index int, "
+        "category string, render_desc string",
     )
-    got = pipeline.generate_llmstxt(
-        spark, site, "https://ex0.example/", str(tmp_path / "streamed"),
-        collect_entries=False, **kw
+    pages_df = spark.createDataFrame(
+        [(u(i), f"P{i}", f"body {i}", i) for i in (4, 2, 0, 3, 1)],
+        "url string, title string, content string, rank int",
     )
-    ref_txt = open(ref["paths"][0], encoding="utf-8").read()
-    got_txt = open(got["paths"][0], encoding="utf-8").read()
-    assert got_txt == ref_txt
-    assert got["entries"] is None and got["pages"] is None
-    assert got["metadata"]["total_entries_processed"] == ref["metadata"]["total_entries_processed"]
+
+    def write(name, fmt, style="v2", **kw):
+        m = _sink_meta(fmt, total_pages_crawled=5, total_entries_processed=5, **kw)
+        return writers.write_output_files(
+            str(tmp_path / name), "https://x.example", entries_df, pages_df, m,
+            "X Site", "A summary.", style=style,
+        )
+
+    txt_path, full_path = write("v2", "text", include_full_text=True, max_full_text_pages=2)
+    assert txt_path.endswith("x.example-llms.txt") and full_path.endswith("-llms-full.txt")
+    assert open(txt_path, encoding="utf-8").read() == "\n".join([
+        "# X Site\n", "> A summary.\n",
+        "Generated from 5 pages on 2026-08-16 using automated crawling.\n",
+        "## Key Documentation\n", f"- [P1]({u(1)}): r1\n- [P4]({u(4)}): r4\n",
+        "## Guides & Tutorials\n", f"- [P0]({u(0)}): r0\n",
+        "## Other Pages\n", f"- [P3]({u(3)}): r3\n",
+    ])
+    full = open(full_path, encoding="utf-8").read()
+    assert full.startswith(
+        "# https://x.example llms-full.txt\n"
+        "# Generated on 2026-08-16T00:00:00 using deterministic-fallback\n"
+        "# Total pages crawled: 5\n# Processing time: 1.23s\n"
+        "# Displaying 2 of 5 crawled pages due to limit.\n\n"
+    )
+    assert full.count("## Page ") == 2
+    assert f"## Page 1: P0\n**URL:** {u(0)}\n\nbody 0\n" in full
+    assert f"## Page 2: P1\n**URL:** {u(1)}\n\nbody 1\n" in full
+
+    in_order = [u(i) for i in range(5)]
+    (jpath,) = write("json", "json")
+    got = json.load(open(jpath, encoding="utf-8"))["llms_entries"]
+    assert [e["url"] for e in got] == in_order
+    assert all("render_desc" not in e for e in got)
+    (ypath,) = write("yaml", "yaml")
+    got = yaml.safe_load(open(ypath, encoding="utf-8"))["llms_entries"]
+    assert [e["url"] for e in got] == in_order
+    assert all("render_desc" not in e for e in got)
+    (vpath,) = write("v1", "text", style="v1")
+    v1 = open(vpath, encoding="utf-8").read()
+    assert [ln[5:] for ln in v1.splitlines() if ln.startswith("URL: ")] == in_order
+    assert "## P2\nURL: https://x.example/p2\nDescription: r2\n\n" in v1
+
+
+@pytest.mark.parametrize("bad", [{"export_format": "markdown"}, {"output_style": "v3"}])
+def test_unknown_output_options_rejected_before_any_job(spark, tmp_path, bad):
+    """Both API entry points reject an export format or text style the sinks
+    do not have, before they submit a Spark job."""
+    sc = spark.sparkContext
+    site = spark.createDataFrame([], schemas.SITE_PAGES)
+    sc.setJobGroup("output-options", "output-options")
+    try:
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            pipeline.generate_llmstxt(
+                spark, site, "https://x.example/", str(tmp_path / "api"), **bad
+            )
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            pipeline.generate_llmstxt_from_warc(
+                spark, str(tmp_path / "none.warc.gz"), "https://x.example/",
+                str(tmp_path / "warc"), **bad
+            )
+        assert sc.statusTracker().getJobIdsForGroup("output-options") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert not (tmp_path / "api").exists() and not (tmp_path / "warc").exists()
 
 
 def test_yaml_stream_bytes_match_full_dump(tmp_path):
@@ -219,73 +302,3 @@ def test_json_stream_generator_matches_list(tmp_path):
         # the llms_entries section is exactly json.dump(ents, indent=2)
         want_section = json.dumps(ents, indent=2, ensure_ascii=False)
         assert f'"llms_entries": {want_section}' in a, case
-
-
-def test_v1_txt_stream_matches_render(tmp_path):
-    entries = [
-        {"url": p["url"], "title": p["title"], "description": f"desc {i}",
-         "word_count": 20, "index": i + 1, "category": "Other Pages",
-         "render_desc": f"desc {i}"}
-        for i, p in enumerate(PAGES[:4])
-    ]
-    path = str(tmp_path / "v1s.txt")
-    writers.write_llms_txt_v1_stream(
-        path, "x.example", iter(entries), len(entries), "2026-08-16 00:00:00"
-    )
-    legacy = writers.render_llms_txt_v1("x.example", entries, "2026-08-16 00:00:00")
-    assert open(path, encoding="utf-8").read() == legacy
-
-
-def test_all_formats_honor_no_entry_collect(spark, tmp_path):
-    """collect_entries=False must be honored by EVERY format (r3 verdict #7):
-    json/yaml/v1 stream index-ordered entries and produce the same entry
-    sequence as the collected path (metadata differs only in the measured
-    processing time)."""
-    yaml = __import__("yaml")
-    corpus = generate_corpus(seed=31, n_hosts=1, pages_per_host=25)
-    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
-    kw = dict(max_pages=6, generated_at="2026-08-16T00:00:00")
-    for fmt, style in (("json", "v2"), ("yaml", "v2"), ("text", "v1")):
-        ref = pipeline.generate_llmstxt(
-            spark, site, "https://ex0.example/", str(tmp_path / f"{fmt}{style}_c"),
-            export_format=fmt, output_style=style, collect_entries=True, **kw
-        )
-        got = pipeline.generate_llmstxt(
-            spark, site, "https://ex0.example/", str(tmp_path / f"{fmt}{style}_s"),
-            export_format=fmt, output_style=style, collect_entries=False, **kw
-        )
-        assert got["entries"] is None and got["pages"] is None, (fmt, style)
-        if fmt == "json":
-            a = json.load(open(ref["paths"][0], encoding="utf-8"))
-            b = json.load(open(got["paths"][0], encoding="utf-8"))
-            assert a["llms_entries"] == b["llms_entries"]
-        elif fmt == "yaml":
-            a = yaml.safe_load(open(ref["paths"][0], encoding="utf-8"))
-            b = yaml.safe_load(open(got["paths"][0], encoding="utf-8"))
-            assert a["llms_entries"] == b["llms_entries"]
-        else:  # v1 text: bytes identical (header has no processing time)
-            a = open(ref["paths"][0], encoding="utf-8").read()
-            b = open(got["paths"][0], encoding="utf-8").read()
-            assert a == b
-
-
-def test_default_path_is_streaming(spark, tmp_path):
-    """r5: collect_entries defaults to FALSE — the plain call (what users
-    get at scale) forms no O(pages) driver list and still writes the exact
-    bytes of the collected run."""
-    corpus = generate_corpus(seed=31, n_hosts=1, pages_per_host=25)
-    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
-    kw = dict(max_pages=6, generated_at="2026-08-16T00:00:00")
-    default = pipeline.generate_llmstxt(
-        spark, site, "https://ex0.example/", str(tmp_path / "default"), **kw
-    )
-    assert default["entries"] is None and default["pages"] is None
-    collected = pipeline.generate_llmstxt(
-        spark, site, "https://ex0.example/", str(tmp_path / "collected2"),
-        collect_entries=True, **kw
-    )
-    assert (
-        open(default["paths"][0], "rb").read()
-        == open(collected["paths"][0], "rb").read()
-    )
-    assert default["metadata"]["total_entries_processed"] == len(collected["entries"])

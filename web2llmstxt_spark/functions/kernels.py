@@ -800,6 +800,24 @@ def ws_tokens(content: str) -> list[str]:
     return [t for t in _WS_ASCII_RE.split(content or "") if t]
 
 
+def final_description(desc: str | None, page_content: str | None) -> str:
+    """The render-time description fallback (ref file_utils.py:124-130).
+
+    Python reference of the distributed ``render_desc`` column in
+    plans/distill.py: both sides split only a 4096-char prefix on the pinned
+    ASCII whitespace class (Java ``\\s`` == ``_WS_ASCII_RE``), so a page
+    whose first 30 tokens span >4 KB (minified JS, base64 blobs) truncates
+    identically here and in the Spark plan.
+    """
+    if desc == "N/A (full_text_only mode)" or not desc:
+        return (
+            " ".join(ws_tokens(page_content[:4096])[:30]) + "..."
+            if page_content
+            else "No content available."
+        )
+    return desc
+
+
 def word_count(content: str) -> int:
     """Token count on the pinned ASCII whitespace class.
 

@@ -61,7 +61,8 @@ def categorize_entries(entries: DataFrame, pages: DataFrame) -> DataFrame:
     joined = entries.join(content_map, "url", "left")
     # render_desc: the sink's description fallback (file_utils.py:124-130),
     # computed HERE so llms.txt assembly never needs page content on the
-    # driver (sinks/writers.final_description is the Python twin).
+    # driver (kernels.final_description is the Python reference the tests
+    # check it against). It is never empty, so the sinks render it as is.
     pc = F.coalesce(F.col("page_content"), F.lit(""))
     # only the first 30 words are ever rendered: bound the regex split to a
     # 4 KB prefix so per-row cost is O(1) in page size (30 words can only

@@ -15,9 +15,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions import kernels
 from ..oracle.crawl_oracle import CrawlConfig
 from ..operators.frontier import FrontierCrawler
-from ..session import CACHE_LEVEL
+from ..session import CACHE_LEVEL, release
 from ..sinks import writers
 from . import distill
+
+EXPORT_FORMATS = ("text", "json", "yaml")
+OUTPUT_STYLES = ("v1", "v2")
+
+
+def _check_output_options(export_format: str, output_style: str) -> None:
+    """Reject an unknown sink before the first Spark job: the dispatch would
+    otherwise write v2 text and record the bogus name in the metadata."""
+    if export_format not in EXPORT_FORMATS:
+        raise ValueError(f"export_format must be one of {EXPORT_FORMATS}, got {export_format!r}")
+    if output_style not in OUTPUT_STYLES:
+        raise ValueError(f"output_style must be one of {OUTPUT_STYLES}, got {output_style!r}")
 
 
 def generate_llmstxt(
@@ -56,15 +68,16 @@ def generate_llmstxt(
     None keeps the shipped v2 deterministic fallback. Composes with
     ``desc_cache_dir`` so only cache misses reach the model.
 
-    ``collect_entries=False`` (the DEFAULT since r5 — every sink streams
-    byte-identically, so the O(1)-driver path is what users get at scale)
-    keeps the ENTIRE text path O(1) on the driver: llms.txt streams
-    category-grouped from toLocalIterator, json/yaml/v1 stream
-    index-ordered, and result['entries'] / result['pages'] are None instead
-    of O(pages) lists (use metadata['total_pages_crawled'] /
-    ['total_entries_processed'] for counts). Pass ``collect_entries=True``
-    only when the caller actually wants the bounded per-page summary lists
-    (small crawls, tests).
+    ``collect_entries`` only decides whether the result carries the bounded
+    per-entry and per-page summary lists; it does not change what is
+    written. Every sink streams from toLocalIterator (one path per format,
+    sinks/writers.py), so the driver stays O(1) either way. With the default
+    False, result['entries'] / result['pages'] are None (use
+    metadata['total_pages_crawled'] / ['total_entries_processed'] for
+    counts); pass True only for small crawls and tests that read the lists.
+
+    ``export_format`` is one of EXPORT_FORMATS and ``output_style`` one of
+    OUTPUT_STYLES; anything else raises ValueError before any Spark job.
 
     ``crawl_strategy`` mirrors the reference dispatch (v1 generator/
     llms_generator.py:694-700; v2 llmsgen pyc names
@@ -81,6 +94,7 @@ def generate_llmstxt(
     operators/cuckoo.py). Both are correctness-neutral — the exact
     anti-join behind them decides membership; the filter only prunes.
     """
+    _check_output_options(export_format, output_style)
     start = time.time()
     # ref :169 (pyc): 3x page budget when full text requested
     actual_max_pages = max_pages * 3 if (full_text_only or include_full_text) else max_pages
@@ -166,152 +180,108 @@ def distill_to_output(
     consumers (``generate_llmstxt_from_warc``) call it directly — fetch and
     distill as separate jobs, which is how a 100 TB WARC collection is
     processed (the crawl wrote archives months ago; distillation is a batch
-    job over them)."""
-    crawl_strategy = crawl_strategy_label
+    job over them). Every cache it takes is released before it returns."""
     start = start_time if start_time is not None else time.time()
     pages_df = pages_df.persist(CACHE_LEVEL)
-    n_pages = pages_df.count()
+    held = [pages_df]  # released on every exit, error or not
+    try:
+        n_pages = pages_df.count()
+        desc_cache_new = None
+        if desc_cache_dir is not None and not full_text_only:
+            # T4 check-before-generate (models/client.py:68-92): hits reuse the
+            # stored description, only misses compute; write-through after.
+            from ..state.desc_cache import DescriptionCache, describe_with_cache
 
-    desc_cache_new = None
-    if desc_cache_dir is not None and not full_text_only:
-        # T4 check-before-generate (models/client.py:68-92): hits reuse the
-        # stored description, only misses compute; write-through after.
-        from ..state.desc_cache import DescriptionCache, describe_with_cache
+            cache = DescriptionCache(pages_df.sparkSession, desc_cache_dir)
+            entries_df, new_cache = describe_with_cache(
+                pages_df, cache.load(), describe_fn=describe_fn
+            )
+            # merge_and_save is append-only (new delta dir, never rewrites the
+            # files entries' lineage reads), so this checkpoint is not a
+            # correctness requirement — it stays because entries_df feeds
+            # several actions (the sink streams, the optional collect) and the
+            # checkpoint computes describe once; entries carry no page
+            # content, so it is bounded.
+            entries_df = entries_df.localCheckpoint(eager=True)
+            held.append(entries_df)
+            desc_cache_new = cache.merge_and_save(new_cache)
+        else:
+            entries_df = distill.describe_pages(
+                pages_df, full_text_only=full_text_only, describe_fn=describe_fn
+            )
+        entries_df = distill.categorize_entries(entries_df, pages_df)
 
-        cache = DescriptionCache(pages_df.sparkSession, desc_cache_dir)
-        entries_df, new_cache = describe_with_cache(
-            pages_df, cache.load(), describe_fn=describe_fn
+        # Driver materialization is BOUNDED: the site name/summary need one
+        # title + five 500-char samples; every sink streams its rows through
+        # toLocalIterator, so neither page content nor an O(pages) list forms
+        # on the driver unless collect_entries asks for the summary lists.
+        main_title_rows = (
+            pages_df.filter(
+                (F.col("url") == base_url) | (F.col("url") == base_url.rstrip("/"))
+            )
+            .select("title")
+            .limit(1)
+            .collect()
         )
-        # merge_and_save is append-only (new delta dir, never rewrites the
-        # files entries' lineage reads), so this checkpoint is not a
-        # correctness requirement anymore — it stays because entries_df is
-        # consumed by several downstream actions (collect, the category-sorted
-        # llms.txt stream) and the checkpoint computes describe once; entries
-        # carry no page content, so it is bounded.
-        entries_df = entries_df.localCheckpoint(eager=True)
-        desc_cache_new = cache.merge_and_save(new_cache)
-    else:
-        entries_df = distill.describe_pages(
-            pages_df, full_text_only=full_text_only, describe_fn=describe_fn
+        site_name = kernels.site_name_from_title(
+            base_url, main_title_rows[0]["title"] if main_title_rows else None
         )
-    entries_df = distill.categorize_entries(entries_df, pages_df)
-
-    # Driver materialization is BOUNDED (round-1 fix): entries carry no page
-    # content (render_desc fallbacks were computed distributed), the site
-    # name/summary need one title + five 500-char samples, and llms-full.txt
-    # streams through toLocalIterator inside the sink. Page CONTENT never
-    # accumulates on the driver at any budget — and with
-    # collect_entries=False no O(pages) LIST forms for ANY format: llms.txt
-    # streams category-grouped below, json/yaml/v1 stream index-ordered
-    # (entries_index_iter_factory).
-    needs_entry_list = collect_entries
-    entries = (
-        [r.asDict() for r in entries_df.orderBy("index").collect()]
-        if needs_entry_list
-        else []
-    )
-
-    def entries_index_iter_factory():
-        # index order == crawl rank order: the json/yaml/v1 entry sequence
-        return (r.asDict() for r in entries_df.orderBy("index").toLocalIterator())
-
-    # v2 llms.txt assembly streams from the entries table sorted by canonical
-    # category position then crawl index — the sort is distributed (range
-    # shuffle over content-free rows) and the driver sees one Arrow partition
-    # at a time. Categories outside CATEGORY_ORDER are dropped exactly like
-    # the legacy renderer's ordered-section loop.
-    cat_ord = F.array_position(
-        F.array(*[F.lit(c) for c in kernels.CATEGORY_ORDER]), F.col("category")
-    )
-    entries_stream_df = (
-        entries_df.filter(F.col("category").isin(*list(kernels.CATEGORY_ORDER)))
-        .withColumn("__cat_ord", cat_ord)
-        .orderBy("__cat_ord", "index")
-        .drop("__cat_ord")
-    )
-
-    def entries_iter_factory():
-        return (r.asDict() for r in entries_stream_df.toLocalIterator())
-    main_title_rows = (
-        pages_df.filter(
-            (F.col("url") == base_url) | (F.col("url") == base_url.rstrip("/"))
-        )
-        .select("title")
-        .limit(1)
-        .collect()
-    )
-    site_name = kernels.site_name_from_title(
-        base_url, main_title_rows[0]["title"] if main_title_rows else None
-    )
-    head_samples = [
-        r["c"]
-        for r in pages_df.orderBy("rank")
-        .select(F.substring(F.coalesce("content", F.lit("")), 1, 500).alias("c"))
-        .limit(5)
-        .collect()
-    ]
-    site_summary = kernels.site_summary_from_samples(head_samples)
-
-    generated_at = generated_at or datetime.now(timezone.utc).isoformat()
-    metadata = {  # 15 keys, ref llmsgen/generator/llms_generator.py:194 (pyc)
-        "source_url": base_url,
-        "domain": kernels.extract_domain_from_url(base_url),
-        "total_pages_crawled": n_pages,
-        "total_entries_processed": len(entries) if needs_entry_list else n_pages,
-        "generated_at": generated_at,
-        "model_used": "deterministic-fallback",
-        "model_display_name": "Deterministic fallback (v2 testing mode)",
-        "export_format": export_format,
-        "processing_time_seconds": round(time.time() - start, 2),
-        "batch_size": None,
-        "parallel_workers": None,
-        "max_full_text_pages": max_full_text_pages,
-        "full_text_only_mode": full_text_only,
-        "crawl_strategy_used": crawl_strategy,
-        "include_full_text": include_full_text,
-    }
-    paths = writers.write_output_files(
-        output_dir,
-        base_url,
-        entries,
-        metadata,
-        export_format,
-        include_full_text,
-        full_text_only,
-        pages_df=pages_df,
-        site_name=site_name,
-        site_summary=site_summary,
-        style=output_style,
-        entries_iter_factory=entries_iter_factory,
-        entries_index_iter_factory=None if needs_entry_list else entries_index_iter_factory,
-    )
-    # bounded per-page summaries (no content) for callers/tests
-    pages = (
-        [
-            r.asDict()
+        head_samples = [
+            r["c"]
             for r in pages_df.orderBy("rank")
-            .select("rank", "url", "title", "word_count", "score", "depth", "discovery_phase")
+            .select(F.substring(F.coalesce("content", F.lit("")), 1, 500).alias("c"))
+            .limit(5)
             .collect()
         ]
-        if collect_entries
-        else None
-    )
-    warc_paths = None
-    if warc_out:
-        # archive the crawl (replayable store: `cli from-warc` re-distills
-        # without refetching) — executor-side shard writes, content never
-        # lands on the driver
-        from ..sources import warc as warc_mod
+        site_summary = kernels.site_summary_from_samples(head_samples)
 
-        warc_paths = warc_mod.write_archive_files(
-            warc_mod.pages_to_warc_blobs(pages_df), warc_out
+        generated_at = generated_at or datetime.now(timezone.utc).isoformat()
+        metadata = {  # 15 keys, ref llmsgen/generator/llms_generator.py:194 (pyc)
+            "source_url": base_url,
+            "domain": kernels.extract_domain_from_url(base_url),
+            "total_pages_crawled": n_pages,
+            "total_entries_processed": n_pages,
+            "generated_at": generated_at,
+            "model_used": "deterministic-fallback",
+            "model_display_name": "Deterministic fallback (v2 testing mode)",
+            "export_format": export_format,
+            "processing_time_seconds": round(time.time() - start, 2),
+            "batch_size": None,
+            "parallel_workers": None,
+            "max_full_text_pages": max_full_text_pages,
+            "full_text_only_mode": full_text_only,
+            "crawl_strategy_used": crawl_strategy_label,
+            "include_full_text": include_full_text,
+        }
+        paths = writers.write_output_files(
+            output_dir, base_url, entries_df, pages_df, metadata,
+            site_name, site_summary, style=output_style,
         )
-        metadata["warc_paths"] = warc_paths
-    pages_df.unpersist()
+        entries = pages = None
+        if collect_entries:
+            # bounded per-entry and per-page summaries (no content)
+            entries = [r.asDict() for r in entries_df.orderBy("index").collect()]
+            pages = [
+                r.asDict()
+                for r in pages_df.orderBy("rank")
+                .select("rank", "url", "title", "word_count", "score", "depth", "discovery_phase")
+                .collect()
+            ]
+        if warc_out:
+            # archive the crawl (replayable store: `cli from-warc` re-distills
+            # without refetching) — executor-side shard writes, content never
+            # lands on the driver
+            from ..sources import warc as warc_mod
+
+            metadata["warc_paths"] = warc_mod.write_archive_files(
+                warc_mod.pages_to_warc_blobs(pages_df), warc_out
+            )
+    finally:
+        release(held)
     return {
         "paths": paths,
         "metadata": metadata,
-        "entries": entries if needs_entry_list else None,
+        "entries": entries,
         "pages": pages,
         # T4 telemetry: how many descriptions were actually computed this run
         # (None = cache disabled); a warm re-run reports 0.
@@ -345,6 +315,9 @@ def generate_llmstxt_from_warc(
     from ..operators import ranking
     from ..sources import warc
 
+    _check_output_options(
+        distill_kw.get("export_format", "text"), distill_kw.get("output_style", "v2")
+    )
     scanned = warc.read_warc_text(spark, warc_path)
     kept = scanned.filter(
         F.col("status").isin(*[int(s) for s in statuses])

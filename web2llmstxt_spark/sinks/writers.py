@@ -1,19 +1,22 @@
-"""Output sinks: llms.txt / llms-full.txt / JSON / YAML (v2 spec format).
+"""Output sinks: llms.txt / llms-full.txt / JSON / YAML, v2 and v1 text.
 
 Reference: ``llmsgen/utils/file_utils.py:94-222`` (write_text_output /
-write_json_output / write_yaml_output / write_output_files), golden example
-``/root/reference/output/example.com-llms.txt``.
+write_json_output / write_yaml_output / write_output_files) and the v1
+text writers (generator/llms_generator.py:789-821).
 
-Scale design (round-1 fix): the final artifacts are single driver-side text
-files, but their ASSEMBLY must not materialize page CONTENT on the driver.
+The reference renders every file from in-memory lists. Here each format has
+one path: a streaming writer fed by ``toLocalIterator``, so the driver holds
+one Arrow partition at a time and never the entry list or page content.
 
-- llms.txt needs only the bounded entries projection (url/title/description/
-  category — one rendered bullet per entry, inherently driver-sized) plus a
-  five-sample site summary; the per-entry content fallback is computed
-  DISTRIBUTED in plans/distill.py (``render_desc``).
-- llms-full.txt streams rank-ordered pages through ``toLocalIterator()`` —
-  one partition in driver memory at a time, never the full corpus.
-- JSON with ``include_full_text`` streams ``full_content_pages`` row by row.
+- ``write_output_files`` is the only dispatch. It takes the distributed
+  entries and pages tables and builds both entry orders itself: canonical
+  category position then index for the v2 llms.txt, index alone for json,
+  yaml and v1.
+- Entries carry no page content: each one's description fallback is the
+  ``render_desc`` column computed distributed in plans/distill.py
+  (``kernels.final_description`` is its Python reference).
+- llms-full.txt and the json/yaml full-text sections stream rank-ordered
+  pages.
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ import itertools
 import json
 import os
 from typing import Iterable, Iterator
+
+from pyspark.sql import functions as F
 
 from ..functions import kernels
 
@@ -33,56 +38,6 @@ except ImportError:  # pragma: no cover
     _HAS_YAML = False
 
 
-def final_description(desc: str | None, page_content: str | None) -> str:
-    """The render-time description fallback (ref file_utils.py:124-130).
-
-    Byte-identical twin of the distributed ``render_desc`` column in
-    plans/distill.py: BOTH sides split only a 4096-char prefix on the pinned
-    ASCII whitespace class (Java ``\\s`` == kernels._WS_ASCII_RE), so a page
-    whose first 30 tokens span >4 KB (minified JS, base64 blobs) truncates
-    identically here and in the Spark plan instead of diverging.
-    """
-    if desc == "N/A (full_text_only mode)" or not desc:
-        return (
-            " ".join(kernels.ws_tokens(page_content[:4096])[:30]) + "..."
-            if page_content
-            else "No content available."
-        )
-    return desc
-
-
-def render_llms_txt_prepared(
-    site_name: str,
-    site_summary: str,
-    entries: list[dict],
-    metadata: dict,
-) -> str:
-    """llms.txt from PREPARED inputs: site name/summary already computed from
-    bounded samples, entries carrying their final description (``render_desc``
-    if present, else ``description`` — fallbacks pre-applied distributed).
-    Byte-identical to the legacy list-based renderer."""
-    out = []
-    out.append(f"# {site_name}\n")
-    out.append(f"> {site_summary}\n")
-    total = metadata.get("total_pages_crawled", len(entries))
-    generated_date = metadata.get("generated_at", "").split("T")[0]
-    out.append(f"Generated from {total} pages on {generated_date} using automated crawling.\n")
-
-    by_cat: dict[str, list[dict]] = {}
-    for e in entries:
-        by_cat.setdefault(e["category"], []).append(e)
-    for category in kernels.CATEGORY_ORDER:
-        if category not in by_cat:
-            continue
-        out.append(f"## {category}\n")
-        lines = []
-        for e in by_cat[category]:
-            desc = e.get("render_desc") or final_description(e.get("description"), None)
-            lines.append(f"- [{e.get('title', 'Untitled')}]({e.get('url', '#')}): {desc}")
-        out.append("\n".join(lines) + "\n")
-    return "\n".join(out)
-
-
 def write_llms_txt_stream(
     path: str,
     site_name: str,
@@ -90,14 +45,13 @@ def write_llms_txt_stream(
     entries_iter: Iterable,
     metadata: dict,
 ) -> None:
-    """Stream the v2 llms.txt from an entries iterator ORDERED BY
-    (category_ord, index) — byte-identical to ``render_llms_txt_prepared``
-    without ever holding the O(pages) entry list on the driver (the iterator
-    is a toLocalIterator over the distributed entries table; driver memory =
-    one Arrow partition of bounded, content-free rows).
+    """Stream the v2 llms.txt (ref file_utils.py:107-136) from entries
+    ordered by (canonical category position, index), without ever holding
+    the O(pages) entry list on the driver: driver memory = one Arrow
+    partition of bounded, content-free rows.
 
-    Category sections emerge from order transitions in the sorted stream, so
-    the caller must sort by the canonical kernels.CATEGORY_ORDER position.
+    Category sections emerge from order transitions in the stream;
+    ``write_output_files`` builds that order (``_category_ordered``).
     """
     with open(path, "w", encoding="utf-8") as f:
         w = _JoinWriter(f)
@@ -109,8 +63,7 @@ def write_llms_txt_stream(
         cur_cat = None
         for e in entries_iter:
             cat = e["category"]
-            desc = e.get("render_desc") or final_description(e.get("description"), None)
-            line = f"- [{e.get('title', 'Untitled')}]({e.get('url', '#')}): {desc}"
+            line = f"- [{e.get('title', 'Untitled')}]({e.get('url', '#')}): {e['render_desc']}"
             if cat != cur_cat:
                 if cur_cat is not None:
                     f.write("\n")  # close the previous block's trailing newline
@@ -121,24 +74,6 @@ def write_llms_txt_stream(
                 f.write("\n" + line)  # continue the block element in place
         if cur_cat is not None:
             f.write("\n")  # final block's trailing newline
-
-
-def render_llms_txt(base_url: str, entries: list[dict], pages: list[dict], metadata: dict) -> str:
-    """The llms.txt spec document from in-memory lists (golden-tested twin of
-    ref llmsgen/utils/file_utils.py:107-136). Production path: compute
-    ``render_desc`` distributed and call ``render_llms_txt_prepared``."""
-    content_map = {p.get("url"): p.get("content", "") for p in pages}
-    prepared = [
-        {**e, "render_desc": final_description(e.get("description"), content_map.get(e.get("url", ""), ""))}
-        for e in entries
-    ]
-    metadata = {**metadata, "total_pages_crawled": metadata.get("total_pages_crawled", len(pages))}
-    return render_llms_txt_prepared(
-        kernels.extract_site_name(base_url, pages),
-        kernels.generate_site_summary(pages),
-        prepared,
-        metadata,
-    )
 
 
 class _JoinWriter:
@@ -163,8 +98,8 @@ def write_llms_full_stream(
     metadata: dict,
 ) -> None:
     """Stream llms-full.txt (ref file_utils.py:139-160) from a rank-ordered
-    iterator of rows/dicts with (title, url, content). Byte-identical to the
-    legacy full-list renderer; driver memory = one Arrow partition."""
+    iterator of rows/dicts with (title, url, content); driver memory = one
+    Arrow partition."""
     max_full = metadata.get("max_full_text_pages")
     n_write = total_pages if max_full is None else min(total_pages, max_full)
     with open(path, "w", encoding="utf-8") as f:
@@ -186,51 +121,6 @@ def write_llms_full_stream(
             w.emit(f"**URL:** {d.get('url', '#')}\n")
             w.emit(d.get("content", "No content available."))
             w.emit("\n---\n")
-
-
-def render_llms_full_txt(base_url: str, pages: list[dict], metadata: dict) -> str:
-    """Legacy list-based llms-full renderer (kept as the byte-parity twin of
-    ``write_llms_full_stream``; see tests/test_sinks_stream.py)."""
-    out = [
-        f"# {base_url} llms-full.txt",
-        f"# Generated on {metadata.get('generated_at', '')} using {metadata.get('model_used', 'N/A')}",
-        f"# Total pages crawled: {metadata.get('total_pages_crawled', len(pages))}",
-        f"# Processing time: {metadata.get('processing_time_seconds', 'N/A')}s",
-    ]
-    pages_to_write = pages
-    max_full = metadata.get("max_full_text_pages")
-    if max_full is not None and len(pages) > max_full:
-        pages_to_write = pages[:max_full]
-        out.append(
-            f"# Displaying {len(pages_to_write)} of {len(pages)} crawled pages due to limit."
-        )
-    out.append("")
-    for i, page in enumerate(pages_to_write, 1):
-        out.append(f"## Page {i}: {page.get('title', 'Untitled')}")
-        out.append(f"**URL:** {page.get('url', '#')}\n")
-        out.append(page.get("content", "No content available."))
-        out.append("\n---\n")
-    return "\n".join(out)
-
-
-# ------------------------------------------------------------ v1 format twins
-# The reference ships TWO text formats; v2 (above) is the gold spec, v1
-# (generator/llms_generator.py:789-821) uses `# DOMAIN - LLMs.txt` headers and
-# `--- Page i ---` blocks. Selected via write_output_files(style="v1").
-
-
-def render_llms_txt_v1(domain: str, entries: list[dict], generated_on: str) -> str:
-    """v1 llms.txt (generator/llms_generator.py:789-801): byte-exact
-    concatenation semantics of the reference's `content +=` chain."""
-    content = f"# {domain.upper()} - LLMs.txt\n"
-    content += f"# Generated on {generated_on}\n"
-    content += f"# Total pages: {len(entries)}\n\n"
-    for e in entries:
-        content += f"## {e.get('title', 'Untitled')}\n"
-        content += f"URL: {e.get('url', '')}\n"
-        desc = e.get("render_desc") or final_description(e.get("description"), None)
-        content += f"Description: {desc}\n\n"
-    return content
 
 
 def write_llms_full_v1_stream(
@@ -357,10 +247,10 @@ def write_llms_txt_v1_stream(
     total_entries: int,
     generated_on: str,
 ) -> None:
-    """v1 llms.txt (generator/llms_generator.py:789-801) streamed per entry;
-    byte-identical to render_llms_txt_v1 given the same entry sequence. The
-    header's entry count is passed in (known from the crawl's page count) so
-    the stream needs no pre-pass."""
+    """v1 llms.txt (generator/llms_generator.py:789-801) streamed per entry,
+    byte-exact to the reference's ``content +=`` chain. The header's entry
+    count is passed in (known from the crawl's page count) so the stream
+    needs no pre-pass."""
     with open(path, "w", encoding="utf-8") as f:
         f.write(f"# {domain.upper()} - LLMs.txt\n")
         f.write(f"# Generated on {generated_on}\n")
@@ -368,46 +258,60 @@ def write_llms_txt_v1_stream(
         for e in entries_iter:
             f.write(f"## {e.get('title', 'Untitled')}\n")
             f.write(f"URL: {e.get('url', '')}\n")
-            desc = e.get("render_desc") or final_description(e.get("description"), None)
-            f.write(f"Description: {desc}\n\n")
+            f.write(f"Description: {e['render_desc']}\n\n")
+
+
+def _rows(df) -> Iterator[dict]:
+    return (r.asDict() for r in df.toLocalIterator())
+
+
+def _index_ordered(entries_df) -> Iterator[dict]:
+    """The json/yaml/v1 entry order: crawl index (== rank) alone."""
+    return _rows(entries_df.orderBy("index"))
+
+
+def _category_ordered(entries_df) -> Iterator[dict]:
+    """The v2 llms.txt entry order: categories outside kernels.CATEGORY_ORDER
+    are dropped (the reference renders only the ordered sections), the rest
+    sorted by canonical position then crawl index. The sort is distributed
+    (a range shuffle over content-free rows)."""
+    cat_ord = F.array_position(
+        F.array(*[F.lit(c) for c in kernels.CATEGORY_ORDER]), F.col("category")
+    )
+    return _rows(
+        entries_df.filter(F.col("category").isin(*kernels.CATEGORY_ORDER))
+        .orderBy(cat_ord, "index")
+    )
 
 
 def write_output_files(
     output_dir: str,
     base_url: str,
-    entries: list[dict],
+    entries_df,
+    pages_df,
     metadata: dict,
-    export_format: str = "text",
-    include_full_text: bool = False,
-    full_text_only: bool = False,
-    pages_df=None,
-    site_name: str | None = None,
-    site_summary: str | None = None,
+    site_name: str,
+    site_summary: str,
     style: str = "v2",
-    entries_iter_factory=None,
-    entries_index_iter_factory=None,
 ) -> list[str]:
     """Dispatch on format (ref llmsgen/utils/file_utils.py:204-222); returns
-    written paths. ``pages_df`` (rank-ordered crawl output) is only streamed,
-    never collected. ``style``: 'v2' (gold spec, default) or 'v1'
-    (`# DOMAIN - LLMs.txt` / `--- Page i ---` blocks,
-    generator/llms_generator.py:789-821).
+    written paths, llms.txt before llms-full.txt.
 
-    ``entries_iter_factory``: zero-arg callable yielding entry dicts ordered
-    by (category_ord, index). When given, the v2 llms.txt body streams from
-    it (write_llms_txt_stream) and never needs the ``entries`` list — pass
-    entries=[] and the artifact is still complete.
-
-    ``entries_index_iter_factory``: zero-arg callable yielding entry dicts
-    ordered by index (the json/yaml/v1 entry order). When given, those
-    formats stream from it instead of the ``entries`` list — EVERY format is
-    then O(1) driver memory."""
+    ``entries_df``: the categorized entries (plans/distill.py), carrying
+    ``render_desc``; ``pages_df``: the rank-ordered crawl output. Both are
+    only streamed, never collected. The format and the full-text switches are
+    the run's own record: ``metadata['export_format']``,
+    ``['include_full_text']`` and ``['full_text_only_mode']``, so the files
+    always agree with the metadata written beside them. ``style``: 'v2' (gold
+    spec, default) or 'v1' (`# DOMAIN - LLMs.txt` / `--- Page i ---` blocks,
+    generator/llms_generator.py:789-821)."""
     os.makedirs(output_dir, exist_ok=True)
     domain = kernels.extract_domain_from_url(base_url)
     written = []
-    fmt = export_format.lower()
-    total_pages = metadata.get("total_pages_crawled", 0)
-    total_entries = metadata.get("total_entries_processed", len(entries))
+    fmt = metadata["export_format"]
+    include_full_text = metadata["include_full_text"]
+    full_text_only = metadata["full_text_only_mode"]
+    total_pages = metadata["total_pages_crawled"]
 
     def full_pages_iter():
         return (
@@ -416,15 +320,10 @@ def write_output_files(
             .toLocalIterator()
         )
 
-    def indexed_entries():
-        if entries_index_iter_factory is not None:
-            return entries_index_iter_factory()
-        return iter(entries)
-
     if fmt == "json":
         path = os.path.join(output_dir, f"{domain}-llms.json")
         write_json_stream(
-            path, indexed_entries(), metadata,
+            path, _index_ordered(entries_df), metadata,
             full_pages_iter() if include_full_text else None,
         )
         written.append(path)
@@ -442,15 +341,16 @@ def write_output_files(
             )
         path = os.path.join(output_dir, f"{domain}-llms.yaml")
         write_yaml_stream(
-            path, metadata, (_entry_public(e) for e in indexed_entries()), full_iter
+            path, metadata, (_entry_public(e) for e in _index_ordered(entries_df)), full_iter
         )
         written.append(path)
     elif style == "v1":
         generated_on = metadata.get("generated_at", "").replace("T", " ").split(".")[0]
+        total_entries = metadata["total_entries_processed"]
         if not full_text_only and total_entries:
             path = os.path.join(output_dir, f"{domain}-llms.txt")
             write_llms_txt_v1_stream(
-                path, domain, indexed_entries(), total_entries, generated_on
+                path, domain, _index_ordered(entries_df), total_entries, generated_on
             )
             written.append(path)
         if include_full_text or full_text_only:
@@ -460,13 +360,9 @@ def write_output_files(
     else:
         if not full_text_only:
             path = os.path.join(output_dir, f"{domain}-llms.txt")
-            name = site_name or kernels.site_name_from_title(base_url, None)
-            summary = site_summary or kernels.site_summary_from_samples([])
-            if entries_iter_factory is not None:
-                write_llms_txt_stream(path, name, summary, entries_iter_factory(), metadata)
-            else:
-                with open(path, "w", encoding="utf-8") as f:
-                    f.write(render_llms_txt_prepared(name, summary, entries, metadata))
+            write_llms_txt_stream(
+                path, site_name, site_summary, _category_ordered(entries_df), metadata
+            )
             written.append(path)
         if include_full_text or full_text_only:
             path = os.path.join(output_dir, f"{domain}-llms-full.txt")

@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import udfs
+from ..session import release
 
 CACHE_SCHEMA = "cache_key string, description string"
 
@@ -124,12 +125,14 @@ class DescriptionCache:
         """Write the miss-delta as a new ``delta-<run_id>/`` dir (see the
         class concurrency contract). Returns the number of NEW keys written."""
         new_rows = new_rows.localCheckpoint(eager=True)  # sever lineage to cache files
-        n_new = new_rows.count()
-        if n_new == 0:
-            return 0
-        delta_path = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
-        new_rows.write.mode("error").parquet(delta_path)
-        return n_new
+        try:
+            n_new = new_rows.count()
+            if n_new:
+                delta_path = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
+                new_rows.write.mode("error").parquet(delta_path)
+            return n_new
+        finally:
+            release([new_rows])
 
     def compact(self) -> int:
         """Fold all deltas into one (maintenance; SINGLE-writer by contract —
