@@ -90,7 +90,7 @@ def main() -> None:
 Same job, same input (synthetic web: {meta['n_pages']} pages, {len(meta['seeds'])} seeds,
 {OUT_LINKS} out-links/page, budget {BUDGET}); `local[{N}]` vs `local[{4 * N}]`
 (no real cluster in the sandbox — see BASELINE.md). Pipeline measured: BFS
-frontier (Bloom seen-filter, native JVM scoring, pandas-UDF link extraction /
+frontier (Bloom URL-seen filter, native JVM scoring, pandas-UDF link extraction /
 URL normalization, budget cuts) + distill (describe, categorize, text
 profile, SimHash dedup). Warmup (codegen compile, python-worker spawn)
 excluded from the clock.

@@ -35,7 +35,6 @@ from web2llmstxt_spark.sources.corpus import generate_corpus
 
 def main() -> None:
     max_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 25
-    seen_filter = sys.argv[2] if len(sys.argv) > 2 else "bloom"
     # No .master(): spark-submit owns it. Only engine-required session conf.
     spark = (
         SparkSession.builder.appName("web2llmstxt-submit-job")
@@ -46,9 +45,7 @@ def main() -> None:
     )
     corpus = generate_corpus(seed=7, n_hosts=2, pages_per_host=40)
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES)
-    crawler = FrontierCrawler(
-        spark, site, CrawlConfig(max_pages=max_pages), seen_filter=seen_filter
-    )
+    crawler = FrontierCrawler(spark, site, CrawlConfig(max_pages=max_pages))
     pages_df, seen_df = crawler.crawl(seeds=[(i, u) for i, u, _ in corpus.seeds])
     pages = pages_df.count()
     seen = seen_df.count()

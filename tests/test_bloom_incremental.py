@@ -54,21 +54,16 @@ def test_bloom_state_is_incremental(spark, tmp_path, durable):
     assert not misses, f"false negatives: {misses[:5]}"
 
 
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_bloom_overload_triggers_doubling_rebuild(spark, seen_filter):
+def test_bloom_overload_triggers_doubling_rebuild(spark):
     """With a deliberately tiny filter, the load-factor check must fire and
-    rebuild at double width — for both seen filters, which share one
-    rebuild path — and the crawl must STILL equal the oracle's, field for
-    field in rank order, with the same seen set."""
+    rebuild at double width, and the crawl must STILL equal the oracle's,
+    field for field in rank order, with the same seen set."""
     corpus = generate_corpus(seed=19, n_hosts=1, pages_per_host=60)
     cfg = CrawlConfig(max_pages=20)
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
 
-    engine = FrontierCrawler(
-        spark, site, cfg, robots_rules=corpus.robots_rules, seen_filter=seen_filter
-    )
-    # capacity ~6 URLs/bucket for a Bloom bitmap at 10 bits/key, 3 for a
-    # 4-slot cuckoo table at its 0.84 load bound
+    engine = FrontierCrawler(spark, site, cfg, robots_rules=corpus.robots_rules)
+    # capacity ~6 URLs/bucket for a Bloom bitmap at 10 bits/key
     engine.bloom_m_bits = 64
     seeds = [(sid, url) for sid, url, _ in corpus.seeds]
     pages_df, seen_df = engine.crawl(seeds)

@@ -18,6 +18,17 @@ def _site(spark, corpus):
     return spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
 
 
+def _pages(spark, n=12):
+    return spark.createDataFrame(
+        [
+            (f"https://r.example/p{i}", f"Page {i}", f"body text number {i} " * 6, None,
+             24, 1.0, 1, "crawl", 0, i)
+            for i in range(n)
+        ],
+        schemas.PAGES,
+    )
+
+
 def test_cache_key_matches_reference_formula(spark):
     """Spark cache_key == Python f"{url}:{md5(f'{title}|||{content[:1000]}')}"
     (models/client.py:68-78), incl. unicode + >1000-char content."""
@@ -200,16 +211,9 @@ def test_injected_model_sees_only_cache_misses(spark, tmp_path):
 
 def test_distill_releases_its_caches(spark, tmp_path, persisted):
     """distill_to_output with the description cache persists the pages, the
-    describe checkpoint and the cache delta's checkpoint; none of them may
-    outlive the call. Two calls in one session, the second warm."""
-    pages_df = spark.createDataFrame(
-        [
-            (f"https://r.example/p{i}", f"Page {i}", f"body text number {i} " * 6, None,
-             24, 1.0, 1, "crawl", 0, i)
-            for i in range(12)
-        ],
-        schemas.PAGES,
-    )
+    described misses and the entries checkpoint; none of them may outlive
+    the call. Two calls in one session, the second warm."""
+    pages_df = _pages(spark)
     cache_dir = str(tmp_path / "desc_cache")
     news = []
     for run in range(2):
@@ -221,3 +225,40 @@ def test_distill_releases_its_caches(spark, tmp_path, persisted):
         assert persisted() <= before, f"call {run} left persisted RDDs"
         news.append(res["desc_cache_new"])
     assert news == [12, 0]
+
+
+def test_each_cache_miss_described_once(spark, tmp_path):
+    """The model sees each cache miss exactly once per run: the entries and
+    the write-through delta share one materialization of the described
+    misses, so a cold run calls it desc_cache_new times and a warm run
+    never."""
+    described = spark.sparkContext.accumulator(0)
+
+    def counting_model(titles, contents, urls):
+        described.add(len(titles))
+        return ("MODEL: " + titles.fillna("")).str.upper()
+
+    pages_df = _pages(spark)
+    cache_dir = str(tmp_path / "desc_cache")
+    runs = []
+    for run in range(2):
+        before = described.value
+        res = distill_to_output(
+            pages_df, "https://r.example/", str(tmp_path / f"o{run}"),
+            desc_cache_dir=cache_dir, describe_fn=counting_model,
+        )
+        runs.append((res["desc_cache_new"], described.value - before))
+    assert runs == [(12, 12), (0, 0)]
+
+
+def test_compact_releases_its_checkpoint(spark, tmp_path, persisted):
+    """compact() reads the cache fully before deleting the old deltas; that
+    checkpoint must not outlive the call."""
+    from web2llmstxt_spark.state.desc_cache import CACHE_SCHEMA, DescriptionCache
+
+    cache = DescriptionCache(spark, str(tmp_path / "cache"))
+    for rows in ([("k1", "one"), ("k2", "two")], [("k3", "three")]):
+        cache.merge_and_save(spark.createDataFrame(rows, CACHE_SCHEMA))
+    before = persisted()
+    assert cache.compact() == 3
+    assert persisted() <= before, "compact() left its checkpoint persisted"

@@ -408,8 +408,9 @@ def test_superstep_url_hint_taken_and_invariant(spark):
     whenever the previous checkpoint's Observation proved the frontier
     small (frontier.py _fetch_attempts). Assert (a) the hint path is
     actually TAKEN at depth >= 1 — not just at depth 0 — and (b) a
-    hint-incapable fetcher (URL_HINT_MAX=0) crawls byte-identically, so
-    the pruning is pure scan optimization."""
+    hint-incapable fetcher (URL_HINT_MAX=0) gets no hint at any depth,
+    depth 0 included (one rule for every fetch), and crawls
+    byte-identically, so the pruning is pure scan optimization."""
     from web2llmstxt_spark.operators.frontier import TableFetcher
 
     corpus = generate_corpus(seed=47, n_hosts=2, pages_per_host=25)
@@ -444,6 +445,7 @@ def test_superstep_url_hint_taken_and_invariant(spark):
     engine2 = FrontierCrawler(spark, site, cfg, robots_rules=corpus.robots_rules, fetcher=nohint)
     pages2_df, seen2_df = engine2.crawl(seeds)
     plain_pages = [tuple(r) for r in pages2_df.select(*PAGE_FIELDS).orderBy("rank").collect()]
+    assert nohint.hints[0] is None, "URL_HINT_MAX=0 fetcher got the seed hint"
     assert all(h is None for h in nohint.hints[1:]), (
         f"URL_HINT_MAX=0 fetcher still got a superstep hint: {nohint.hints}"
     )

@@ -1,8 +1,18 @@
 """Structured Streaming operators: hermetic file-source -> memory-sink tests."""
 
+import time
+
 import pyspark.sql.functions as F
+import pytest
 
 from web2llmstxt_spark.streaming import stream_crawl as SC
+
+
+@pytest.fixture(autouse=True)
+def no_query_left_running(spark):
+    """Every drain ends its query: none may outlive the test that started it."""
+    yield
+    assert spark.streams.active == []
 
 
 def test_windowed_crawl_metrics(spark, tmp_path):
@@ -35,7 +45,11 @@ def test_politeness_gate_token_bucket(spark, tmp_path):
     spark.createDataFrame(rows, "host string, url string").repartition(1).write.parquet(urls_dir)
     stream = spark.readStream.schema("host string, url string").parquet(urls_dir)
     gated = SC.politeness_gate(stream, capacity_per_host=4)
+    t = time.monotonic()
     SC.run_available_now(gated, "gated", str(tmp_path / "ck2"))
+    # the gate's processing-time timeout keeps an AvailableNow query alive;
+    # the drain must still end once the input is committed
+    assert time.monotonic() - t < 30
     out = spark.table("gated").collect()
     assert len(out) == 30
     by_host = {}

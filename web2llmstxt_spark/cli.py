@@ -38,9 +38,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="text output format variant")
     c.add_argument("--desc-cache-dir", default=None,
                    help="parquet description-cache table (T4)")
-    c.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
-                   help="URL-seen prefilter for the systematic engine "
-                        "(cuckoo supports deletion; both correctness-neutral)")
     c.add_argument("--warc-out", default=None,
                    help="also archive the crawled pages as .warc.gz shards "
                         "into this directory (replayable via from-warc)")
@@ -274,7 +271,6 @@ def main(argv: list[str] | None = None) -> int:
             full_text_only=args.full_text_only,
             crawl_strategy=args.strategy,
             desc_cache_dir=args.desc_cache_dir,
-            seen_filter=args.seen_filter,
             output_style=args.style,
             sitemap_blobs=sitemap_blobs,
             robots_text=robots_text,

@@ -37,8 +37,6 @@ the same columns through ``_probe_positions``, so the sides cannot drift.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -214,29 +212,3 @@ def needs_rebuild(max_keys_per_bucket: int, m_bits: int) -> bool:
     """Load-factor check: past BITS_PER_KEY the false-positive rate degrades
     and maybe-seen survivors flood the exact join — double and rebuild."""
     return max_keys_per_bucket * BITS_PER_KEY > m_bits
-
-
-def bloom_prefilter(cand: DataFrame, seen: DataFrame, num_buckets: int) -> DataFrame:
-    """One-shot convenience (builds state from seen, then filters): kept for
-    callers without superstep state. Inside FrontierCrawler the incremental
-    path above is used instead."""
-    n = seen.count()
-    m_bits = max(1024, int(math.ceil(n * BITS_PER_KEY / 8)) * 8) if n else 1024
-    state = merge_bitmaps(None, delta_bitmaps(seen, num_buckets, m_bits))
-    return prefilter_with_state(cand, state, seen, num_buckets)
-
-
-# ------------------------------------------------- generic filter interface
-# Shared with operators/cuckoo.py so FrontierCrawler can dispatch either
-# membership filter through one name set (north rule: "Bloom/cuckoo").
-
-def delta_state(urls: DataFrame, num_buckets: int, m_bits: int = DEFAULT_M_BITS,
-                salt_hosts: dict | None = None) -> DataFrame:
-    return delta_bitmaps(urls, num_buckets, m_bits, salt_hosts)
-
-
-def merge_state(state: DataFrame | None, delta: DataFrame,
-                m_bits: int | None = None) -> DataFrame:
-    # bitmaps already carry their geometry; m_bits accepted for interface
-    # parity with cuckoo.merge_state (which sizes fresh tables from it)
-    return merge_bitmaps(state, delta)

@@ -1,6 +1,9 @@
-"""Partition-local CUCKOO URL-seen pre-filter — the north rule's second
-membership-filter option ("partition-local Bloom/cuckoo URL-seen filter
-merged per superstep"), drop-in compatible with ``operators/bloom.py``.
+"""Partition-local CUCKOO URL-seen filter — a standalone membership
+operator that supports deletion. The crawl engine's URL-seen filter is the
+Bloom filter (``operators/bloom.py``): the BFS seen set only grows, so the
+crawl never deletes. This operator serves the callers that do: re-crawl
+invalidation (``operators/snapshot.invalidation_set`` -> ``delete_urls``)
+and the registry's ``seen_antijoin_cuckoo`` oracle.
 
 Same contract as the Bloom path: per host-bucket, a compact structure over
 the bucket's seen URLs is cogrouped against the bucket's candidates;
@@ -9,12 +12,12 @@ and only "maybe seen" survivors (false-positive-bounded) pay the exact
 join. No false negatives => ``prefilter_with_state`` composes to exactly
 ``cand.join(seen, 'url', 'left_anti')``.
 
-Why offer cuckoo next to Bloom (Fan et al., "Cuckoo Filter: Practically
+What cuckoo offers next to Bloom (Fan et al., "Cuckoo Filter: Practically
 Better Than Bloom", CoNEXT 2014):
 
 - **Deletion**: a fingerprint of an inserted key can be REMOVED
   (``delete_urls``), which a Bloom bitmap cannot do. For a crawl engine
-  that is re-crawl invalidation: evict a URL from the seen-filter so a
+  that is re-crawl invalidation: evict a URL from the URL-seen filter so a
   later superstep may attempt it again, without rebuilding state from the
   seen table. (Standard cuckoo caveat, kept: deleting a key that was never
   inserted may evict another key's identical fingerprint — callers must
@@ -23,12 +26,11 @@ Better Than Bloom", CoNEXT 2014):
   rate at 4-way association vs ~1.2% for the Bloom sizing at the same
   byte budget — fewer "maybe seen" survivors reach the exact join. The
   trade is capacity: the same ``m_bits`` of memory holds ~0.84*m_bits/16
-  keys (vs m_bits/10 for Bloom), so the doubling rebuild triggers earlier.
+  keys (vs m_bits/10 for Bloom).
 - **Two reads per probe** (both candidate buckets), vs K=4 scattered bit
   reads for Bloom — and both are one vectorized numpy gather here.
 
-Structure (per host-bucket row, same state schema as Bloom so the
-frontier's combined-state checkpoint carries either): a 4-slot-per-bucket
+Structure (per host-bucket row, in the Bloom state schema): a 4-slot-per-bucket
 table of 16-bit fingerprints. For key hashes (h1, h2) from the SAME two
 JVM ``xxhash64`` columns the Bloom path uses (``bloom._hash_cols`` — zero
 per-URL Python on either side):
@@ -45,8 +47,8 @@ per-item Python for the common case); only items whose BOTH buckets are
 full take the bounded per-item eviction walk, and a walk that exhausts
 MAX_KICKS parks the fingerprint in a per-bucket overflow stash that the
 probe also checks — membership is NEVER dropped (the no-false-negative
-invariant survives any load), the stash only adds false positives until
-the load-factor rebuild doubles the table.
+invariant survives any load), the stash only adds false positives; size
+``m_bits`` so the load stays under MAX_LOAD.
 
 State/delta rows share the Bloom schema ``(bucket int, bitmap binary,
 n_keys long)``; the binary payload is tagged (0 = table+stash, 1 = packed
@@ -74,7 +76,8 @@ from .bloom import BLOOM_SCHEMA, _bucket_col, _hash_cols
 SLOTS_PER_BUCKET = 4
 #: eviction-walk bound before a fingerprint parks in the overflow stash
 MAX_KICKS = 500
-#: load factor at which the caller should double m_bits and rebuild
+#: achievable load factor of a 4-way table: past it eviction walks lengthen
+#: and the overflow stash starts absorbing inserts
 MAX_LOAD = 0.84
 #: odd multiplier for the partner-index hash of a fingerprint
 _ALT_MULT = 0x5BD1E995
@@ -85,8 +88,7 @@ _TAG_DELTA = 1
 
 def _geometry(m_bits: int) -> tuple[int, int]:
     """(total_slots, num_cuckoo_buckets) for an m_bits memory budget.
-    m_bits is BITS of table memory (same knob the Bloom path doubles on
-    rebuild): 16-bit slots => slots = m_bits/16; m = slots/4 must be a
+    m_bits is BITS of table memory (the Bloom path's width knob): 16-bit slots => slots = m_bits/16; m = slots/4 must be a
     power of two for XOR partner indexing."""
     slots = max(SLOTS_PER_BUCKET, m_bits // 16)
     m = slots // SLOTS_PER_BUCKET
@@ -203,7 +205,7 @@ def delta_state(urls: DataFrame, num_buckets: int, m_bits: int = 0,
     """(bucket, bitmap=tagged packed (h1,h2) pairs, n_keys) for ONE
     increment of URLs. Cuckoo deltas carry raw hashes (table placement
     needs the live table, so it happens at merge) — hashes do not depend
-    on m_bits, which is accepted only for Bloom interface parity. Shuffles
+    on m_bits, which is accepted and unused. Shuffles
     only the increment, never the accumulated state."""
     b = _hash_cols(urls.select("url")).select(
         _bucket_col(F.col("url"), num_buckets, salt_hosts).alias("bucket"),
@@ -239,8 +241,8 @@ def merge_state(state: DataFrame | None, delta: DataFrame,
     """Fold delta hashes into the accumulated per-bucket tables (fresh
     tables at m_bits geometry where no state row exists). Like the Bloom
     merge this shuffles only ≤num_buckets fixed-size rows + the delta
-    payloads — never URLs. n_keys accumulates insertion counts (upper
-    bound on distinct keys, drives the load-factor rebuild)."""
+    payloads — never URLs. n_keys accumulates insertion counts (an upper
+    bound on distinct keys)."""
     _, m = _geometry(m_bits)
     both = delta if state is None else state.unionByName(delta)
 
@@ -340,14 +342,6 @@ def prefilter_with_state(cand: DataFrame, state: DataFrame, seen: DataFrame,
         .join(seen.select("url"), "url", "left_anti")
     )
     return definitely_unseen.unionByName(survivors)
-
-
-def needs_rebuild(max_keys_per_bucket: int, m_bits: int) -> bool:
-    """Past MAX_LOAD of the slot budget, eviction walks lengthen and the
-    stash starts absorbing inserts — double m_bits and rebuild from the
-    checkpointed seen table (same amortized-doubling contract as Bloom)."""
-    slots, _ = _geometry(m_bits)
-    return max_keys_per_bucket > MAX_LOAD * slots
 
 
 # ------------------------------------------------------------------ deletion

@@ -115,13 +115,11 @@ class TableFetcher:
     93-103) becomes a broadcast join of the (small) per-superstep attempt set
     against the corpus."""
 
-    # crawl() passes url_hint= only to fetchers that declare support, so a
-    # user-injected fetcher with the plain fetch(cand) signature keeps working
-    supports_url_hint = True
-
     # IN-list pushdown bound: past this the In-list itself is the bottleneck
     # (expression tree size, per-batch evaluation) and a scan-side prefilter
-    # stops paying for itself vs just streaming the corpus into the join
+    # stops paying for itself vs just streaming the corpus into the join.
+    # crawl() passes url_hint= only to a fetcher that declares a positive
+    # URL_HINT_MAX, so one with the plain fetch(cand) signature keeps working
     URL_HINT_MAX = 8192
 
     def __init__(self, site_pages: DataFrame):
@@ -198,15 +196,11 @@ class ClosedFormFetcher:
     parquet written by generate_corpus_cf from the same params.
     """
 
-    # crawl() may pass url_hint; a scan prefilter is meaningless here (there
-    # is no scan), so accept-and-ignore keeps the call-site contract
-    supports_url_hint = True
-
     def __init__(self, seed: int, n_hosts: int, pages_per_host: int,
                  out_links: int = 40, host_offset: int = 0):
         self.params = (seed, n_hosts, pages_per_host, out_links, host_offset)
 
-    def fetch(self, cand: DataFrame, url_hint=None) -> DataFrame:
+    def fetch(self, cand: DataFrame) -> DataFrame:
         from pyspark.sql.types import (
             ArrayType, BooleanType, IntegerType, StringType, StructField,
             StructType,
@@ -289,7 +283,6 @@ class FrontierCrawler:
         run_dir: str | None = None,
         num_buckets: int = 32,
         use_bloom: bool = True,
-        seen_filter: str = "bloom",
         run_id: str = "run",
         fetcher=None,
         salt_hosts: dict[str, int] | None = None,
@@ -303,18 +296,6 @@ class FrontierCrawler:
         self.run_dir = run_dir
         self.num_buckets = num_buckets
         self.use_bloom = use_bloom
-        # which approximate-membership filter pre-screens the seen anti-join
-        # (north rule: "Bloom/cuckoo"). Both expose the same delta/merge/
-        # probe/prefilter interface and the same no-false-negative contract;
-        # cuckoo additionally supports deletion (cuckoo.delete_urls).
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
-        self.seen_filter = seen_filter
-        if seen_filter == "cuckoo":
-            from . import cuckoo as _filter_mod
-        else:
-            _filter_mod = bloom
-        self._filter_mod = _filter_mod
         # north-rule skew salting: skewed host -> fan-out k; threaded through
         # every Bloom bucket derivation (operators/bloom._bucket_col) so one
         # mega-host's URLs spread over k partitions on both the bitmap and
@@ -357,7 +338,7 @@ class FrontierCrawler:
     def _bucketed(self, df: DataFrame, url_col: str = "url",
                   salt_hosts: dict[str, int] | None = None) -> DataFrame:
         """Host-hash partitioning (north rule): co-locates a host's URLs so
-        seen-filter state and politeness decisions are partition-local.
+        URL-seen filter state and politeness decisions are partition-local.
 
         Delegates the bucket id to ``bloom._bucket_col`` — ONE salted,
         JVM-native implementation shared with the live Bloom prefilter path
@@ -428,18 +409,16 @@ class FrontierCrawler:
 
     # ------------------------------------------------------- superstep state
     def _filter_state(self, urls: DataFrame, state: DataFrame | None = None) -> DataFrame:
-        """Seen-filter state over ``urls`` merged into ``state`` (None: a
-        fresh filter), as a lazy plan at the current ``bloom_m_bits``.
+        """Bloom bitmaps over ``urls`` ORed into ``state`` (None: a fresh
+        filter), as a lazy plan at the current ``bloom_m_bits``.
 
         The ONE place the filter is built: salt_hosts must reach the build
         side (a salted host's keys must land in the bucket the probe reads,
-        else they become false negatives and are re-crawled), and the merge
-        must always see m_bits (cuckoo sizes a fresh table from it; a raw
-        cuckoo delta only becomes a probe-able table through merge_state)."""
-        delta = self._filter_mod.delta_state(
+        else they become false negatives and are re-crawled)."""
+        delta = bloom.delta_bitmaps(
             urls, self.num_buckets, self.bloom_m_bits, self.salt_hosts
         )
-        return self._filter_mod.merge_state(state, delta, self.bloom_m_bits)
+        return bloom.merge_bitmaps(state, delta)
 
     def _advance_bloom(self, attempted_urls: DataFrame, seen_next: DataFrame):
         """Next Bloom state as a lazy plan: OR in only this superstep's
@@ -456,17 +435,23 @@ class FrontierCrawler:
         return self._filter_state(attempted_urls, self._bloom)
 
     def _fetch_attempts(
-        self, todo: DataFrame, bound: int | None, materialized: bool = False
+        self, todo: DataFrame, bound: int | None, materialized: bool = False,
+        urls: list[str] | None = None,
     ) -> DataFrame:
-        """Adaptive scan-pruned fetch for supersteps >= 1.
+        """The ONE fetch call of the crawl, depth 0 and every superstep.
 
-        The depth-0 fetch already pushes the seed list into the corpus scan
-        as an In-predicate (the seed set is the crawl's input, known
-        driver-side). Later supersteps normally can't: the attempt set is
-        distributed. But whenever the attempt set is PROVABLY small — the
-        previous state checkpoint's Observation bounded |frontier| (and
-        cand ⊆ frontier), or the budget cut just counted cand — it is
-        cheaper to materialize the candidate chain once (one tiny job),
+        The rule: the fetcher gets ``url_hint=`` exactly when it declares a
+        positive ``URL_HINT_MAX`` and the crawl knows the attempt set's URL
+        list fits it; every other fetcher (ClosedFormFetcher, HTTP, a
+        user-injected one) sees the plain ``fetch(todo)``.
+
+        ``urls``: the URL list when the driver already holds it — depth 0's
+        seed list, the crawl's input — so no job collects it. Later
+        supersteps normally can't know it: the attempt set is distributed.
+        But whenever it is PROVABLY small — ``bound``, from the previous
+        state checkpoint's Observation of |frontier| (cand ⊆ frontier), or
+        the budget cut's count of cand — it is cheaper to materialize the
+        candidate chain once (one tiny job; none when ``materialized``),
         ship the <= URL_HINT_MAX urls to the driver, and let the fetcher
         prune its corpus scan, than to stream the full documents table
         through the fetch join. That per-superstep O(|corpus|) stream is the
@@ -474,29 +459,18 @@ class FrontierCrawler:
         ~17 s/superstep at BOTH cluster sizes for a 2,718-URL superstep on
         the 6.4 M-page corpus); with the hint such supersteps touch only
         the columnar batches / row groups whose min-max straddle an
-        attempted url. Same Iceberg-metadata-lookup analogy as depth 0, and
-        semantics-free for the same reason (the scan keeps a superset of
-        the left side's join keys).
-
-        `bound` None or > URL_HINT_MAX, or a fetcher with no scan
-        (ClosedFormFetcher, HTTP), falls through to the plain fetch —
-        zero extra jobs on that path.
+        attempted url. The hint is semantics-free (TableFetcher.fetch), and
+        an unknown or too-large bound costs zero extra jobs.
         """
         f = self.fetcher
         hint_max = getattr(f, "URL_HINT_MAX", 0)
-        if not (
-            getattr(f, "supports_url_hint", False)
-            and hint_max
-            and bound is not None
-            and 0 < bound <= hint_max
-        ):
-            return f.fetch(todo)
-        if not materialized:
-            todo = todo.localCheckpoint(eager=True)
-        urls = [r[0] for r in todo.select("url").collect()]
-        if not urls:
-            return f.fetch(todo)
-        return f.fetch(todo, url_hint=urls)
+        if urls is None and bound is not None and 0 < bound <= hint_max:
+            if not materialized:
+                todo = todo.localCheckpoint(eager=True)
+            urls = [r[0] for r in todo.select("url").collect()]
+        if urls and len(urls) <= hint_max:
+            return f.fetch(todo, url_hint=urls)
+        return f.fetch(todo)
 
     def _checkpoint_state(self, frontier_df: DataFrame, bloom_df: DataFrame | None,
                           tag, seen_df: DataFrame | None = None) -> tuple:
@@ -544,7 +518,7 @@ class FrontierCrawler:
                 "bucket", "bitmap", "n_keys"
             )
             mk = m.get("bloom_max_keys")
-            if mk is not None and self._filter_mod.needs_rebuild(int(mk), self.bloom_m_bits):
+            if mk is not None and bloom.needs_rebuild(int(mk), self.bloom_m_bits):
                 self._bloom_rebuild_pending = True
         return seen, frontier, bloom_state, [int(n) for n in m["frontier_by_bucket"]]
 
@@ -620,14 +594,11 @@ class FrontierCrawler:
         n_seeds = len(seed_urls)  # superstep 0's `attempted`, without a job
 
         # --- depth 0: main pages (ref :196-206 (pyc); score 10.0, no wc gate)
-        # The seed URL set is known driver-side (it IS the input), so push it
-        # into the fetch as a scan predicate: the corpus scan prunes columnar
-        # batches / parquet row groups instead of streaming the full table to
-        # probe |seeds| keys. Only for fetchers that declare the kwarg.
-        if getattr(self.fetcher, "supports_url_hint", False):
-            fetched0 = self.fetcher.fetch(seeds_df, url_hint=seed_urls)
-        else:
-            fetched0 = self.fetcher.fetch(seeds_df)
+        # The seed URL set is known driver-side (it IS the input), so the
+        # fetch gets it as the URL hint without a collect: the corpus scan
+        # prunes columnar batches / parquet row groups instead of streaming
+        # the full table to probe |seeds| keys.
+        fetched0 = self._fetch_attempts(seeds_df, None, urls=seed_urls)
         main = (
             fetched0.filter(F.col("success"))
             .withColumn("title2", udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")))
@@ -717,7 +688,7 @@ class FrontierCrawler:
             if self.use_bloom:
                 # Bloom fast path + exact check on maybes == exact anti-join;
                 # bitmaps are accumulated state, NOT rebuilt from seen
-                cand = self._filter_mod.prefilter_with_state(
+                cand = bloom.prefilter_with_state(
                     frontier, self._bloom, seen, self.num_buckets, self.salt_hosts
                 )
             else:

@@ -71,7 +71,7 @@ def snapshot_diff(
 def invalidation_set(diff: DataFrame, key_col: str = "url") -> DataFrame:
     """URLs the next crawl must treat as UNSEEN: changed pages (stale copy)
     and removed pages (dead entry). Feed to `cuckoo.delete_urls` — the
-    reason the cuckoo seen-filter variant exists (Bloom cannot delete;
+    reason the standalone cuckoo filter exists (Bloom cannot delete;
     COVERAGE.md J1)."""
     return diff.filter(F.col("change").isin(CHANGED, REMOVED)).select(key_col)
 

@@ -57,7 +57,6 @@ def generate_llmstxt(
     root_sitemaps: list[str] | None = None,
     output_style: str = "v2",
     collect_entries: bool = False,
-    seen_filter: str = "bloom",
     describe_fn=None,
     warc_out: str | None = None,
 ) -> dict:
@@ -88,11 +87,6 @@ def generate_llmstxt(
     operators/sitemap.py) over ``sitemap_blobs`` (sitemap_url, body) —
     roots from ``root_sitemaps`` or auto-discovery (well-known paths +
     robots ``Sitemap:`` lines in ``robots_text``).
-
-    ``seen_filter`` selects the systematic engine's URL-seen pre-filter:
-    'bloom' (default, no-FN append-only) or 'cuckoo' (supports deletion,
-    operators/cuckoo.py). Both are correctness-neutral — the exact
-    anti-join behind them decides membership; the filter only prunes.
     """
     _check_output_options(export_format, output_style)
     start = time.time()
@@ -133,7 +127,6 @@ def generate_llmstxt(
         )
         crawler = FrontierCrawler(
             spark, site_pages, cfg, robots_rules=robots_rules, run_dir=run_dir,
-            use_bloom=True, seen_filter=seen_filter,
         )
         pages_df, _seen = crawler.crawl(seeds or [(0, base_url)])
     return distill_to_output(
@@ -196,12 +189,11 @@ def distill_to_output(
             entries_df, new_cache = describe_with_cache(
                 pages_df, cache.load(), describe_fn=describe_fn
             )
-            # merge_and_save is append-only (new delta dir, never rewrites the
-            # files entries' lineage reads), so this checkpoint is not a
-            # correctness requirement — it stays because entries_df feeds
-            # several actions (the sink streams, the optional collect) and the
-            # checkpoint computes describe once; entries carry no page
-            # content, so it is bounded.
+            held.append(new_cache)
+            # entries_df feeds several actions (the sink streams, the optional
+            # collect): checkpoint it so the hits join runs once; entries
+            # carry no page content, so it is bounded. merge_and_save is
+            # append-only (a new delta dir, never the files the hits read).
             entries_df = entries_df.localCheckpoint(eager=True)
             held.append(entries_df)
             desc_cache_new = cache.merge_and_save(new_cache)

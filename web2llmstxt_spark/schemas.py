@@ -50,41 +50,6 @@ SITE_PAGES = StructType(
     ]
 )
 
-SEEDS = StructType(
-    [
-        StructField("seed_id", IntegerType(), False),
-        StructField("url", StringType(), False),
-        StructField("priority", DoubleType(), False),
-    ]
-)
-
-ROBOTS_RULES = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("agent", StringType(), False),
-        StructField("rule", StringType(), False),       # 'allow' | 'disallow'
-        StructField("path_prefix", StringType(), False),
-    ]
-)
-
-HOST_POLICIES = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("max_rps", DoubleType(), False),
-        StructField("max_urls_per_superstep", IntegerType(), False),
-        StructField("crawl_delay_ms", IntegerType(), False),
-    ]
-)
-
-SITEMAP_ENTRIES = StructType(
-    [
-        StructField("sitemap_url", StringType(), False),
-        StructField("parent_sitemap", StringType(), True),
-        StructField("url", StringType(), False),
-        StructField("is_index", BooleanType(), False),
-    ]
-)
-
 #: Crawled page record (SURVEY.md §1.1 "Page";
 #: ref llmsgen/crawler/web_crawler.py:203,238 (pyc)).
 PAGES = StructType(
@@ -102,27 +67,10 @@ PAGES = StructType(
     ]
 )
 
-#: Frontier candidate rows between supersteps.
-FRONTIER = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("host", StringType(), False),
-        StructField("seed_id", IntegerType(), False),
-        StructField("base_url", StringType(), False),
-        StructField("base_domain", StringType(), False),
-    ]
-)
-
-#: URL-seen state (exact side; Bloom bitmaps are kept per host-bucket).
-SEEN = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("bucket", IntegerType(), False),
-    ]
-)
-
-#: Durable superstep snapshot tables (run_dir/superstep=N/<name>/, written
-#: by FrontierCrawler._commit, which checks each table against them). Read
+#: The one description of committed crawl state: the durable superstep
+#: snapshot tables (run_dir/superstep=N/<name>/, written with one
+#: metrics.json entry per superstep by FrontierCrawler._commit, which checks
+#: each table against them). Read
 #: back with these schemas by state.checkpoint.load_state, so no read runs a
 #: schema-inference job. Nullable, as every parquet read is.
 SNAPSHOTS = {
@@ -148,18 +96,3 @@ SNAPSHOTS = {
         ]
     ),
 }
-
-#: Per-superstep, per-partition lineage + metrics (north rule).
-METRICS = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("superstep", IntegerType(), False),
-        StructField("bucket", IntegerType(), False),
-        StructField("candidates", LongType(), False),
-        StructField("attempted", LongType(), False),
-        StructField("fetched_ok", LongType(), False),
-        StructField("pages_kept", LongType(), False),
-        StructField("links_discovered", LongType(), False),
-        StructField("wall_ms", LongType(), False),
-    ]
-)

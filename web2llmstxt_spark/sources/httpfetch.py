@@ -243,8 +243,6 @@ class HttpFetcher:
     already bound per-host concurrency.
     """
 
-    supports_url_hint = True  # accepted and ignored (nothing to scan-prune)
-
     def __init__(
         self,
         gateway: str,
@@ -292,7 +290,7 @@ class HttpFetcher:
         self._last_hits = {h: t for h, t in self._last_hits.items() if t > horizon}
         return dict(self._last_hits)
 
-    def fetch(self, cand: DataFrame, url_hint=None) -> DataFrame:
+    def fetch(self, cand: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import (
             ArrayType, BooleanType, IntegerType, StringType, StructField,

@@ -52,12 +52,18 @@ def describe_with_cache(
     entries: (url, title, description, word_count, index) — identical values
     to the uncached ``distill.describe_pages`` (describe is deterministic, so
     a hit and a recompute agree; tested in test_desc_cache).
-    new_cache_rows: (cache_key, description) for the misses only — the
-    write-through delta. A fully-warm cache yields 0 rows here (the
-    check-before-generate guarantee). ``describe_fn`` injects the D5 model
-    (udfs.make_describe_udf); only cache MISSES ever reach it — the
+    new_cache_rows: the misses only — the write-through delta, (cache_key,
+    description) plus the entry columns. A fully-warm cache yields 0 rows
+    here (the check-before-generate guarantee). ``describe_fn`` injects the
+    D5 model (udfs.make_describe_udf); only cache MISSES ever reach it — the
     check-before-generate contract the reference's AI path relies on
     (models/client.py:68-92).
+
+    Each miss is described ONCE: new_cache_rows is an eager localCheckpoint
+    of the described misses (no page content), and entries reads its miss
+    half from that checkpoint, so neither the write-through nor any action
+    on entries runs the model again. Release new_cache_rows
+    (session.release) once both are no longer read.
     """
     keyed = pages.withColumn(
         "cache_key", cache_key_col(F.col("url"), F.col("title"), F.col("content"))
@@ -69,16 +75,12 @@ def describe_with_cache(
         udfs.make_describe_udf(describe_fn) if describe_fn is not None
         else udfs.describe_udf
     )
-    misses = keyed.join(cache, "cache_key", "left_anti").withColumn(
-        "description",
-        d_udf(F.col("title"), F.col("content"), F.col("url")),
-    )
-    new_cache = misses.select("cache_key", "description")
-    entries = hits.unionByName(
-        misses.select(
-            "url", "title", "description", "word_count", F.col("rank").alias("index")
-        )
-    )
+    new_cache = keyed.join(cache, "cache_key", "left_anti").select(
+        "cache_key",
+        d_udf(F.col("title"), F.col("content"), F.col("url")).alias("description"),
+        "url", "title", "word_count", F.col("rank").alias("index"),
+    ).localCheckpoint(eager=True)
+    entries = hits.unionByName(new_cache.drop("cache_key"))
     return entries, new_cache
 
 
@@ -122,17 +124,17 @@ class DescriptionCache:
         return self.spark.read.parquet(*deltas).dropDuplicates(["cache_key"])
 
     def merge_and_save(self, new_rows: DataFrame) -> int:
-        """Write the miss-delta as a new ``delta-<run_id>/`` dir (see the
-        class concurrency contract). Returns the number of NEW keys written."""
-        new_rows = new_rows.localCheckpoint(eager=True)  # sever lineage to cache files
-        try:
-            n_new = new_rows.count()
-            if n_new:
-                delta_path = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
-                new_rows.write.mode("error").parquet(delta_path)
-            return n_new
-        finally:
-            release([new_rows])
+        """Write the miss-delta's (cache_key, description) as a new
+        ``delta-<run_id>/`` dir (see the class concurrency contract).
+        Returns the number of NEW keys written. ``new_rows`` is counted,
+        then written: pass it materialized (describe_with_cache does), or
+        both actions compute it."""
+        new_rows = new_rows.select("cache_key", "description")
+        n_new = new_rows.count()
+        if n_new:
+            delta_path = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
+            new_rows.write.mode("error").parquet(delta_path)
+        return n_new
 
     def compact(self) -> int:
         """Fold all deltas into one (maintenance; SINGLE-writer by contract —
@@ -140,10 +142,13 @@ class DescriptionCache:
         set). Returns the compacted row count."""
         old_deltas = self._delta_dirs()
         merged = self.load().localCheckpoint(eager=True)  # read fully before delete
-        n = merged.count()
-        if old_deltas:
-            compacted = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
-            merged.write.mode("error").parquet(compacted)
-            for d in old_deltas:
-                shutil.rmtree(d, ignore_errors=True)
-        return n
+        try:
+            n = merged.count()
+            if old_deltas:
+                compacted = os.path.join(self.path, f"delta-{uuid.uuid4().hex}")
+                merged.write.mode("error").parquet(compacted)
+                for d in old_deltas:
+                    shutil.rmtree(d, ignore_errors=True)
+            return n
+        finally:
+            release([merged])

@@ -23,6 +23,8 @@ memory sinks (tests/test_streaming.py).
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -192,13 +194,35 @@ def discovered_url_stream(
     )
 
 
+#: a drain still running after this many seconds raises
+DRAIN_TIMEOUT_S = 300
+
+
+def _caught_up(progress) -> bool:
+    """True when the batch ``progress`` reports found no new input: under
+    Trigger.AvailableNow every input file present at start is then
+    committed to the sink, and any watermark or timeout pass it owed has
+    run (that no-data batch was it)."""
+    return progress is not None and all(
+        s["startOffset"] == s["endOffset"] for s in progress["sources"]
+    )
+
+
 def run_available_now(
     stream_df: DataFrame, query_name: str, checkpoint_dir: str,
     output_mode: str = "append",
 ):
     """Drain a stream with Trigger.AvailableNow into a memory sink; read
     results via ``spark.table(query_name)``. Aggregations should pass
-    output_mode='complete' (append would hold back non-finalized windows)."""
+    output_mode='complete' (append would hold back non-finalized windows).
+
+    The drain ends once all available input is committed: the query ends
+    by itself, or a batch finds no new input. The second case is not rare:
+    a ProcessingTimeTimeout state (``politeness_gate``) keeps scheduling
+    no-data batches, so such an AvailableNow query never ends on its own.
+    A failed drain re-raises the query's error, and one still running
+    after DRAIN_TIMEOUT_S raises TimeoutError; the query is stopped on
+    every exit."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
@@ -207,7 +231,16 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        deadline = time.monotonic() + DRAIN_TIMEOUT_S
+        # awaitTermination raises if the query failed
+        while not q.awaitTermination(0.1) and not _caught_up(q.lastProgress):
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"stream {query_name!r} not drained after {DRAIN_TIMEOUT_S} s"
+                )
+    finally:
+        q.stop()
     return q
 
 
