@@ -4,7 +4,7 @@
 This file is the spark-submit PRIMARY RESOURCE. It deliberately does NOT
 touch ``sys.path`` or call ``SparkContext.addPyFile``: the engine package
 must be importable on the driver AND executors purely from the
-``--py-files web2llmstxt_spark_pkg.zip`` shipment — exactly how the engine
+``--py-files`` shipment of ``session.package_zip()`` — exactly how the engine
 deploys on a real cluster. Master, executor geometry, and memory belong to
 the submitter (spark-submit CLI flags), not to this job.
 
@@ -13,9 +13,9 @@ corpus (built driver-side, parallelized to the executors) and prints ONE
 JSON line: {"pages": N, "entries": N, "seen": N, "ok": true} — the caller
 (scripts/spark_submit_demo.py, tests/test_spark_submit.py) asserts on it.
 
-Usage (what spark_submit_demo.py runs):
-    $SPARK_HOME/bin/spark-submit --master spark://... \
-        --py-files /tmp/web2llmstxt_spark_pkg.zip \
+Usage (what spark_submit_demo.py runs; the zip is named after its content):
+    ZIP=$(python -c 'from web2llmstxt_spark.session import package_zip; print(package_zip())')
+    $SPARK_HOME/bin/spark-submit --master spark://... --py-files "$ZIP" \
         scripts/submit_job.py [max_pages]
 """
 
@@ -30,6 +30,7 @@ from pyspark.sql import SparkSession
 from web2llmstxt_spark import schemas  # noqa: E402
 from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.oracle.crawl_oracle import CrawlConfig
+from web2llmstxt_spark.session import local_frame
 from web2llmstxt_spark.sources.corpus import generate_corpus
 
 
@@ -44,7 +45,7 @@ def main() -> None:
         .getOrCreate()
     )
     corpus = generate_corpus(seed=7, n_hosts=2, pages_per_host=40)
-    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES)
+    site = local_frame(spark, corpus.site_pages_rows(), schemas.SITE_PAGES)
     crawler = FrontierCrawler(spark, site, CrawlConfig(max_pages=max_pages))
     pages_df, seen_df = crawler.crawl(seeds=[(i, u) for i, u, _ in corpus.seeds])
     pages = pages_df.count()

@@ -198,7 +198,7 @@ def run_curate(spark, args) -> dict:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    from .session import CACHE_LEVEL, get_spark
+    from .session import CACHE_LEVEL, get_spark, local_frame
 
     spark = get_spark("cli", cores=args.cores)
     if args.cmd == "curate":
@@ -251,10 +251,10 @@ def main(argv: list[str] | None = None) -> int:
                 n_hosts=args.n_hosts,
                 pages_per_host=args.pages_per_host,
             )
-            site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).persist(CACHE_LEVEL)
+            site = local_frame(spark, corpus.site_pages_rows(), schemas.SITE_PAGES).persist(CACHE_LEVEL)
             if args.strategy == "sitemap":
-                sitemap_blobs = spark.createDataFrame(
-                    render_sitemap_blobs(corpus), "sitemap_url string, body binary"
+                sitemap_blobs = local_frame(
+                    spark, render_sitemap_blobs(corpus), "sitemap_url string, body binary"
                 )
                 robots_text = f"Sitemap: {args.seed.rstrip('/')}/sitemap.xml\n"
 

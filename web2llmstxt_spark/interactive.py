@@ -169,17 +169,17 @@ def _default_run(seed, crawl_strategy, comprehensive, sitemap_url, describe_fn):
     HttpFetcher gateway)."""
     from . import schemas
     from .plans.pipeline import generate_llmstxt
-    from .session import get_spark
+    from .session import get_spark, local_frame
     from .sources.corpus import generate_corpus, render_sitemap_blobs
 
     spark = get_spark("interactive")
     try:
         corpus = generate_corpus()
-        site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES)
+        site = local_frame(spark, corpus.site_pages_rows(), schemas.SITE_PAGES)
         kw = {}
         if crawl_strategy == "sitemap":
-            kw["sitemap_blobs"] = spark.createDataFrame(
-                render_sitemap_blobs(corpus), "sitemap_url string, body binary"
+            kw["sitemap_blobs"] = local_frame(
+                spark, render_sitemap_blobs(corpus), "sitemap_url string, body binary"
             )
             kw["robots_text"] = (
                 f"Sitemap: {sitemap_url or seed.rstrip('/') + '/sitemap.xml'}\n"

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from ..functions import kernels, linkexpand, native, udfs
 from ..oracle.bestfirst_oracle import depth_for_max_pages
 from . import ranking
-from ..session import CACHE_LEVEL
+from ..session import CACHE_LEVEL, local_frame
 from .frontier import BROADCAST_RANK_MAX, TableFetcher
 
 #: above this batch size the top-B pop uses the distributed two-pass rank
@@ -129,10 +129,10 @@ class BestFirstCrawler:
         point of use — and seen_df)."""
         spark = self.spark
         start = kernels.normalize_url(self.base_url)
-        frontier = spark.createDataFrame(
-            [(start, 0, 0.0)], "url string, depth int, score double"
+        frontier = local_frame(
+            spark, [(start, 0, 0.0)], "url string, depth int, score double"
         )
-        seen = spark.createDataFrame([(start,)], "url string")
+        seen = local_frame(spark, [(start,)], "url string")
         frontier_count = 1
         attempted = 0
         superstep = 0
@@ -198,8 +198,8 @@ class BestFirstCrawler:
             superstep += 1
 
         if not page_parts:
-            empty = spark.createDataFrame(
-                [],
+            empty = local_frame(
+                spark, [],
                 "url string, title string, content string, word_count int, "
                 "score double, depth int, discovery_phase string, rank long",
             )

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from .dedup import tokens_col
 from .textstats import whitespace_tokens_sql
 
@@ -61,7 +62,7 @@ def bm25_topk(
     """
     terms = _query_terms(query)
     if not terms:
-        return df.sparkSession.createDataFrame([], f"{id_col} long, score double")
+        return local_frame(df.sparkSession, [], f"{id_col} long, score double")
 
     toks = tokens_col(text_col)
     docs = df.select(F.col(id_col), toks.alias("__t")).select(

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 SEP = "\x1f"
 
 #: materialize the repr table every K merge steps (r5 verdict #3): without
@@ -153,7 +155,7 @@ def learn_merges(
         # repeated invocations (bench loops, bpe_merges + bpe_encode_stats
         # in one session) don't accumulate storage blocks
         base.unpersist()
-    return spark.createDataFrame(merges, MERGES_SCHEMA)
+    return local_frame(spark, merges, MERGES_SCHEMA)
 
 
 def apply_merges(words: DataFrame, merges: list, word_col: str = "word") -> DataFrame:

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import tokens_col
 from .textstats import whitespace_tokens_sql
 
@@ -278,8 +279,8 @@ def mixture_sample(
     kmax = max(quotas.values())
     in_mix = docs.filter(F.col(stratum_col).isin(list(weights)))
     ranked = stratified_sample(in_mix, stratum_col, id_col, k=kmax, salt=salt)
-    qdf = docs.sparkSession.createDataFrame(
-        sorted(quotas.items()), f"{stratum_col} string, __quota int"
+    qdf = local_frame(
+        docs.sparkSession, sorted(quotas.items()), f"{stratum_col} string, __quota int"
     )
     return (
         ranked.join(F.broadcast(qdf), stratum_col)

@@ -32,6 +32,10 @@ Scale design (10^10-URL frontier, north rule):
   two-phase threshold selection.
 - the depth-0 seed frame (seed_id, base_url, base_domain, url) is built on
   the driver from the seed list: no Spark pass normalizes the input.
+- every driver-held table (seed frame, robots rules, host caps, deny list,
+  the global rank's partition offsets) is an Arrow LocalRelation
+  (``session.local_frame``), the politeness tables built once per crawl:
+  none runs a Python-worker stage to unpickle its rows.
 - the fetch is pluggable: in production a politeness-gated HTTP
   mapInPandas (``sources/httpfetch.HttpFetcher``); in tests/bench the
   corpus join (``TableFetcher``,
@@ -55,7 +59,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions import kernels, linkexpand, native, udfs
 from ..oracle.crawl_oracle import CrawlConfig
-from ..session import CACHE_LEVEL
+from ..session import CACHE_LEVEL, local_frame
 from . import bloom, ranking, robots
 
 #: below this kept-page count the finalize (url, rank) table is broadcast
@@ -325,11 +329,19 @@ class FrontierCrawler:
             self._robots_broadcastable = (
                 len(robots_rules) <= robots.ROBOTS_BROADCAST_MAX_RULES
             )
-            # tiny per-host table, cached once: every superstep's join
-            # reuses the aggregated arrays instead of re-running the agg
-            self._robots_rules_df = robots.rules_array_from_list(
-                spark, rules_by_host
-            ).cache()
+            self._robots_rules_df = robots.rules_array_from_list(spark, rules_by_host)
+        # the politeness tables, built once per crawl like the robots table.
+        # All three are driver-held LocalRelations (session.local_frame):
+        # nothing to cache, and no Python-worker stage on first use
+        self._deny_df = self._caps_df = None
+        if cfg.deny_hosts:
+            self._deny_df = local_frame(
+                spark, [(h,) for h in sorted(cfg.deny_hosts)], "host string"
+            )
+        if cfg.host_caps:
+            self._caps_df = local_frame(
+                spark, cfg.host_caps.items(), "host string, cap int"
+            )
 
     # ------------------------------------------------------------------ utils
     def _with_host(self, df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -586,8 +598,8 @@ class FrontierCrawler:
             url = kernels.normalize_url(base_url)
             seed_rows.setdefault(
                 url, (sid, base_url, urllib.parse.urlparse(base_url).netloc, url))
-        seeds_df = spark.createDataFrame(
-            list(seed_rows.values()),
+        seeds_df = local_frame(
+            spark, seed_rows.values(),
             "seed_id int, base_url string, base_domain string, url string",
         )
         seed_urls = sorted(seed_rows)
@@ -702,27 +714,21 @@ class FrontierCrawler:
                 cand = robots.enforce_robots_join(
                     cand, self._robots_rules_df, broadcast=self._robots_broadcastable
                 )
-            if cfg.deny_hosts:
+            if self._deny_df is not None:
                 # trap-host denylist (operators/traps): enforcement is a
                 # broadcast anti-join, same cost shape as the robots chain —
                 # the detector's output plugs in here without touching the
                 # hot path when the list is empty
-                deny_df = spark.createDataFrame(
-                    [(h,) for h in sorted(cfg.deny_hosts)], "host string"
-                )
                 cand = (
                     self._with_host(cand)
-                    .join(F.broadcast(deny_df), "host", "left_anti")
+                    .join(F.broadcast(self._deny_df), "host", "left_anti")
                     .drop("host")
                 )
-            if cfg.host_caps:
-                caps_df = spark.createDataFrame(
-                    list(cfg.host_caps.items()), "host string, cap int"
-                )
+            if self._caps_df is not None:
                 cand = self._with_host(cand)
                 w_host = Window.partitionBy("host").orderBy(F.desc("score"), F.asc("url"))
                 cand = (
-                    cand.join(F.broadcast(caps_df), "host", "left")
+                    cand.join(F.broadcast(self._caps_df), "host", "left")
                     .withColumn("hrank", F.row_number().over(w_host))
                     .filter(F.col("cap").isNull() | (F.col("hrank") <= F.col("cap")))
                     .drop("cap", "hrank", "host")
@@ -811,11 +817,10 @@ class FrontierCrawler:
             seen_next = seen.unionByName(attempted.select("url"))
             fresh = None
             if depth < cfg.depth_limit:                   # Q7: last depth no expand
+                # the kept attempts ARE new_pages' rows (url is unique in
+                # attempted), so their links come from the cache, no join
                 links = self._new_links(
-                    new_pages.select("url").join(
-                        attempted.select("url", "out_links", "seed_id", "base_url", "base_domain"),
-                        "url",
-                    ),
+                    attempted.filter(kept).select(*LINK_COL_NAMES),
                     from_depth=depth,
                 )
                 # Q6: union AFTER the depth; first-discovery ctx wins

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 PQ_M = 8        # subspaces
 PQ_KSUB = 16    # codewords per subspace (4-bit codes)
 
@@ -86,7 +88,7 @@ def _codebook_df(df: DataFrame, codebooks):
         for s, book in enumerate(codebooks)
         for cid, vec in book
     ]
-    return spark.createDataFrame(rows, "sub int, cid int, cvec array<double>")
+    return local_frame(spark, rows, "sub int, cid int, cvec array<double>")
 
 
 def _subvectors(df: DataFrame, m: int, vec_col: str, id_col: str) -> DataFrame:
@@ -144,8 +146,8 @@ def pq_topk(codes: DataFrame, codebooks, query_vec: list[float], k: int = 10,
     per-id sum. Output (id, adist) ordered adist asc (rounded — sums over m
     partials are FP-order-dependent at the ulp), id asc."""
     spark = codes.sparkSession
-    dq = F.broadcast(spark.createDataFrame(
-        adc_table(codebooks, query_vec), "sub int, cid int, dq double"
+    dq = F.broadcast(local_frame(
+        spark, adc_table(codebooks, query_vec), "sub int, cid int, dq double"
     ))
     return (
         codes.select("id", F.posexplode("codes").alias("sub", "cid"))

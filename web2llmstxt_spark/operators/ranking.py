@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 
 def global_rank(
     df: DataFrame, order, rank_col: str, cum_col_flag=None,
@@ -56,9 +58,7 @@ def global_rank(
     off_rows = [
         (pid, rank_off[pid], flag_off.get(pid, 0) or 0) for pid in sorted(part_stats)
     ]
-    offs = spark.createDataFrame(
-        off_rows, "__pid int, __rank_off long, __flag_off long"
-    )
+    offs = local_frame(spark, off_rows, "__pid int, __rank_off long, __flag_off long")
     d = d.join(F.broadcast(offs), "__pid")
     d = d.withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("__rank_off"))
     if cum_col_flag is not None:

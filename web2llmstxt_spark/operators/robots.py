@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 POLICY_SCHEMA = StructType(
     [
         StructField("host", StringType()),
@@ -246,8 +248,8 @@ def rules_array_from_list(spark, rules_by_host: dict) -> DataFrame:
     """The per-host array table built directly from a
     {host: [(rule, prefix), ...]} dict (the oracle's rules shape) —
     arrays assembled driver-side (the dict is already local), so this is a
-    pure createDataFrame with NO aggregation job; element order within an
-    array is irrelevant to the array_max decision."""
+    local Arrow table (session.local_frame) with NO job; element order
+    within an array is irrelevant to the array_max decision."""
     rows = [
         (
             host.lower(),
@@ -255,7 +257,7 @@ def rules_array_from_list(spark, rules_by_host: dict) -> DataFrame:
         )
         for host, rules in rules_by_host.items()
     ]
-    return spark.createDataFrame(rows, RULES_ARRAY_SCHEMA)
+    return local_frame(spark, rows, RULES_ARRAY_SCHEMA)
 
 
 def with_robots_decision(

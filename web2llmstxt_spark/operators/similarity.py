@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import local_frame
 from .dedup import tokens_col
 from .textstats import whitespace_tokens_sql
 
@@ -193,9 +194,9 @@ def ivf_assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
     shuffle. Output: (id, cid).
     """
     spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, [float(x) for x in vec]) for cid, vec in centroids],
-        f"cid int, cvec array<double>",
+    cent_df = local_frame(
+        spark, [(cid, [float(x) for x in vec]) for cid, vec in centroids],
+        "cid int, cvec array<double>",
     )
     # norms hoisted out of the N x nlist cross product: one array aggregate
     # per vector row + one per centroid row instead of two per PAIR; the
@@ -224,8 +225,8 @@ def ivf_assign_multi(df: DataFrame, centroids: list[tuple[int, list[float]]],
     sets overlap — the pair join sees them, at nprobe x pair-join cost,
     never all-pairs."""
     spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, [float(x) for x in vec]) for cid, vec in centroids],
+    cent_df = local_frame(
+        spark, [(cid, [float(x) for x in vec]) for cid, vec in centroids],
         "cid int, cvec array<double>",
     )
     # same norm hoist as ivf_assign (float-identical csim)
@@ -356,8 +357,8 @@ class IvfIndex:
             os.path.join(path, "assigned")
         )
         spark = self.assigned.sparkSession
-        spark.createDataFrame(
-            [(cid, [float(x) for x in vec]) for cid, vec in self.centroids],
+        local_frame(
+            spark, [(cid, [float(x) for x in vec]) for cid, vec in self.centroids],
             "cid int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 

@@ -18,6 +18,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 from ..functions import kernels, udfs
+from ..session import local_frame
 from . import ranking
 from .frontier import TableFetcher
 
@@ -30,7 +31,7 @@ def flatten_sitemap_index(entries: DataFrame, root_sitemaps: list[str],
     Cycle-safe: visited sitemaps are excluded each round.
     """
     spark = entries.sparkSession
-    current = spark.createDataFrame([(s,) for s in root_sitemaps], "sitemap_url string")
+    current = local_frame(spark, [(s,) for s in root_sitemaps], "sitemap_url string")
     visited = current
     urls = None
     for _ in range(max_depth):
@@ -48,7 +49,7 @@ def flatten_sitemap_index(entries: DataFrame, root_sitemaps: list[str],
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         current = nxt
-    return (urls if urls is not None else spark.createDataFrame([], "url string")).distinct()
+    return (urls if urls is not None else local_frame(spark, [], "url string")).distinct()
 
 
 def _domain_filter_udf(valid_domains: set[str]):

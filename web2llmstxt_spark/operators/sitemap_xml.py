@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import kernels
+from ..session import local_frame
 
 #: crawler/web_crawler.py:842-853 (verbatim path list)
 COMMON_SITEMAP_LOCATIONS = (
@@ -180,9 +181,7 @@ def auto_discover_sitemaps(
     """
     spark = blobs.sparkSession
     candidates = [f"{base_url.rstrip('/')}{loc}" for loc in COMMON_SITEMAP_LOCATIONS]
-    cand_df = spark.createDataFrame(
-        [(i, u) for i, u in enumerate(candidates)], "ord int, sitemap_url string"
-    )
+    cand_df = local_frame(spark, enumerate(candidates), "ord int, sitemap_url string")
     present = (
         cand_df.join(blobs.select("sitemap_url"), "sitemap_url", "left_semi")
         .orderBy("ord")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import native
+from ..session import local_frame
 from ..operators import bm25, dedup, graph, pq, similarity, textstats
 
 
@@ -2012,8 +2013,8 @@ def q_politeness_cap(spark, sf_dir):
         F.concat(F.lit("https://"), host, path).alias("url"),
         host.alias("host"),
     ).withColumn("score", native.score_url_native(F.col("url"), F.concat(F.lit("https://"), F.col("host"))))
-    caps = spark.createDataFrame(
-        [("ex0.example", 15), ("ex1.example", 25), ("ex2.example", 35)],
+    caps = local_frame(
+        spark, [("ex0.example", 15), ("ex1.example", 25), ("ex2.example", 35)],
         "host string, cap int",
     )
     w = Window.partitionBy("host").orderBy(F.desc("score"), F.asc("url"))

@@ -7,12 +7,16 @@ master/driver-memory, which the submitter owns).
 
 from __future__ import annotations
 
+import hashlib
 import os
-import shutil
 import tempfile
+import zipfile
 
+import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
 
 # Storage level for big engine caches (fetched pages, crawl state, site
 # corpora): serialized in memory + disk, vs .persist()'s deserialized
@@ -37,19 +41,98 @@ def release(frames) -> None:
             df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The ONE way the package turns a driver-held table into a DataFrame.
+
+    ``rows`` are tuples in field order; ``schema`` (a DDL string or a
+    ``StructType``) is the result's schema exactly: names, types,
+    nullability and nesting, as ``createDataFrame(rows, schema)`` gives.
+    The rows travel as one Arrow table, which Spark plans as a
+    ``LocalRelation`` below ``spark.sql.execution.arrow.
+    localRelationThreshold`` and as a JVM-side RDD above it. No Python
+    worker ever runs for it: the list path pickles the rows into a Python
+    RDD, and its first use runs a stage of Python workers to unpickle
+    them — for tables of a handful of rows, the dominant cost.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)
+    ]
+    for col, field in zip(columns, schema.fields):
+        # pyarrow does not check nullability; the list path's verifier does
+        bad = _null_in_not_null(col, field.dataType, field.nullable, field.name)
+        if bad is not None:
+            raise ValueError(f"local_frame: NOT NULL field {bad} holds a None")
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _null_in_not_null(arr, dtype, nullable: bool, path: str) -> str | None:
+    """The path of the first NOT NULL field at or under ``arr`` (through
+    struct fields and array elements) that holds a null, else None; a null
+    under a null parent does not count."""
+    if arr.null_count and not nullable:
+        return path
+    arr = arr.drop_null()
+    if isinstance(dtype, StructType):
+        children = [
+            (child, f.dataType, f.nullable, f"{path}.{f.name}")
+            for child, f in zip(arr.flatten(), dtype.fields)
+        ]
+    elif isinstance(dtype, ArrayType):
+        children = [(arr.flatten(), dtype.elementType, dtype.containsNull, f"{path}[]")]
+    else:
+        children = []
+    for child in children:
+        bad = _null_in_not_null(*child)
+        if bad is not None:
+            return bad
+    return None
+
+
 def package_zip() -> str:
     """Zip this package for shipment to executors (spark-submit --py-files).
 
     In local mode the Python workers are separate processes that do NOT
     inherit the driver's ``sys.path`` hacks; on a cluster they are separate
     hosts. Either way the package must travel as a pyfile.
+
+    The zip is named after a digest of the files it holds, so checkouts
+    with different code never share one (two sessions from two checkouts
+    on one machine would otherwise import each other's code), and an
+    unchanged package reuses the zip already written. It is written under
+    a temporary name and renamed into place, so no reader sees half a zip.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "web2llmstxt_spark_pkg")
-    # base_name gets .zip appended; root_dir=parent so the archive contains
-    # the top-level package directory.
-    return shutil.make_archive(out, "zip", root_dir=parent, base_dir="web2llmstxt_spark")
+    files = {}
+    for root, dirs, names in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for name in sorted(names):
+            if not name.endswith(".pyc"):
+                path = os.path.join(root, name)
+                with open(path, "rb") as f:
+                    files[os.path.relpath(path, parent)] = f.read()
+    digest = hashlib.sha256()
+    for arcname, data in files.items():
+        digest.update(arcname.encode() + b"\0" + hashlib.sha256(data).digest())
+    out = os.path.join(
+        tempfile.gettempdir(), f"web2llmstxt_spark_pkg-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(out):
+        fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(out))
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
+                for arcname, data in files.items():
+                    z.writestr(arcname, data)
+            os.replace(tmp, out)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return out
 
 
 def get_spark(

@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import udfs
-from ..session import release
+from ..session import local_frame, release
 
 CACHE_SCHEMA = "cache_key string, description string"
 
@@ -120,7 +120,7 @@ class DescriptionCache:
     def load(self) -> DataFrame:
         deltas = self._delta_dirs()
         if not deltas:
-            return self.spark.createDataFrame([], CACHE_SCHEMA)
+            return local_frame(self.spark, [], CACHE_SCHEMA)
         return self.spark.read.parquet(*deltas).dropDuplicates(["cache_key"])
 
     def merge_and_save(self, new_rows: DataFrame) -> int:

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import udfs
+from ..session import local_frame
 
 EVENT_SCHEMA = StructType(
     [
@@ -319,9 +320,9 @@ def continuous_crawl(
     os.makedirs(links_dir, exist_ok=True)
 
     host_of = F.expr("parse_url(url, 'HOST')")
-    seed_df = spark.createDataFrame(
-        [(u,) for u in seeds], "url string"
-    ).select(host_of.alias("host"), udfs.normalize_url_udf(F.col("url")).alias("url"))
+    seed_df = local_frame(spark, [(u,) for u in seeds], "url string").select(
+        host_of.alias("host"), udfs.normalize_url_udf(F.col("url")).alias("url")
+    )
     seed_df.coalesce(1).write.mode("append").parquet(os.path.join(links_dir, "seed"))
 
     fetcher = TableFetcher(site_pages)
@@ -394,7 +395,7 @@ def continuous_crawl(
             if ranked is not None:
                 ranked.unpersist()
 
-    empty_cand = spark.createDataFrame([], "host string, url string")
+    empty_cand = local_frame(spark, [], "host string, url string")
     for k in range(max_rounds):
         ring["todo"] = 0  # stays 0 when the drain has no new files at all
         ring["round"] = k
@@ -425,6 +426,6 @@ def continuous_crawl(
     try:
         return spark.read.parquet(pages_dir)
     except Exception:  # nothing ever succeeded: no sink dir
-        return spark.createDataFrame(
-            [], "url string, title string, content string, wc int"
+        return local_frame(
+            spark, [], "url string, title string, content string, wc int"
         )
