@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions import kernels, linkexpand, native, udfs
 from ..oracle.crawl_oracle import CrawlConfig
-from ..session import CACHE_LEVEL, local_frame
+from ..session import CACHE_LEVEL, local_frame, release
 from . import bloom, ranking, robots
 
 #: below this kept-page count the finalize (url, rank) table is broadcast
@@ -307,6 +307,9 @@ class FrontierCrawler:
         self.salt_hosts = salt_hosts
         self.run_id = run_id
         self.metrics: list[dict] = []
+        # every cache and checkpoint the crawl takes; the crawl's output
+        # reads them lazily, so they live until its owner calls release()
+        self._held: list[DataFrame] = []
         # incremental Bloom state (north rule "merged per superstep"): the
         # accumulated per-bucket bitmaps; each superstep ORs in only the
         # attempted-URL delta. Doubling rebuild when a bucket outgrows
@@ -479,6 +482,7 @@ class FrontierCrawler:
         if urls is None and bound is not None and 0 < bound <= hint_max:
             if not materialized:
                 todo = todo.localCheckpoint(eager=True)
+                self._held.append(todo)
             urls = [r[0] for r in todo.select("url").collect()]
         if urls and len(urls) <= hint_max:
             return f.fetch(todo, url_hint=urls)
@@ -519,6 +523,7 @@ class FrontierCrawler:
             F.max(F.when(F.col("kind") == "bloom", F.col("n_keys"))).alias("bloom_max_keys"),
         )
         state = parts.localCheckpoint(eager=True, storageLevel=CACHE_LEVEL)
+        self._held.append(state)
         m = obs.get
         seen = None
         if seen_df is not None:
@@ -657,8 +662,10 @@ class FrontierCrawler:
             if self.use_bloom:  # resume: rebuild filter state from seen ONCE
                 self._jobdesc("d0-state")
                 self._bloom = self._filter_state(seen).localCheckpoint(eager=True)
+                self._held.append(self._bloom)
         else:
             main0 = main0.persist(CACHE_LEVEL)
+            self._held.append(main0)
             pages = main0.select(*PAGES_COL_NAMES)
             self._jobdesc("d0-fetch")
             pages_by_bucket = main0.select(self._bucket().alias("bucket")).agg(
@@ -760,7 +767,7 @@ class FrontierCrawler:
                 appended = F.col("success") & (F.col("wc") >= 50)
                 slim = fetched_cache.select("url", "score", "success", "wc")
                 ranked = ranking.global_rank(
-                    slim, order, "__r", cum_col_flag=appended
+                    slim, order, "__r", cum_col_flag=appended, caches=self._held
                 ).select("url", "__cum_before")
                 attempted = (
                     fetched_cache.join(ranked, "url")
@@ -771,9 +778,10 @@ class FrontierCrawler:
                 # :220 slice: count cand, and pay for the distributed top-k
                 # only when the count exceeds what the budget leaves
                 cand = cand.localCheckpoint(eager=True)
+                self._held.append(cand)
                 n_cand = cand.count()
                 if n_cand > remaining:
-                    ranked = ranking.global_rank(cand, order, "__r")
+                    ranked = ranking.global_rank(cand, order, "__r", caches=self._held)
                     attempted = self._fetch_attempts(
                         ranked.filter(F.col("__r") <= remaining).drop("__r"), None
                     )
@@ -797,6 +805,7 @@ class FrontierCrawler:
             if attempted_count == 0:                       # :216/:221
                 attempted.unpersist()
                 break
+            self._held.append(attempted)  # lazy pages and seen read it
 
             new_pages = (
                 attempted.filter(kept)  # :237
@@ -837,6 +846,7 @@ class FrontierCrawler:
             self._jobdesc(f"ss{depth}-state")
             t_state = time.time()
             new_pages = new_pages.persist(CACHE_LEVEL)
+            self._held.append(new_pages)
             if will_continue:
                 # INCREMENTAL state advance, O(|delta|) per superstep: both
                 # state tables are append-only (seen grows by exactly this
@@ -885,7 +895,6 @@ class FrontierCrawler:
                 seen = seen_next
                 self._bloom = None
             all_pages.append(new_pages)
-            # NB: attempted stays persisted — lazy pages reference it
             entry = self._record(
                 depth, attempted_count, added, pages_count, pages_by_bucket,
                 frontier_buckets, attempt_ms, t_state, t0,
@@ -929,7 +938,9 @@ class FrontierCrawler:
         # only the (url, rank) table shuffles. url is unique per page (seen
         # dedup), so the inner join is exactly row-preserving.
         slim = result.select("url", "depth", "__seed0", "score")
-        ranked = ranking.global_rank(slim, final_order, "rank").select("url", "rank")
+        ranked = ranking.global_rank(
+            slim, final_order, "rank", caches=self._held
+        ).select("url", "rank")
         if n_pages is not None and n_pages <= BROADCAST_RANK_MAX:
             ranked = F.broadcast(ranked)
         result = result.drop("__seed0").join(ranked, "url")
@@ -938,6 +949,13 @@ class FrontierCrawler:
         # pipeline: .orderBy("rank") at the point of use) or never needs
         # (distill, dedup, profiling are order-free).
         return result
+
+    def release(self) -> None:
+        """Free every cache and checkpoint the crawl took. Call it once
+        nothing will read the crawl's output again: its pages and seen
+        DataFrames read these blocks lazily."""
+        release(self._held)
+        self._held = []
 
     # ------------------------------------------------------------- link expand
     def _new_links(self, pages_with_links: DataFrame, from_depth: int) -> DataFrame:

@@ -1,12 +1,12 @@
 """robots.txt TEXT parsing + Crawl-delay -> politeness budget derivation.
 
-The engine's enforcement layers (frontier robots filter, per-host caps,
-streaming token buckets) consume STRUCTURED policies; this module supplies
-the missing front door: parsing raw robots.txt bytes the way a fetcher
-receives them. Reference scope: the tool reads only ``Sitemap:`` lines from
-robots.txt (crawler/web_crawler.py sitemap discovery); full
-Allow/Disallow/Crawl-delay parsing is the north-rule extension the frontier
-enforcement (COVERAGE.md S6) was already built for.
+The engine's enforcement layers (frontier robots filter, per-host caps per
+superstep) consume STRUCTURED policies; this module supplies the missing
+front door: parsing raw robots.txt bytes the way a fetcher receives them.
+Reference scope: the tool reads only ``Sitemap:`` lines from robots.txt
+(crawler/web_crawler.py sitemap discovery); full Allow/Disallow/Crawl-delay
+parsing is the north-rule extension the frontier enforcement (COVERAGE.md
+S6) was already built for.
 
 Semantics implemented (RFC 9309 + the de-facto Crawl-delay extension):
 - line-oriented; ``#`` comments stripped; field names case-insensitive

@@ -122,28 +122,21 @@ def recrawl_schedule(
         F.min("epoch").alias("first_epoch"),
         F.max("epoch").alias("last_epoch"),
     )
+    span = F.greatest(F.col("last_epoch") - F.col("first_epoch"), F.lit(1))
+    priority = F.floor(
+        (F.lit(now_epoch) - F.col("last_epoch"))
+        * (F.col("n_changes") + 1)
+        * 1000
+        / span
+    )
     return (
         stats.select(
             key_col,
             "n_obs",
             "n_changes",
             "last_epoch",
-            recrawl_priority_col(now_epoch).alias("priority"),
+            priority.alias("priority"),
         )
         .orderBy(F.desc("priority"), key_col)
         .limit(budget)
-    )
-
-
-def recrawl_priority_col(now_epoch: int):
-    """The integer priority expression over (n_changes, first_epoch,
-    last_epoch) stat columns — shared by the batch scheduler above and the
-    streaming tracker (streaming/recrawl_stream.py), so both rank URLs by
-    the identical bit-stable score."""
-    span = F.greatest(F.col("last_epoch") - F.col("first_epoch"), F.lit(1))
-    return F.floor(
-        (F.lit(now_epoch) - F.col("last_epoch"))
-        * (F.col("n_changes") + 1)
-        * 1000
-        / span
     )

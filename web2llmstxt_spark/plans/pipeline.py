@@ -21,15 +21,43 @@ from . import distill
 
 EXPORT_FORMATS = ("text", "json", "yaml")
 OUTPUT_STYLES = ("v1", "v2")
+# the crawl options each strategy reads; the others must keep their default
+# (None or False) under it
+STRATEGY_OPTIONS = {
+    "systematic": (
+        "safety_limit", "robots_rules", "enforce_robots", "host_caps", "run_dir", "seeds",
+    ),
+    "bestfirst": (),
+    "sitemap": ("sitemap_blobs", "robots_text", "root_sitemaps"),
+}
+CRAWL_STRATEGIES = tuple(STRATEGY_OPTIONS)
 
 
-def _check_output_options(export_format: str, output_style: str) -> None:
-    """Reject an unknown sink before the first Spark job: the dispatch would
-    otherwise write v2 text and record the bogus name in the metadata."""
+def _check_output_options(
+    export_format: str, output_style: str, crawl_strategy: str | None = None,
+    **crawl_options,
+) -> None:
+    """Reject an unknown sink or crawl strategy, and a crawl option the
+    strategy would ignore, before the first Spark job: the dispatch would
+    otherwise write v2 text, run the BFS engine or drop the option, and
+    record the bogus name in the metadata. ``crawl_strategy`` None: no
+    crawl runs (WARC distill)."""
     if export_format not in EXPORT_FORMATS:
         raise ValueError(f"export_format must be one of {EXPORT_FORMATS}, got {export_format!r}")
     if output_style not in OUTPUT_STYLES:
         raise ValueError(f"output_style must be one of {OUTPUT_STYLES}, got {output_style!r}")
+    if crawl_strategy is None:
+        return
+    if crawl_strategy not in CRAWL_STRATEGIES:
+        raise ValueError(
+            f"crawl_strategy must be one of {CRAWL_STRATEGIES}, got {crawl_strategy!r}"
+        )
+    ignored = [name for name, value in crawl_options.items()
+               if value not in (None, False) and name not in STRATEGY_OPTIONS[crawl_strategy]]
+    if ignored:
+        raise ValueError(
+            f"crawl_strategy {crawl_strategy!r} ignores {', '.join(ignored)}; leave it unset"
+        )
 
 
 def generate_llmstxt(
@@ -77,6 +105,9 @@ def generate_llmstxt(
 
     ``export_format`` is one of EXPORT_FORMATS and ``output_style`` one of
     OUTPUT_STYLES; anything else raises ValueError before any Spark job.
+    So does a ``crawl_strategy`` outside CRAWL_STRATEGIES, and a crawl
+    option the strategy does not read (STRATEGY_OPTIONS) set away from its
+    default.
 
     ``crawl_strategy`` mirrors the reference dispatch (v1 generator/
     llms_generator.py:694-700; v2 llmsgen pyc names
@@ -88,7 +119,13 @@ def generate_llmstxt(
     roots from ``root_sitemaps`` or auto-discovery (well-known paths +
     robots ``Sitemap:`` lines in ``robots_text``).
     """
-    _check_output_options(export_format, output_style)
+    _check_output_options(
+        export_format, output_style, crawl_strategy,
+        safety_limit=safety_limit, robots_rules=robots_rules,
+        enforce_robots=enforce_robots, host_caps=host_caps, run_dir=run_dir,
+        seeds=seeds, sitemap_blobs=sitemap_blobs, robots_text=robots_text,
+        root_sitemaps=root_sitemaps,
+    )
     start = time.time()
     # ref :169 (pyc): 3x page budget when full text requested
     actual_max_pages = max_pages * 3 if (full_text_only or include_full_text) else max_pages
@@ -96,6 +133,7 @@ def generate_llmstxt(
     calculated_safety_limit = safety_limit or actual_max_pages * (10 if full_text_only else 5)
     comprehensive = full_text_only or include_full_text  # ref :175 (pyc)
 
+    crawler = None
     if crawl_strategy == "bestfirst":
         from ..operators.bestfirst import BestFirstCrawler
 
@@ -129,23 +167,20 @@ def generate_llmstxt(
             spark, site_pages, cfg, robots_rules=robots_rules, run_dir=run_dir,
         )
         pages_df, _seen = crawler.crawl(seeds or [(0, base_url)])
-    return distill_to_output(
-        pages_df,
-        base_url,
-        output_dir,
-        export_format=export_format,
-        include_full_text=include_full_text,
-        full_text_only=full_text_only,
-        max_full_text_pages=max_full_text_pages,
-        desc_cache_dir=desc_cache_dir,
-        describe_fn=describe_fn,
-        output_style=output_style,
-        collect_entries=collect_entries,
-        crawl_strategy_label=crawl_strategy,
-        generated_at=generated_at,
-        start_time=start,
-        warc_out=warc_out,
-    )
+    try:
+        return distill_to_output(
+            pages_df, base_url, output_dir,
+            export_format=export_format, include_full_text=include_full_text,
+            full_text_only=full_text_only, max_full_text_pages=max_full_text_pages,
+            desc_cache_dir=desc_cache_dir, describe_fn=describe_fn,
+            output_style=output_style, collect_entries=collect_entries,
+            crawl_strategy_label=crawl_strategy, generated_at=generated_at,
+            start_time=start, warc_out=warc_out,
+        )
+    finally:
+        if crawler is not None:
+            # distill's persisted pages were the crawl output's last reader
+            crawler.release()
 
 
 def distill_to_output(
