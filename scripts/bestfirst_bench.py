@@ -19,7 +19,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark import StorageLevel  # noqa: E402
 
-from web2llmstxt_spark.operators.bestfirst import BestFirstCrawler  # noqa: E402
+from web2llmstxt_spark.operators.frontier import FrontierCrawler  # noqa: E402
+from web2llmstxt_spark.oracle.bestfirst_oracle import BestFirstConfig  # noqa: E402
 from web2llmstxt_spark.session import get_spark  # noqa: E402
 
 
@@ -42,18 +43,18 @@ def main() -> None:
     site = site.repartition(parts, "url").persist(lvl)
     site.count()  # cache build outside the clock
 
-    engine = BestFirstCrawler(
-        spark, site, base_url, max_pages=budget, batch_size="auto"
+    engine = FrontierCrawler(
+        spark, site, BestFirstConfig(max_pages=budget, batch_size="auto")
     )
     t0 = time.time()
-    pages, seen = engine.crawl()
+    pages, seen = engine.crawl([(0, base_url)])
     supersteps_done = time.time()
     n = pages.count()  # materializes the finalize rank + join-back
     t1 = time.time()
     print(json.dumps({
         "cores": cores,
         "budget": budget,
-        "batch_size": engine.batch_size,
+        "batch_size": engine.cfg.batch_size,
         "supersteps": len(engine.metrics),
         "pages": n,
         "crawl_wall_sec": round(t1 - t0, 2),

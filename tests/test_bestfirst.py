@@ -11,10 +11,11 @@ import pytest
 from web2llmstxt_spark import schemas
 from web2llmstxt_spark.functions import kernels
 from web2llmstxt_spark.oracle.bestfirst_oracle import (
+    BestFirstConfig,
     crawl_bestfirst,
     depth_for_max_pages,
 )
-from web2llmstxt_spark.operators.bestfirst import BestFirstCrawler
+from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.sources.corpus import generate_corpus
 
 PAGE_FIELDS = ["url", "title", "content", "word_count", "score", "depth", "discovery_phase"]
@@ -25,11 +26,11 @@ def run_both(spark, corpus, base_url, max_pages, batch_size, max_depth=None, **k
         corpus, base_url, max_pages=max_pages, batch_size=batch_size, max_depth=max_depth
     )
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
-    engine = BestFirstCrawler(
-        spark, site, base_url, max_pages=max_pages, batch_size=batch_size,
-        max_depth=max_depth, **kw
+    engine = FrontierCrawler(
+        spark, site, BestFirstConfig(max_pages=max_pages, batch_size=batch_size,
+                                     max_depth=max_depth), **kw
     )
-    pages_df, seen_df = engine.crawl()
+    pages_df, seen_df = engine.crawl([(0, base_url)])
     engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
     engine_seen = {r.url for r in seen_df.collect()}
     return oracle, engine_pages, engine_seen
@@ -126,7 +127,8 @@ def test_large_budget_auto_batch_bounded_supersteps(spark):
     sequential round-trips — and (b) stay page-for-page parity-exact with
     the oracle at the same B (the documented ordering deviation is vs
     batch=10, not vs determinism)."""
-    from web2llmstxt_spark.operators.bestfirst import LARGE_BATCH, auto_batch_size
+    from web2llmstxt_spark.operators.ranking import LARGE_BATCH
+    from web2llmstxt_spark.oracle.bestfirst_oracle import auto_batch_size
 
     corpus = generate_corpus(seed=83, n_hosts=1, pages_per_host=4000)
     base_url = corpus.seeds[0][1]
@@ -135,21 +137,21 @@ def test_large_budget_auto_batch_bounded_supersteps(spark):
     oracle = crawl_bestfirst(corpus, base_url, max_pages=budget, batch_size=b)
     assert oracle.attempted >= 1000  # the corpus binds the claim meaningfully
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
-    engine = BestFirstCrawler(spark, site, base_url, max_pages=budget, batch_size=b)
-    pages_df, seen_df = engine.crawl()
+    engine = FrontierCrawler(spark, site, BestFirstConfig(max_pages=budget, batch_size=b))
+    pages_df, seen_df = engine.crawl([(0, base_url)])
     engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
     engine_seen = {r.url for r in seen_df.collect()}
     assert_parity(oracle, engine_pages, engine_seen)
     # superstep bound: ceil(attempted/B) budget steps + depth-limited
     # frontier ramp — NOT attempted/10 sequential driver round-trips
-    max_steps = -(-oracle.attempted // b) + engine.max_depth + 1
+    max_steps = -(-oracle.attempted // b) + engine.cfg.max_depth + 1
     assert len(engine.metrics) <= max_steps, (len(engine.metrics), max_steps)
 
     # the auto dispatch picks a proportional batch, never below 10
     assert auto_batch_size(100_000) == 6250
     assert auto_batch_size(50) == 10
-    auto_engine = BestFirstCrawler(spark, site, base_url, max_pages=budget, batch_size="auto")
-    assert auto_engine.batch_size == auto_batch_size(budget) == 94
+    auto_engine = FrontierCrawler(spark, site, BestFirstConfig(max_pages=budget, batch_size="auto"))
+    assert auto_engine.cfg.batch_size == auto_batch_size(budget) == 94
 
 
 def test_pipeline_auto_batch_large_budget(spark, tmp_path, monkeypatch):
@@ -159,18 +161,19 @@ def test_pipeline_auto_batch_large_budget(spark, tmp_path, monkeypatch):
     <= AUTO_BATCH_TARGET_STEPS + depth-ramp supersteps — not budget/10
     driver round-trips — and (c) stay page-for-page parity with the oracle
     at the dispatched B."""
-    from web2llmstxt_spark.operators import bestfirst as bf_mod
+    from web2llmstxt_spark.oracle import bestfirst_oracle as bf_mod
+    from web2llmstxt_spark.plans import pipeline
     from web2llmstxt_spark.plans.pipeline import generate_llmstxt
 
     captured = {}
-    real = bf_mod.BestFirstCrawler
+    real = pipeline.FrontierCrawler
 
     class Capturing(real):
         def __init__(self, *a, **kw):
             super().__init__(*a, **kw)
             captured["engine"] = self
 
-    monkeypatch.setattr(bf_mod, "BestFirstCrawler", Capturing)
+    monkeypatch.setattr(pipeline, "FrontierCrawler", Capturing)
     corpus = generate_corpus(seed=83, n_hosts=1, pages_per_host=4000)
     base = corpus.seeds[0][1]
     site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
@@ -181,8 +184,70 @@ def test_pipeline_auto_batch_large_budget(spark, tmp_path, monkeypatch):
         collect_entries=True,
     )
     eng = captured["engine"]
-    assert eng.batch_size == bf_mod.auto_batch_size(budget) == 625
-    oracle = crawl_bestfirst(corpus, base, max_pages=budget, batch_size=eng.batch_size)
-    max_steps = bf_mod.AUTO_BATCH_TARGET_STEPS + eng.max_depth + 1
+    assert eng.cfg.batch_size == bf_mod.auto_batch_size(budget) == 625
+    oracle = crawl_bestfirst(corpus, base, max_pages=budget, batch_size=eng.cfg.batch_size)
+    max_steps = bf_mod.AUTO_BATCH_TARGET_STEPS + eng.cfg.max_depth + 1
     assert len(eng.metrics) <= max_steps, (len(eng.metrics), max_steps)
     assert [p["url"] for p in res["pages"]] == oracle.order
+
+
+RECORD_KEYS = {
+    "run_id", "superstep", "attempted", "pages_kept", "pages_total", "attempt_ms",
+    "state_ms", "wall_ms", "bloom_deltas", "bloom_rebuilds", "bloom_m_bits",
+    "frontier_by_bucket", "pages_by_bucket",
+}
+
+
+def test_jobs_tagged_and_supersteps_recorded(spark):
+    """Every job a best-first crawl submits carries a crawl:<tag>
+    description, and every superstep records the engine's metrics entry."""
+    corpus = generate_corpus(seed=33, n_hosts=1, pages_per_host=30)
+    base = corpus.seeds[0][1]
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    site.count()
+    oracle = crawl_bestfirst(corpus, base, max_pages=25, batch_size=10)
+    sc = spark.sparkContext
+    sc.setJobDescription(None)
+    sc.setLocalProperty("spark.jobGroup.id", "bestfirst-tags")
+    try:
+        engine = FrontierCrawler(spark, site, BestFirstConfig(max_pages=25, batch_size=10))
+        engine.crawl([(0, base)])
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        store = sc._jsc.sc().statusStore()
+        descriptions = [store.job(j).description()
+                        for j in sc.statusTracker().getJobIdsForGroup("bestfirst-tags")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        site.unpersist()
+    descriptions = [d.get() if d.isDefined() else None for d in descriptions]
+    assert descriptions and all(
+        d is not None and d.startswith("crawl:") and len(d) > len("crawl:")
+        for d in descriptions), descriptions
+    assert [m["superstep"] for m in engine.metrics] == list(range(len(engine.metrics)))
+    assert all(set(m) == RECORD_KEYS for m in engine.metrics)
+    assert sum(m["attempted"] for m in engine.metrics) == oracle.attempted
+    assert engine.metrics[-1]["pages_total"] == len(oracle.pages)
+
+
+def test_many_supersteps_keep_partitions_bounded(spark):
+    """A crawl of 8+ supersteps stays page-for-page and seen-set exact, and
+    its output does not carry one partition per past state row: the state
+    grows by one delta per superstep instead of re-checkpointing all of it
+    (a combined state re-checkpointed each superstep doubled its partition
+    count every superstep, past 1,500 after 8)."""
+    corpus = generate_corpus(seed=83, n_hosts=1, pages_per_host=400)
+    base = corpus.seeds[0][1]
+    oracle = crawl_bestfirst(corpus, base, max_pages=110, batch_size=10)
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    engine = FrontierCrawler(spark, site, BestFirstConfig(max_pages=110, batch_size=10))
+    pages_df, seen_df = engine.crawl([(0, base)])
+    assert len(engine.metrics) >= 8
+    assert_parity(oracle, [r.asDict() for r in pages_df.orderBy("rank").collect()],
+                  {r.url for r in seen_df.collect()})
+    # at most a handful of partitions per superstep's part
+    bound = 8 * len(engine.metrics)
+    assert pages_df.rdd.getNumPartitions() <= bound
+    assert seen_df.rdd.getNumPartitions() <= bound
+    engine.release()
+    site.unpersist()

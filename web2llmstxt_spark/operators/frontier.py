@@ -1,4 +1,4 @@
-"""The BSP frontier crawler — the reference's BFS loop as Spark supersteps.
+"""The BSP frontier crawler — the reference's crawl loops as Spark supersteps.
 
 Rebuilds v2 ``discover_all_links_first`` (llmsgen/crawler/web_crawler.py:
 169-249 (pyc), SURVEY.md §3-EP3) as a driver-side superstep loop where each
@@ -15,6 +15,18 @@ depth/phase), crawl ORDER (rank column) and final URL-seen set vs
 ``oracle.crawl_oracle.crawl`` on the same corpus + config (quirks Q1/Q5/Q6/Q7
 and the comprehensive-mode mid-depth budget cut replicated — see oracle
 docstring).
+
+The same loop runs the reference's best-first crawl (``crawl_website``,
+v1 crawler/web_crawler.py:192-369) when given an
+``oracle.bestfirst_oracle.BestFirstConfig``: a superstep pops the top
+``batch_size`` queued URLs by (score desc, depth asc, url asc), the queue
+being frontier − seen; the config's policy values (keyword scorer, strict
+page gate, links from every successful fetch, budget on attempts, seen on
+enqueue) are read where the BFS values are, and the pages are
+parity-tested against ``oracle.bestfirst_oracle.crawl_bestfirst``. A
+best-first superstep runs 9 Spark jobs on a one-host corpus at batch 10
+(4 cores): 2 for the pop, 4 for the fetch and its stats, 3 for the state
+delta; the last superstep skips the state.
 
 Scale design (10^10-URL frontier, north rule):
 - frontier & seen are hash-partitioned by host bucket; the anti-join
@@ -90,7 +102,7 @@ def _union_parts(parts: list[DataFrame]) -> DataFrame:
 #: 'kind' of a single union, the columns it does not have left null
 _STATE_COLS = {
     "url": "string", "seed_id": "int", "base_url": "string",
-    "base_domain": "string", "bucket": "int", "bitmap": "binary", "n_keys": "long",
+    "base_domain": "string", "depth": "int", "bucket": "int", "bitmap": "binary", "n_keys": "long",
 }
 
 
@@ -299,7 +311,7 @@ class FrontierCrawler:
         self.fetcher = fetcher if fetcher is not None else TableFetcher(site_pages)
         self.run_dir = run_dir
         self.num_buckets = num_buckets
-        self.use_bloom = use_bloom
+        self.use_bloom = use_bloom and cfg.seen_prefilter
         # north-rule skew salting: skewed host -> fan-out k; threaded through
         # every Bloom bucket derivation (operators/bloom._bucket_col) so one
         # mega-host's URLs spread over k partitions on both the bitmap and
@@ -505,7 +517,7 @@ class FrontierCrawler:
 
         Returns (seen or None, frontier, bloom_state, frontier_by_bucket).
         """
-        link_cols = ("url", "seed_id", "base_url", "base_domain")
+        link_cols = ("url", "seed_id", "base_url", "base_domain", "depth")
         parts = _state_part(
             frontier_df.withColumn("bucket", self._bucket()), "frontier",
             link_cols + ("bucket",),
@@ -576,7 +588,14 @@ class FrontierCrawler:
 
     # ------------------------------------------------------------------ crawl
     def crawl(self, seeds: list[tuple[int, str]], _resume=None):
-        """Run the full BFS; returns (pages_df ordered by rank, seen_df).
+        """Run the crawl; returns (pages_df, seen_df). pages_df is unsorted:
+        its ``rank`` column is the crawl order.
+
+        The config's policy values (``CrawlConfig``: BFS, one superstep per
+        depth; ``oracle.bestfirst_oracle.BestFirstConfig``: batched
+        best-first from one seed) pick the scorer, the pop size, what the
+        budget counts, where links come from and what the seen set holds;
+        the loop below is the same for both.
 
         ``_resume=(last_superstep, pages, seen, frontier, metrics.json)``
         continues from a committed state/checkpoint.py snapshot instead of
@@ -603,6 +622,14 @@ class FrontierCrawler:
             url = kernels.normalize_url(base_url)
             seed_rows.setdefault(
                 url, (sid, base_url, urllib.parse.urlparse(base_url).netloc, url))
+        if cfg.scorer == "keywords":
+            # best-first scores every URL against its one site's keywords
+            if len(seed_rows) != 1:
+                raise ValueError(f"a best-first crawl has one seed, got {len(seed_rows)}")
+            keywords = kernels.bestfirst_keywords(next(iter(seed_rows.values()))[1])
+            score = native.keyword_score_native(F.col("url"), keywords)
+        else:
+            score = native.score_url_native(F.col("url"), F.col("base_url"))
         seeds_df = local_frame(
             spark, seed_rows.values(),
             "seed_id int, base_url string, base_domain string, url string",
@@ -610,7 +637,7 @@ class FrontierCrawler:
         seed_urls = sorted(seed_rows)
         n_seeds = len(seed_urls)  # superstep 0's `attempted`, without a job
 
-        # --- depth 0: main pages (ref :196-206 (pyc); score 10.0, no wc gate)
+        # --- depth 0: the seeds (BFS main pages, ref :196-206 (pyc))
         # The seed URL set is known driver-side (it IS the input), so the
         # fetch gets it as the URL hint without a collect: the corpus scan
         # prunes columnar batches / parquet row groups instead of streaming
@@ -619,9 +646,9 @@ class FrontierCrawler:
         main = (
             fetched0.filter(F.col("success"))
             .withColumn("title2", udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")))
-            .withColumn("score", F.lit(10.0))
+            .withColumn("score", F.lit(cfg.seed_score))
             .withColumn("depth", F.lit(0))
-            .withColumn("discovery_phase", F.lit("main_page"))
+            .withColumn("discovery_phase", F.lit(cfg.seed_phase))
         )
         pages_cols = [
             "url",
@@ -641,12 +668,16 @@ class FrontierCrawler:
             "url", "title", "content", "word_count",
             "score", "depth", "discovery_phase", "seed_id",
         ]
-        LINK_COL_NAMES = ["url", "out_links", "seed_id", "base_url", "base_domain"]
+        LINK_COL_NAMES = ["url", "out_links", "seed_id", "base_url", "base_domain", "depth"]
         start_depth = 1
         # Known frontier size (the last state checkpoint's Observation, or a
         # resumed superstep's metrics.json): lets the budget cut be SKIPPED
-        # without a count job whenever |frontier| <= remaining (cand ⊆
-        # frontier), and bounds the attempt set for the fetch's URL hint.
+        # without a count job whenever |frontier| fits the pop, and bounds
+        # the attempt set for the fetch's URL hint. Less the URLs popped
+        # from it (every attempt but a BFS seed's), it bounds the queue: an
+        # empty queue ends the crawl without a job.
+        attempts = n_seeds
+        unqueued = 0 if cfg.seen_on_enqueue else n_seeds
         if _resume is not None:
             last, pages, seen, frontier, committed = _resume
             pages_count = committed["pages_total"]
@@ -654,7 +685,8 @@ class FrontierCrawler:
             frontier_buckets = [held.get(str(b), 0) for b in range(self.num_buckets)]
             if sum(frontier_buckets) != sum(held.values()):  # a wrong size would mis-cut
                 raise ValueError("resume needs the num_buckets the run committed with")
-            all_pages = [pages]
+            # a BFS page's superstep is its depth
+            all_pages = [pages.withColumn("__step", F.col("depth"))]
             if last >= cfg.depth_limit or pages_count >= budget:
                 # the committed superstep was the last one: nothing to run
                 return self._finalize(all_pages, pages_count), seen
@@ -666,25 +698,37 @@ class FrontierCrawler:
         else:
             main0 = main0.persist(CACHE_LEVEL)
             self._held.append(main0)
-            pages = main0.select(*PAGES_COL_NAMES)
+            seed_kept = (F.lit(True) if cfg.seed_min_words is None
+                         else F.col("word_count") >= cfg.seed_min_words)
+            pages = main0.filter(seed_kept).select(*PAGES_COL_NAMES, F.lit(0).alias("__step"))
             self._jobdesc("d0-fetch")
-            pages_by_bucket = main0.select(self._bucket().alias("bucket")).agg(
-                self._bucket_counts("true")).first()[0]
+            pages_by_bucket = main0.select(
+                self._bucket().alias("bucket"), seed_kept.alias("kept")
+            ).agg(self._bucket_counts("kept")).first()[0]
             pages_count = sum(pages_by_bucket)
             d0_fetch_ms = int((time.time() - t_crawl) * 1000)
-            bloom0 = self._filter_state(pages.select("url")) if self.use_bloom else None
+            # seen on enqueue: the seeds are queued URLs like the links, in
+            # seen whether or not their fetch succeeds; else only the
+            # fetched seeds are seen (ref :196-206)
+            seen0 = (seeds_df if cfg.seen_on_enqueue else main0).select("url")
+            links0 = self._new_links(
+                main0.filter(F.col("depth") < cfg.depth_limit).select(*LINK_COL_NAMES))
+            if cfg.seen_on_enqueue:
+                queued = seeds_df.withColumn("depth", F.lit(0))
+                links0 = links0.join(queued.select("url"), "url", "left_anti").unionByName(
+                    queued)
+            bloom0 = self._filter_state(seen0) if self.use_bloom else None
             self._jobdesc("d0-state")
             t_d0s = time.time()
             seen, frontier, self._bloom, frontier_buckets = self._checkpoint_state(
-                self._new_links(main0.select(*LINK_COL_NAMES), from_depth=0),
-                bloom0, 0, seen_df=pages.select("url"),
+                links0, bloom0, 0, seen_df=seen0,
             )
             entry = self._record(
                 0, n_seeds, pages_count, pages_count, pages_by_bucket,
                 frontier_buckets, d0_fetch_ms, t_d0s, t_crawl,
             )
             if self.run_dir is not None:
-                self._commit(0, pages, seen, frontier, entry)
+                self._commit(0, pages.drop("__step"), seen, frontier, entry)
             self.phase_walls["d0_fetch_ms"] = d0_fetch_ms
             self.phase_walls["d0_state_ms"] = entry["state_ms"]
             all_pages = [pages]
@@ -694,15 +738,21 @@ class FrontierCrawler:
         # set, frontier by each checkpointed fresh-link delta
         seen_parts: list[DataFrame] = [seen]
         frontier_parts: list[DataFrame] = [frontier]
+        # the last superstep: BFS runs one per depth; a best-first superstep
+        # is a pop, and the budget or an empty queue ends the crawl
+        last_depth = cfg.depth_limit if cfg.superstep_is_depth else budget
+        fresh = None
         t_loop = time.time()
         # --- supersteps (ref :211-246 (pyc)) --------------------------------
-        for depth in range(start_depth, cfg.depth_limit + 1):
-            if pages_count >= budget:                      # :212
+        for depth in range(start_depth, last_depth + 1):
+            spent = attempts if cfg.budget_counts_attempts else pages_count
+            frontier_count = sum(frontier_buckets)
+            if spent >= budget or frontier_count == attempts - unqueued:  # :212 / :216
                 break
             self._jobdesc(f"ss{depth}-attempt")
             t0 = time.time()
-            remaining = budget - pages_count
-            frontier_count = sum(frontier_buckets)
+            remaining = budget - spent
+            k = remaining if cfg.batch_size is None else min(cfg.batch_size, remaining)
 
             if self.use_bloom:
                 # Bloom fast path + exact check on maybes == exact anti-join;
@@ -711,11 +761,18 @@ class FrontierCrawler:
                     frontier, self._bloom, seen, self.num_buckets, self.salt_hosts
                 )
             else:
-                cand = frontier.join(seen, "url", "left_anti")  # J1 exact
+                # J1 exact. An outer join, not left_anti: the optimizer
+                # pushes a left_anti join below the frontier's union, one
+                # join per part, and adaptive execution then scans seen's
+                # cached parts once per frontier part
+                cand = (
+                    frontier.join(seen.withColumn("__seen", F.lit(True)), "url", "left")
+                    .filter(F.col("__seen").isNull())
+                    .drop("__seen")
+                )
 
-            cand = cand.withColumn(
-                "score", native.score_url_native(F.col("url"), F.col("base_url"))
-            )
+            cand = cand.withColumn("score", score).withColumn(
+                "depth", F.lit(depth) if cfg.superstep_is_depth else F.col("depth"))
             cand = cand.filter(F.col("score") > F.lit(cfg.score_threshold))  # :218
             if self._robots_rules_df is not None:
                 cand = robots.enforce_robots_join(
@@ -741,16 +798,14 @@ class FrontierCrawler:
                     .drop("cap", "hrank", "host")
                 )
 
-            order = (F.desc("score"), F.asc("url"))        # canonical Q1 tie-break
             fetched_cache = None
-            if frontier_count <= remaining:
-                # Neither mode's budget cut can bite: cand ⊆ frontier and the
-                # last checkpoint observed |frontier| <= remaining, so the
-                # normal-mode slice keeps every candidate, and in
-                # comprehensive mode __cum_before <= |cand| - 1 < remaining
-                # for each one. Skip the count, rank and join-back (zero
-                # extra jobs on the common path: usually only one superstep
-                # per crawl is cut).
+            if frontier_count <= k:
+                # The cut cannot bite: cand ⊆ frontier and the last
+                # checkpoint observed |frontier| <= k, so every candidate is
+                # popped (normal mode, best-first), and in comprehensive
+                # mode __cum_before <= |cand| - 1 < remaining for each one.
+                # Skip the rank and join-back (zero extra jobs on the common
+                # path: usually only one superstep per crawl is cut).
                 attempted = self._fetch_attempts(cand, frontier_count)
             elif cfg.comprehensive:
                 # no slice (:220); budget bites mid-depth (:227): a candidate
@@ -761,13 +816,12 @@ class FrontierCrawler:
                 # crosses the rank's range shuffle or checkpoint; the join
                 # reuses the fetch join's url partitioning, so only the
                 # (url, __cum_before) table shuffles.
-                fetched_cache = self._fetch_attempts(
-                    cand, frontier_count
-                ).persist(CACHE_LEVEL)
-                appended = F.col("success") & (F.col("wc") >= 50)
+                fetched_cache = self._fetch_attempts(cand, frontier_count).persist(CACHE_LEVEL)
+                appended = F.col("success") & (F.col("wc") >= cfg.min_words)
                 slim = fetched_cache.select("url", "score", "success", "wc")
                 ranked = ranking.global_rank(
-                    slim, order, "__r", cum_col_flag=appended, caches=self._held
+                    slim, (F.desc("score"), F.asc("url")), "__r",  # canonical Q1 tie-break
+                    cum_col_flag=appended, caches=self._held,
                 ).select("url", "__cum_before")
                 attempted = (
                     fetched_cache.join(ranked, "url")
@@ -775,25 +829,20 @@ class FrontierCrawler:
                     .drop("__cum_before")
                 )
             else:
-                # :220 slice: count cand, and pay for the distributed top-k
-                # only when the count exceeds what the budget leaves
-                cand = cand.localCheckpoint(eager=True)
-                self._held.append(cand)
-                n_cand = cand.count()
-                if n_cand > remaining:
-                    ranked = ranking.global_rank(cand, order, "__r", caches=self._held)
-                    attempted = self._fetch_attempts(
-                        ranked.filter(F.col("__r") <= remaining).drop("__r"), None
-                    )
-                else:
-                    attempted = self._fetch_attempts(cand, n_cand, materialized=True)
+                # the pop (:220 slice; best-first's batch): the top k by
+                # (score desc, depth asc, url asc) — a BFS superstep's
+                # candidates share one depth, so that is its (score desc,
+                # url asc) order (Q1)
+                top = ranking.top_k(cand, (F.desc("score"), F.asc("depth"), F.asc("url")),
+                                    k, caches=self._held)
+                attempted = self._fetch_attempts(top, k, materialized=True)
             attempted = attempted.persist(CACHE_LEVEL)
             # the stats action that closes the attempt phase: materializes
             # what is still lazy of the chain (anti-join/bloom, scoring, cut,
             # fetch) into the cache and returns the loop-control counters and
             # the new pages' per-bucket lineage at once. attempt_ms covers
             # the whole phase, from t0 to this result.
-            kept = F.col("success") & (F.col("wc") >= 50)
+            kept = F.col("success") & (F.col("wc") >= cfg.min_words)  # :237
             attempted_count, pages_by_bucket = attempted.select(
                 self._bucket().alias("bucket"), kept.alias("kept")
             ).agg(F.count("*"), self._bucket_counts("kept")).first()
@@ -808,13 +857,14 @@ class FrontierCrawler:
             self._held.append(attempted)  # lazy pages and seen read it
 
             new_pages = (
-                attempted.filter(kept)  # :237
+                attempted.filter(kept)
                 .withColumn("title2", udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")))
-                .withColumn("depth", F.lit(depth))
-                .withColumn("discovery_phase", F.lit(f"depth_{depth}"))
+                .withColumn("discovery_phase", F.lit(cfg.phase.format(depth)))
             )
-            new_pages = new_pages.select(*pages_cols)
+            new_pages = new_pages.select(*pages_cols, F.lit(depth).alias("__step"))
             pages_count += added
+            attempts += attempted_count
+            spent = attempts if cfg.budget_counts_attempts else pages_count
 
             # Q5. Plain union, NO dropDuplicates: `attempted` is exactly
             # anti-joined against `seen` (Bloom path == exact path, audited),
@@ -824,15 +874,16 @@ class FrontierCrawler:
             # re-shuffled the FULL seen set every superstep — O(|seen|)
             # per-superstep shuffle for an invariant that already holds.
             seen_next = seen.unionByName(attempted.select("url"))
-            fresh = None
-            if depth < cfg.depth_limit:                   # Q7: last depth no expand
-                # the kept attempts ARE new_pages' rows (url is unique in
-                # attempted), so their links come from the cache, no join
+            if depth < last_depth:                         # Q7: last depth no expand
+                # the expanded attempts' rows carry their links (url is
+                # unique in attempted), so they come from the cache, no join
+                linked = F.col("success") if cfg.links_from_fetches else kept
                 links = self._new_links(
-                    attempted.filter(kept).select(*LINK_COL_NAMES),
-                    from_depth=depth,
+                    attempted.filter(linked & (F.col("depth") < cfg.depth_limit))
+                    .select(*LINK_COL_NAMES)
                 )
-                # Q6: union AFTER the depth; first-discovery ctx wins
+                # Q6: union AFTER the depth; first-discovery ctx wins; a URL
+                # ever in the frontier is never queued again
                 fresh = links.join(frontier, "url", "left_anti")
 
             # The loop exits after this superstep when the depth limit or the
@@ -842,11 +893,16 @@ class FrontierCrawler:
             # superstep is typically the LARGEST (budget exhaustion), so
             # skipping its state advance removes the single biggest
             # checkpoint. A resume from it runs no superstep either.
-            will_continue = depth < cfg.depth_limit and pages_count < budget
+            will_continue = depth < last_depth and spent < budget
             self._jobdesc(f"ss{depth}-state")
             t_state = time.time()
-            new_pages = new_pages.persist(CACHE_LEVEL)
-            self._held.append(new_pages)
+            if self.run_dir is not None:
+                # the commit writes the step's pages and the finalize and
+                # the crawl's consumer read them again; without a commit the
+                # finalize reads a content-free projection, and the one full
+                # read is the consumer's
+                new_pages = new_pages.persist(CACHE_LEVEL)
+                self._held.append(new_pages)
             if will_continue:
                 # INCREMENTAL state advance, O(|delta|) per superstep: both
                 # state tables are append-only (seen grows by exactly this
@@ -901,8 +957,13 @@ class FrontierCrawler:
             )
             if self.run_dir is not None:
                 # the exit superstep's frontier is frontier ∪ fresh, lazy
-                self._commit(depth, new_pages, seen, frontier, entry, fresh)
+                self._commit(depth, new_pages.drop("__step"), seen, frontier, entry, fresh)
 
+        if cfg.seen_on_enqueue:
+            # seen on enqueue: every URL ever queued, the exit superstep's
+            # fresh links included
+            seen = frontier if fresh is None else frontier.unionByName(fresh)
+            seen = seen.select("url")
         self.phase_walls["loop_ms"] = int((time.time() - t_loop) * 1000)
         self._jobdesc("finalize")
         t_fin = time.time()
@@ -912,8 +973,9 @@ class FrontierCrawler:
 
     def _finalize(self, all_pages: list[DataFrame], n_pages: int | None = None) -> DataFrame:
         """Union per-superstep pages + assign the exact crawl order ONCE:
-        within a depth, pages were appended in (score desc, url asc)
-        candidate order; depth 0 in seed order (multi-seed canonicalization).
+        superstep by superstep, in pop order (score desc, depth asc, url
+        asc); the seeds' superstep in seed order (multi-seed
+        canonicalization). A BFS superstep is one depth.
 
         ``n_pages`` (the already-known kept-page count) picks the join-back
         strategy: below BROADCAST_RANK_MAX the (url, rank) table is
@@ -925,9 +987,10 @@ class FrontierCrawler:
             F.when(F.col("depth") == 0, F.col("seed_id")).otherwise(F.lit(0)),
         )
         final_order = (
-            F.col("depth").asc(),
+            F.col("__step").asc(),
             F.col("__seed0").asc(),
             F.col("score").desc(),
+            F.col("depth").asc(),
             F.col("url").asc(),
         )
         # Rank a CONTENT-FREE projection, then join ranks back by url: page
@@ -937,13 +1000,13 @@ class FrontierCrawler:
         # join's url-hash partitioning through persist/union, so typically
         # only the (url, rank) table shuffles. url is unique per page (seen
         # dedup), so the inner join is exactly row-preserving.
-        slim = result.select("url", "depth", "__seed0", "score")
+        slim = result.select("url", "__step", "__seed0", "score", "depth")
         ranked = ranking.global_rank(
             slim, final_order, "rank", caches=self._held
         ).select("url", "rank")
         if n_pages is not None and n_pages <= BROADCAST_RANK_MAX:
             ranked = F.broadcast(ranked)
-        result = result.drop("__seed0").join(ranked, "url")
+        result = result.drop("__seed0", "__step").join(ranked, "url")
         # rank IS the crawl order; returning unsorted saves a full-content
         # range-shuffle sort that every consumer either redoes (sinks,
         # pipeline: .orderBy("rank") at the point of use) or never needs
@@ -958,22 +1021,26 @@ class FrontierCrawler:
         self._held = []
 
     # ------------------------------------------------------------- link expand
-    def _new_links(self, pages_with_links: DataFrame, from_depth: int) -> DataFrame:
-        """JVM-first link expansion + per-url first-context dedup (min
-        seed_id). ``linkexpand.expand_links`` keeps resolution + the common
-        normalize case inside whole-stage codegen (the pandas-UDF kernel runs
-        only on query/fragment/unicode links); the global groupBy subsumes
-        the kernel's per-page set dedup (same result, proven by
+    def _new_links(self, pages_with_links: DataFrame) -> DataFrame:
+        """JVM-first link expansion + per-url first-context dedup: the
+        lowest parent depth (+1), then the lowest seed_id.
+        ``linkexpand.expand_links`` keeps resolution + the common normalize
+        case inside whole-stage codegen (the pandas-UDF kernel runs only on
+        query/fragment/unicode links); the global groupBy subsumes the
+        kernel's per-page set dedup (same result, proven by
         tests/test_linkexpand.py + the frontier parity suite)."""
         links = linkexpand.expand_links(
             pages_with_links,
             "out_links",
             F.col("base_url"),
             F.col("base_domain"),
-            ["seed_id", "base_url", "base_domain"],
+            ["depth", "seed_id", "base_url", "base_domain"],
         )
         return (
             links.groupBy("url")
-            .agg(F.min(F.struct("seed_id", "base_url", "base_domain")).alias("ctx"))
-            .select("url", "ctx.seed_id", "ctx.base_url", "ctx.base_domain")
+            .agg(F.min(F.struct("depth", "seed_id", "base_url", "base_domain")).alias("ctx"))
+            .select(
+                "url", "ctx.seed_id", "ctx.base_url", "ctx.base_domain",
+                (F.col("ctx.depth") + 1).alias("depth"),
+            )
         )

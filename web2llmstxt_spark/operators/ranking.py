@@ -1,4 +1,4 @@
-"""Distributed global ranking — shared by the BFS and BestFirst crawlers.
+"""Distributed global ranking and top-k — shared by the crawl strategies.
 
 Two-pass rank: range-partition on the sort key, window WITHIN each partition
 (parallel), then add per-partition offsets (a tiny driver-side cumulative of
@@ -12,6 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import local_frame
+
+#: up to this k, top_k merges per-partition top-k rows on the driver
+#: (TakeOrdered); above it the driver would merge P x k rows serially, and
+#: the two-pass rank below takes over
+LARGE_BATCH = 4096
 
 
 def global_rank(
@@ -70,3 +75,18 @@ def global_rank(
         )
         d = d.withColumn("__cum_before", local_cum + F.col("__flag_off"))
     return d.drop("__pid", "__rank_off", "__flag_off")
+
+
+def top_k(df: DataFrame, order, k: int, caches: list | None = None) -> DataFrame:
+    """The first ``k`` rows of ``df`` by ``order`` (a total order).
+
+    Up to LARGE_BATCH the rows are taken by one TakeOrdered job and come
+    back as a driver-held LocalRelation: no cache to free, and a consumer
+    that needs their keys on the driver collects them without a job. Above
+    it, ``global_rank``'s two passes (its checkpoint goes to ``caches``).
+    """
+    if k <= LARGE_BATCH:
+        rows = df.orderBy(*order).limit(k).collect()
+        return local_frame(df.sparkSession, rows, df.schema)
+    ranked = global_rank(df, order, "__r", caches=caches)
+    return ranked.filter(F.col("__r") <= k).drop("__r")

@@ -24,12 +24,16 @@ from .frontier import TableFetcher
 
 
 def flatten_sitemap_index(entries: DataFrame, root_sitemaps: list[str],
-                          max_depth: int = 10) -> DataFrame:
+                          max_depth: int = 10, caches: list | None = None) -> DataFrame:
     """URLs reachable from root sitemaps through index edges (S5 recursion).
 
     Returns a DataFrame(url) of page URLs (is_index=false rows), deduped.
-    Cycle-safe: visited sitemaps are excluded each round.
+    Cycle-safe: visited sitemaps are excluded each round. ``caches``
+    receives each round's checkpoints, for the caller to release
+    (``session.release``) once the result is read.
     """
+    if caches is None:
+        caches = []
     spark = entries.sparkSession
     current = local_frame(spark, [(s,) for s in root_sitemaps], "sitemap_url string")
     visited = current
@@ -45,9 +49,11 @@ def flatten_sitemap_index(entries: DataFrame, root_sitemaps: list[str],
             .distinct()
         )
         nxt = nxt.localCheckpoint(eager=True)
+        caches.append(nxt)
         if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        caches.append(visited)
         current = nxt
     return (urls if urls is not None else local_frame(spark, [], "url string")).distinct()
 
@@ -85,13 +91,16 @@ def crawl_from_sitemap(
     base_url: str,
     root_sitemaps: list[str],
     max_pages: int = 50,
+    caches: list | None = None,
 ) -> DataFrame:
     """The full sitemap strategy: flatten -> prioritize -> fetch -> quality.
 
     Pages carry score=1.0, depth=0, discovery_phase='sitemap'
-    (ref crawler/web_crawler.py:1142-1153).
+    (ref crawler/web_crawler.py:1142-1153). ``caches`` receives the
+    checkpoints the result reads, for the caller to release once it is
+    done with the pages.
     """
-    urls = flatten_sitemap_index(sitemap_entries, root_sitemaps)
+    urls = flatten_sitemap_index(sitemap_entries, root_sitemaps, caches=caches)
     todo = prioritize_sitemap_urls(urls, base_url, max_pages)
     # keep the RAW url for ordering: crawl order = the prioritized raw-url
     # order restricted to kept pages (the reference crawls the url list in
@@ -107,7 +116,7 @@ def crawl_from_sitemap(
         F.asc(F.length("url_raw")),
         F.asc("url_raw"),
     )
-    kept = ranking.global_rank(kept, order, "rank")
+    kept = ranking.global_rank(kept, order, "rank", caches=caches)
     return kept.select(
         "url",
         udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")).alias("title"),

@@ -41,6 +41,24 @@ class CrawlConfig:
     #: dropped before scoring order is taken
     deny_hosts: frozenset | None = None
 
+    # --- policy (class constants, not settings): the superstep engine
+    # (operators/frontier.FrontierCrawler) reads these names off its config;
+    # oracle/bestfirst_oracle.BestFirstConfig holds the best-first values
+    batch_size = None  # no pop batch: a superstep attempts up to the budget left
+    budget_counts_attempts = False  # the budget counts kept pages (:212)
+    seed_score = 10.0  # main pages (:196-206)
+    seed_phase = "main_page"
+    seed_min_words = None  # main pages have no word gate
+    phase = "depth_{}"  # .format(depth)
+    min_words = 50  # :237
+    links_from_fetches = False  # links come from kept pages only (:239)
+    superstep_is_depth = True  # one superstep per depth, depth_limit of them
+    seen_on_enqueue = False  # URLs enter seen on attempt (quirk Q5)
+    scorer = "importance"  # kernels.score_url_importance
+    # Bloom pre-filter (operators/bloom.py) ahead of the exact anti-join
+    # against seen, which outgrows the frontier on a deep crawl
+    seen_prefilter = True
+
     @property
     def depth_limit(self) -> int:
         # llmsgen/crawler/web_crawler.py:208 (pyc)
@@ -120,9 +138,9 @@ def crawl(corpus: Corpus, cfg: CrawlConfig, seeds: list[tuple[int, str]] | None 
                 "title": kernels.extract_title(row.title, row.content, row.url),
                 "content": row.content,
                 "word_count": kernels.word_count(row.content),
-                "score": 10.0,
+                "score": cfg.seed_score,
                 "depth": 0,
-                "discovery_phase": "main_page",
+                "discovery_phase": cfg.seed_phase,
                 "seed_id": seed_id,
             }
         )
@@ -181,7 +199,7 @@ def crawl(corpus: Corpus, cfg: CrawlConfig, seeds: list[tuple[int, str]] | None 
             res.seen.add(link)             # :233 — seen on ATTEMPT (quirk Q5)
             if row is not None and row.fetch_ok:
                 wc = kernels.word_count(row.content)  # :236
-                if wc >= 50:               # :237
+                if wc >= cfg.min_words:    # :237
                     res.pages.append(
                         {
                             "url": row.url,
@@ -190,7 +208,7 @@ def crawl(corpus: Corpus, cfg: CrawlConfig, seeds: list[tuple[int, str]] | None 
                             "word_count": wc,
                             "score": score,
                             "depth": depth,
-                            "discovery_phase": f"depth_{depth}",
+                            "discovery_phase": cfg.phase.format(depth),
                             "seed_id": seed_id,
                         }
                     )

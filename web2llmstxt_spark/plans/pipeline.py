@@ -7,12 +7,14 @@ describe, 15-key run metadata, output dispatch.
 
 from __future__ import annotations
 
+import inspect
 import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import kernels
+from ..oracle.bestfirst_oracle import BestFirstConfig
 from ..oracle.crawl_oracle import CrawlConfig
 from ..operators.frontier import FrontierCrawler
 from ..session import CACHE_LEVEL, release
@@ -21,13 +23,13 @@ from . import distill
 
 EXPORT_FORMATS = ("text", "json", "yaml")
 OUTPUT_STYLES = ("v1", "v2")
-# the crawl options each strategy reads; the others must keep their default
-# (None or False) under it
+# the crawl options each strategy reads; the others must keep their
+# generate_llmstxt default under it
 STRATEGY_OPTIONS = {
     "systematic": (
         "safety_limit", "robots_rules", "enforce_robots", "host_caps", "run_dir", "seeds",
     ),
-    "bestfirst": (),
+    "bestfirst": ("bestfirst_batch_size",),
     "sitemap": ("sitemap_blobs", "robots_text", "root_sitemaps"),
 }
 CRAWL_STRATEGIES = tuple(STRATEGY_OPTIONS)
@@ -52,8 +54,9 @@ def _check_output_options(
         raise ValueError(
             f"crawl_strategy must be one of {CRAWL_STRATEGIES}, got {crawl_strategy!r}"
         )
+    defaults = inspect.signature(generate_llmstxt).parameters
     ignored = [name for name, value in crawl_options.items()
-               if value not in (None, False) and name not in STRATEGY_OPTIONS[crawl_strategy]]
+               if value != defaults[name].default and name not in STRATEGY_OPTIONS[crawl_strategy]]
     if ignored:
         raise ValueError(
             f"crawl_strategy {crawl_strategy!r} ignores {', '.join(ignored)}; leave it unset"
@@ -78,7 +81,7 @@ def generate_llmstxt(
     generated_at: str | None = None,
     seeds: list[tuple[int, str]] | None = None,
     crawl_strategy: str = "systematic",
-    bestfirst_batch_size: int = 10,
+    bestfirst_batch_size: int | str = 10,
     desc_cache_dir: str | None = None,
     sitemap_blobs=None,
     robots_text: str | None = None,
@@ -112,8 +115,10 @@ def generate_llmstxt(
     ``crawl_strategy`` mirrors the reference dispatch (v1 generator/
     llms_generator.py:694-700; v2 llmsgen pyc names
     ``discover_all_links_first`` AND ``crawl_website``):
-    'systematic' -> the BFS frontier engine; 'bestfirst' -> the
-    keyword-relevance BestFirst engine (operators/bestfirst.py);
+    'systematic' -> the BFS frontier engine; 'bestfirst' -> the same
+    superstep engine with the keyword-relevance best-first policy
+    (oracle/bestfirst_oracle.BestFirstConfig; ``bestfirst_batch_size`` a
+    positive int or 'auto');
     'sitemap' -> raw-XML sitemap crawl (operators/sitemap_xml.py +
     operators/sitemap.py) over ``sitemap_blobs`` (sitemap_url, body) —
     roots from ``root_sitemaps`` or auto-discovery (well-known paths +
@@ -123,8 +128,8 @@ def generate_llmstxt(
         export_format, output_style, crawl_strategy,
         safety_limit=safety_limit, robots_rules=robots_rules,
         enforce_robots=enforce_robots, host_caps=host_caps, run_dir=run_dir,
-        seeds=seeds, sitemap_blobs=sitemap_blobs, robots_text=robots_text,
-        root_sitemaps=root_sitemaps,
+        seeds=seeds, bestfirst_batch_size=bestfirst_batch_size,
+        sitemap_blobs=sitemap_blobs, robots_text=robots_text, root_sitemaps=root_sitemaps,
     )
     start = time.time()
     # ref :169 (pyc): 3x page budget when full text requested
@@ -134,15 +139,8 @@ def generate_llmstxt(
     comprehensive = full_text_only or include_full_text  # ref :175 (pyc)
 
     crawler = None
-    if crawl_strategy == "bestfirst":
-        from ..operators.bestfirst import BestFirstCrawler
-
-        bf = BestFirstCrawler(
-            spark, site_pages, base_url,
-            max_pages=actual_max_pages, batch_size=bestfirst_batch_size,
-        )
-        pages_df, _seen = bf.crawl()
-    elif crawl_strategy == "sitemap":
+    held = []  # the sitemap crawl's checkpoints
+    if crawl_strategy == "sitemap":
         from ..operators import sitemap as sm
         from ..operators import sitemap_xml
 
@@ -153,16 +151,20 @@ def generate_llmstxt(
             )
         entries = sitemap_xml.parse_sitemaps(sitemap_blobs, base_url)
         pages_df = sm.crawl_from_sitemap(
-            spark, site_pages, entries, base_url, roots, max_pages=actual_max_pages
+            spark, site_pages, entries, base_url, roots, max_pages=actual_max_pages,
+            caches=held,
         )
     else:
-        cfg = CrawlConfig(
-            max_pages=actual_max_pages,
-            comprehensive=comprehensive,
-            safety_limit=calculated_safety_limit,
-            enforce_robots=enforce_robots,
-            host_caps=host_caps,
-        )
+        if crawl_strategy == "bestfirst":
+            cfg = BestFirstConfig(max_pages=actual_max_pages, batch_size=bestfirst_batch_size)
+        else:
+            cfg = CrawlConfig(
+                max_pages=actual_max_pages,
+                comprehensive=comprehensive,
+                safety_limit=calculated_safety_limit,
+                enforce_robots=enforce_robots,
+                host_caps=host_caps,
+            )
         crawler = FrontierCrawler(
             spark, site_pages, cfg, robots_rules=robots_rules, run_dir=run_dir,
         )
@@ -178,9 +180,10 @@ def generate_llmstxt(
             start_time=start, warc_out=warc_out,
         )
     finally:
+        # distill's persisted pages were the crawl output's last reader
         if crawler is not None:
-            # distill's persisted pages were the crawl output's last reader
             crawler.release()
+        release(held)
 
 
 def distill_to_output(

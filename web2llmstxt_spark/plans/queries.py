@@ -159,7 +159,7 @@ def sql_frontier_topk_v1():
 
 def q_bestfirst_order(spark, sf_dir):
     """C3 stand-in: BestFirst keyword-relevance ordering (the priority that
-    drives operators/bestfirst.py) — hit count, hit-fraction score, top-50.
+    drives the best-first crawl) — hit count, hit-fraction score, top-50.
     Ref: crawl_website keyword consts, llmsgen/crawler/web_crawler.py:251+
     (pyc); scorer spec pinned in oracle/bestfirst_oracle.py."""
     from ..functions import kernels

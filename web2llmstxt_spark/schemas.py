@@ -93,6 +93,7 @@ SNAPSHOTS = {
             StructField("seed_id", IntegerType()),
             StructField("base_url", StringType()),
             StructField("base_domain", StringType()),
+            StructField("depth", IntegerType()),
         ]
     ),
 }
