@@ -1,6 +1,7 @@
 """Kill-and-resume: a crawl resumed from any superstep snapshot must produce
 the identical final pages (order included) and URL-seen set (north rule)."""
 
+import json
 import os
 import shutil
 
@@ -28,13 +29,14 @@ def run_full(spark, corpus, cfg, run_dir):
     )
 
 
-def test_resume_from_each_superstep(spark, tmp_path):
-    corpus = generate_corpus(seed=37, n_hosts=1, pages_per_host=30)
-    cfg = CrawlConfig(max_pages=8)
+def resume_from_each_superstep(spark, tmp_path, corpus, cfg):
+    """Crash the durable crawl right after each committed superstep in turn
+    and resume it: every resume equals the uninterrupted crawl. Returns the
+    last committed superstep."""
     run_dir = str(tmp_path / "full")
     full_pages, full_seen, site, seeds = run_full(spark, corpus, cfg, run_dir)
     last = checkpoint.last_complete_superstep(run_dir)
-    assert last is not None and last >= 1
+    assert last is not None
 
     for cut in range(0, last + 1):
         # simulate a crash right after superstep `cut`: copy the prefix of
@@ -49,6 +51,26 @@ def test_resume_from_each_superstep(spark, tmp_path):
         got_seen = {r.url for r in seen.collect()}
         assert got_pages == full_pages, f"resume from {cut}: pages mismatch"
         assert got_seen == full_seen, f"resume from {cut}: seen mismatch"
+    return last
+
+
+def test_resume_from_each_superstep(spark, tmp_path):
+    corpus = generate_corpus(seed=37, n_hosts=1, pages_per_host=30)
+    assert resume_from_each_superstep(spark, tmp_path, corpus, CrawlConfig(max_pages=8)) >= 1
+
+
+def test_resume_when_seeds_spend_the_budget(spark, tmp_path):
+    """Three kept seeds against a budget of two: no superstep runs, so
+    depth 0 checkpoints no state and commits its lazy seen and frontier
+    as an exiting superstep does; the resume from it equals the crawl."""
+    corpus = generate_corpus(seed=37, n_hosts=3, pages_per_host=10)
+    cfg = CrawlConfig(max_pages=1, safety_limit=2)
+    assert resume_from_each_superstep(spark, tmp_path, corpus, cfg) == 0
+    # the commit observed the lazy frontier it wrote
+    base = str(tmp_path / "full" / "superstep=0")
+    with open(os.path.join(base, "metrics.json")) as f:
+        by_bucket = json.load(f)["frontier_by_bucket"]
+    assert sum(by_bucket.values()) == spark.read.parquet(os.path.join(base, "frontier")).count() > 0
 
 
 def test_partial_snapshot_detected(spark, tmp_path):
@@ -124,8 +146,6 @@ def test_snapshot_metrics_carry_partition_lineage(spark, tmp_path):
     """Every committed superstep's metrics.json records per-partition
     (host-hash bucket) frontier and page counts whose totals equal the
     snapshotted state tables (north rule: per-partition lineage + metrics)."""
-    import json
-
     corpus = generate_corpus(seed=41, n_hosts=2, pages_per_host=20)
     cfg = CrawlConfig(max_pages=6)
     run_dir = str(tmp_path / "lineage")

@@ -1,10 +1,12 @@
 """Sitemap strategy (S4/S5/O4), pagination synthesis (L3), multimodal ops."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from web2llmstxt_spark import schemas
 from web2llmstxt_spark.functions import kernels as K
 from web2llmstxt_spark.operators import multimodal, sitemap
+from web2llmstxt_spark.operators.frontier import FrontierCrawler
 from web2llmstxt_spark.sources.corpus import generate_corpus
 
 
@@ -37,24 +39,97 @@ class TestPaginationKernels:
         assert not K.is_valid_domain_url("ftp://example.com/x", v)
 
 
+def _sitemap_crawl(spark, max_pages):
+    """The seed-41 two-host corpus' cached site table and a sitemap crawler
+    seeded from ex0's prioritized sitemap URLs."""
+    corpus = generate_corpus(seed=41, n_hosts=2, pages_per_host=25)
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    entries = spark.createDataFrame(
+        corpus.sitemap_entries,
+        "sitemap_url string, parent_sitemap string, url string, is_index boolean",
+    )
+    seeds = sitemap.sitemap_seeds(
+        entries, "https://ex0.example/", ["https://ex0.example/sitemap.xml"], max_pages)
+    return site, seeds, FrontierCrawler(spark, site, sitemap.SitemapConfig(max_pages))
+
+
+def _job_descriptions(spark, group, run):
+    """``run()`` under job group ``group``; the descriptions of its jobs."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    descriptions = [store.job(j).description()
+                    for j in sorted(sc.statusTracker().getJobIdsForGroup(group))]
+    return [d.get() if d.isDefined() else None for d in descriptions]
+
+
 class TestSitemapStrategy:
     def test_flatten_prioritize_crawl(self, spark):
-        corpus = generate_corpus(seed=41, n_hosts=2, pages_per_host=25)
-        site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES)
-        entries = spark.createDataFrame(
-            corpus.sitemap_entries,
-            "sitemap_url string, parent_sitemap string, url string, is_index boolean",
-        )
-        pages = sitemap.crawl_from_sitemap(
-            spark, site, entries, "https://ex0.example/",
-            ["https://ex0.example/sitemap.xml"], max_pages=10,
-        )
-        rows = pages.collect()
+        site, seeds, crawler = _sitemap_crawl(spark, max_pages=10)
+        try:
+            assert 0 < len(seeds) <= 10
+            assert [sid for sid, _url in seeds] == list(range(len(seeds)))
+            pages, _seen = crawler.crawl(seeds)
+            rows = pages.orderBy("rank").collect()
+        finally:
+            crawler.release()
+            site.unpersist()
         assert 0 < len(rows) <= 10
         assert all(r.discovery_phase == "sitemap" and r.score == 1.0 for r in rows)
+        assert all(r.depth == 0 for r in rows)
         # domain filter: no ex1/other urls through ex0's sitemap run
         assert all("ex0.example" in r.url for r in rows)
         assert all(r.word_count >= 50 for r in rows)
+        # the crawl order is the prioritized seed order
+        order = [K.normalize_url(url) for _sid, url in seeds]
+        assert [r.url for r in rows] == [u for u in order if u in {r.url for r in rows}]
+
+    def test_sitemap_crawl_tags_its_jobs_and_checkpoints_no_state(self, spark):
+        """A depth-0-only crawl runs no superstep, so nothing reads its
+        state: its jobs carry crawl:d0-fetch and crawl:finalize and none
+        crawl:d0-state."""
+        site, seeds, crawler = _sitemap_crawl(spark, max_pages=10)
+        spark.sparkContext.setJobDescription(None)
+        try:
+            descriptions = _job_descriptions(
+                spark, "sitemap-tags", lambda: crawler.crawl(seeds)[0].collect())
+        finally:
+            crawler.release()
+            site.unpersist()
+        crawl = [d for d in descriptions if d is not None]
+        assert {"crawl:d0-fetch", "crawl:finalize"} <= set(crawl), descriptions
+        assert all(d.startswith("crawl:") for d in crawl), descriptions
+        assert "crawl:d0-state" not in crawl, descriptions
+
+    def test_crawl_restores_caller_job_description(self, spark):
+        """The crawl's phase tags end with the crawl: the caller's next job
+        carries the caller's description, after a return and after a
+        raise."""
+        sc = spark.sparkContext
+        site, seeds, crawler = _sitemap_crawl(spark, max_pages=5)
+        sc.setJobDescription("caller")
+        try:
+            pages, _seen = crawler.crawl(seeds)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            after = _job_descriptions(spark, "caller-next", pages.count)
+            assert after and set(after) == {"caller"}, after
+
+            def boom(_links):
+                raise RuntimeError("link expansion failed")
+
+            crawler._new_links = boom  # raises after the crawl tagged d0-fetch
+            with pytest.raises(RuntimeError, match="link expansion failed"):
+                crawler.crawl(seeds)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+            crawler.release()
+            site.unpersist()
 
     def test_prioritization_is_shallowest_first(self, spark):
         urls = spark.createDataFrame(

@@ -104,10 +104,12 @@ def test_parse_sitemaps_to_flatten_pipeline(spark):
 def test_pipeline_sitemap_strategy_from_raw_xml(spark, tmp_path):
     """generate_llmstxt(crawl_strategy='sitemap') end-to-end from raw XML
     blobs: auto-discovery (robots + well-known path) -> mapInPandas parse ->
-    index recursion -> prioritized crawl -> llms.txt — and the result equals
-    the same crawl over the corpus' pre-parsed sitemap_entries table."""
+    index recursion -> prioritized seeds -> crawl engine -> llms.txt — and
+    the result equals the same crawl over the corpus' pre-parsed
+    sitemap_entries table."""
     from web2llmstxt_spark import schemas
-    from web2llmstxt_spark.operators import sitemap as sm
+    from web2llmstxt_spark.operators.frontier import FrontierCrawler
+    from web2llmstxt_spark.operators.sitemap import SitemapConfig, sitemap_seeds
     from web2llmstxt_spark.plans.pipeline import generate_llmstxt
     from web2llmstxt_spark.sources.corpus import generate_corpus
 
@@ -137,10 +139,70 @@ def test_pipeline_sitemap_strategy_from_raw_xml(spark, tmp_path):
         corpus.sitemap_entries,
         "sitemap_url string, parent_sitemap string, url string, is_index boolean",
     )
-    direct = sm.crawl_from_sitemap(
-        spark, site, entries_tbl, base, [f"{base.rstrip('/')}/sitemap.xml"], max_pages=10
+    seeds = sitemap_seeds(entries_tbl, base, [f"{base.rstrip('/')}/sitemap.xml"], 10)
+    crawler = FrontierCrawler(spark, site, SitemapConfig(max_pages=10))
+    direct, _seen = crawler.crawl(seeds)
+    try:
+        assert [p["url"] for p in res["pages"]] == [
+            r.url for r in direct.orderBy("rank").collect()]
+    finally:
+        crawler.release()
+        site.unpersist()
+
+
+def test_pipeline_sitemap_one_page_per_normalized_url(spark, tmp_path):
+    """A sitemap that lists one page as /a, /a/ and /a?utm_source=x gives
+    one page and one llms.txt bullet: the crawl's identity is the
+    normalized URL (P1). The page takes the place of its first raw URL in
+    the prioritized order."""
+    import re
+    import urllib.parse
+    from xml.sax.saxutils import escape
+
+    from web2llmstxt_spark import schemas
+    from web2llmstxt_spark.functions.kernels import normalize_url
+    from web2llmstxt_spark.operators.sitemap import prioritize_sitemap_urls
+    from web2llmstxt_spark.plans.pipeline import generate_llmstxt
+    from web2llmstxt_spark.session import local_frame
+    from web2llmstxt_spark.sources.corpus import generate_corpus
+
+    corpus = generate_corpus(seed=53, n_hosts=1, pages_per_host=12)
+    base = corpus.seeds[0][1]
+    site = local_frame(spark, corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+
+    def variants(url):
+        parts = urllib.parse.urlsplit(url)
+        slash = parts._replace(path=parts.path.rstrip("/") + "/")
+        query = "&".join(q for q in (parts.query, "utm_source=x") if q)
+        return [url, urllib.parse.urlunsplit(slash),
+                urllib.parse.urlunsplit(parts._replace(query=query))]
+
+    listed = [v for _sm, _p, url, is_index in corpus.sitemap_entries
+              if not is_index for v in variants(url)]
+    root = f"{base}sitemap.xml"
+    body = "<urlset>" + "".join(f"<url><loc>{escape(u)}</loc></url>" for u in listed)
+    blobs = local_frame(spark, [(root, (body + "</urlset>").encode())],
+                        "sitemap_url string, body binary")
+    # a budget past the list: no variant is cut by the limit
+    res = generate_llmstxt(
+        spark, site, base, str(tmp_path), max_pages=len(listed) + 1,
+        crawl_strategy="sitemap", sitemap_blobs=blobs, root_sitemaps=[root],
+        collect_entries=True, generated_at="2024-01-01T00:00:00",
     )
-    assert [p["url"] for p in res["pages"]] == [r.url for r in direct.orderBy("rank").collect()]
+    try:
+        got = [p["url"] for p in res["pages"]]
+        raw = [r.url for r in prioritize_sitemap_urls(
+            local_frame(spark, [(u,) for u in listed], "url string"), base,
+            len(listed)).collect()]
+    finally:
+        site.unpersist()
+    first = list(dict.fromkeys(normalize_url(u) for u in raw))
+    assert len(got) > 3 and len(got) == len(set(got)), got
+    # each page sits where its first raw URL sits in the prioritized order
+    assert got == [u for u in first if u in set(got)]
+    txt = open(next(p for p in res["paths"] if p.endswith("-llms.txt"))).read()
+    bullets = re.findall(r"^- \[.*\]\((.*?)\): ", txt, re.M)
+    assert sorted(bullets) == sorted(got)
 
 
 def test_auto_discovery(spark):

@@ -17,8 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    IntegerType,
     StringType,
 )
 
@@ -42,12 +40,6 @@ def extract_links_udf(
             for links, b, d in zip(out_links, base_urls, base_domains)
         ]
     )
-
-
-@pandas_udf(StringType())
-def clean_title_udf(titles: pd.Series) -> pd.Series:
-    """P10 (distill side). Ref: llmsgen/utils/text_utils.py:30-46."""
-    return titles.map(kernels.clean_title)
 
 
 @pandas_udf(StringType())
@@ -119,25 +111,10 @@ def extract_key_sentences_udf(titles: pd.Series, contents: pd.Series) -> pd.Seri
     )
 
 
-@pandas_udf(BooleanType())
-def is_navigation_text_udf(texts: pd.Series) -> pd.Series:
-    """D3. Ref: llmsgen/utils/text_utils.py:64-76."""
-    return texts.map(lambda t: kernels.is_navigation_text(t or ""))
-
-
 @pandas_udf(StringType())
 def extract_domain_udf(urls: pd.Series) -> pd.Series:
     """P12. Ref: llmsgen/utils/text_utils.py:106-135."""
     return urls.map(kernels.extract_domain_from_url)
-
-
-@pandas_udf(IntegerType())
-def host_bucket_udf(hosts: pd.Series, num_buckets: pd.Series) -> pd.Series:
-    """Deterministic host-hash partition id (north-rule frontier partitioning)."""
-    return pd.Series(
-        [kernels.host_bucket(h or "", int(n)) for h, n in zip(hosts, num_buckets)],
-        dtype="int32",
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""The BSP frontier crawler — the reference's crawl loops as Spark supersteps.
+"""The BSP frontier crawler — the reference's three crawl strategies as
+Spark supersteps, one loop with three policies.
 
 Rebuilds v2 ``discover_all_links_first`` (llmsgen/crawler/web_crawler.py:
 169-249 (pyc), SURVEY.md §3-EP3) as a driver-side superstep loop where each
@@ -28,6 +29,13 @@ best-first superstep runs 9 Spark jobs on a one-host corpus at batch 10
 (4 cores): 2 for the pop, 4 for the fetch and its stats, 3 for the state
 delta; the last superstep skips the state.
 
+The reference's sitemap crawl (v1 ``crawl_from_sitemap``, crawler/
+web_crawler.py:1081-1191) is the same loop's depth 0 under
+``operators.sitemap.SitemapConfig``: the seeds are the prioritized sitemap
+URLs (``operators.sitemap.sitemap_seeds``), ``depth_limit`` is 0 so no
+superstep runs, and a depth-0 page's rank is its seed order, i.e. the
+prioritized URL order. Raw URLs that normalize to one URL are one page.
+
 Scale design (10^10-URL frontier, north rule):
 - frontier & seen are hash-partitioned by host bucket; the anti-join
   shuffles once on url and is preceded (optional) by the partition-local
@@ -56,6 +64,8 @@ Scale design (10^10-URL frontier, north rule):
 - per-superstep state has ONE path: append-only seen/frontier parts
   advanced by one checkpoint job (``_checkpoint_state``); a durable crawl
   (run_dir) adds a parquet commit of that state (``_commit``) => resume.
+  A step after which no superstep runs, depth 0 included, checkpoints no
+  state: it stays lazy, and a durable crawl commits it as it is.
 """
 
 from __future__ import annotations
@@ -400,16 +410,18 @@ class FrontierCrawler:
         Runs under the step's state job description; its wall is added to
         the entry's state_ms and wall_ms. ``fresh``: an exiting step's
         frontier delta, never materialized (dead state) — written with
-        ``frontier``, its lineage observed on that write."""
+        ``frontier`` (None: depth 0 exits, ``fresh`` is the whole
+        frontier), its lineage observed on that write."""
         t = time.time()
         obs = None
         if fresh is not None:
             obs = Observation(f"commit_{self.run_id}_{superstep}")
-            frontier = frontier.unionByName(
+            fresh = (
                 fresh.withColumn("bucket", self._bucket())
                 .observe(obs, self._bucket_counts("true").alias("by_bucket"))
                 .drop("bucket")
             )
+            frontier = fresh if frontier is None else frontier.unionByName(fresh)
         base = os.path.join(self.run_dir, f"superstep={superstep}")
         for name, df in (("pages", pages), ("seen", seen), ("frontier", frontier)):
             schema = schemas.SNAPSHOTS[name]
@@ -593,14 +605,26 @@ class FrontierCrawler:
 
         The config's policy values (``CrawlConfig``: BFS, one superstep per
         depth; ``oracle.bestfirst_oracle.BestFirstConfig``: batched
-        best-first from one seed) pick the scorer, the pop size, what the
-        budget counts, where links come from and what the seen set holds;
-        the loop below is the same for both.
+        best-first from one seed; ``operators.sitemap.SitemapConfig``: the
+        seeds only, a sitemap's URL list) pick the scorer, the pop size,
+        what the budget counts, where links come from and what the seen set
+        holds; the loop is the same for all three.
 
         ``_resume=(last_superstep, pages, seen, frontier, metrics.json)``
         continues from a committed state/checkpoint.py snapshot instead of
         fetching the seeds again.
+
+        The crawl tags its jobs ``crawl:<phase>``; the caller's job
+        description is back in place when it returns or raises.
         """
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        try:
+            return self._crawl(seeds, _resume)
+        finally:
+            sc.setJobDescription(caller)
+
+    def _crawl(self, seeds: list[tuple[int, str]], _resume):
         spark = self.spark
         cfg = self.cfg
         budget = cfg.effective_safety_limit
@@ -670,6 +694,10 @@ class FrontierCrawler:
         ]
         LINK_COL_NAMES = ["url", "out_links", "seed_id", "base_url", "base_domain", "depth"]
         start_depth = 1
+        # the last superstep: BFS runs one per depth; a best-first superstep
+        # is a pop, and the budget or an empty queue ends the crawl
+        last_depth = cfg.depth_limit if cfg.superstep_is_depth else budget
+        fresh = None
         # Known frontier size (the last state checkpoint's Observation, or a
         # resumed superstep's metrics.json): lets the budget cut be SKIPPED
         # without a count job whenever |frontier| fits the pop, and bounds
@@ -717,18 +745,25 @@ class FrontierCrawler:
                 queued = seeds_df.withColumn("depth", F.lit(0))
                 links0 = links0.join(queued.select("url"), "url", "left_anti").unionByName(
                     queued)
-            bloom0 = self._filter_state(seen0) if self.use_bloom else None
             self._jobdesc("d0-state")
             t_d0s = time.time()
-            seen, frontier, self._bloom, frontier_buckets = self._checkpoint_state(
-                links0, bloom0, 0, seen_df=seen0,
-            )
+            spent = attempts if cfg.budget_counts_attempts else pages_count
+            if 0 < last_depth and spent < budget:
+                bloom0 = self._filter_state(seen0) if self.use_bloom else None
+                seen, frontier, self._bloom, frontier_buckets = self._checkpoint_state(
+                    links0, bloom0, 0, seen_df=seen0,
+                )
+            else:
+                # the exit rule of every superstep: no superstep will read
+                # the state, so it stays lazy and no state job runs
+                seen, frontier, fresh = seen0, None, links0
+                frontier_buckets = [0] * self.num_buckets
             entry = self._record(
                 0, n_seeds, pages_count, pages_count, pages_by_bucket,
                 frontier_buckets, d0_fetch_ms, t_d0s, t_crawl,
             )
             if self.run_dir is not None:
-                self._commit(0, pages.drop("__step"), seen, frontier, entry)
+                self._commit(0, pages.drop("__step"), seen, frontier, entry, fresh)
             self.phase_walls["d0_fetch_ms"] = d0_fetch_ms
             self.phase_walls["d0_state_ms"] = entry["state_ms"]
             all_pages = [pages]
@@ -738,10 +773,6 @@ class FrontierCrawler:
         # set, frontier by each checkpointed fresh-link delta
         seen_parts: list[DataFrame] = [seen]
         frontier_parts: list[DataFrame] = [frontier]
-        # the last superstep: BFS runs one per depth; a best-first superstep
-        # is a pop, and the budget or an empty queue ends the crawl
-        last_depth = cfg.depth_limit if cfg.superstep_is_depth else budget
-        fresh = None
         t_loop = time.time()
         # --- supersteps (ref :211-246 (pyc)) --------------------------------
         for depth in range(start_depth, last_depth + 1):
@@ -962,7 +993,7 @@ class FrontierCrawler:
         if cfg.seen_on_enqueue:
             # seen on enqueue: every URL ever queued, the exit superstep's
             # fresh links included
-            seen = frontier if fresh is None else frontier.unionByName(fresh)
+            seen = _union_parts([df for df in (frontier, fresh) if df is not None])
             seen = seen.select("url")
         self.phase_walls["loop_ms"] = int((time.time() - t_loop) * 1000)
         self._jobdesc("finalize")

@@ -522,23 +522,6 @@ def semdedup(
     return assigned.join(dropped, id_col, "left_anti")
 
 
-def pairwise_topk_per_vector(df: DataFrame, k: int = 5, vec_col: str = "embedding",
-                             id_col: str = "vec_id", max_rows: int = 2000) -> DataFrame:
-    """All-pairs KNN for small fan-in (block nested loop via crossJoin of a
-    broadcast sample). Guard-railed: refuses beyond max_rows (use LSH path)."""
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(f"pairwise KNN is O(n^2); {n} rows > {max_rows}. Use lsh_topk.")
-    left = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    right = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    pairs = left.join(F.broadcast(right), F.col("a") != F.col("b"))
-    sims = pairs.select("a", "b", cosine_sim(F.col("va"), F.col("vb")).alias("sim"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a").orderBy(F.desc("sim"), F.asc("b"))
-    return sims.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
-
-
 # ---------------------------------------------------------------------------
 # Feature-hashing text embeddings (model-free embedding generation)
 # ---------------------------------------------------------------------------

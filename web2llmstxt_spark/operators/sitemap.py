@@ -1,4 +1,4 @@
-"""Sitemap crawl strategy (S4/S5/O4 + the v1 ``crawl_from_sitemap`` path).
+"""Sitemap crawl strategy (S4/S5/O4, the v1 ``crawl_from_sitemap`` path).
 
 Reference: crawler/web_crawler.py:761-813 (strategy), :901-1079 (recursive
 sitemap-index parse), :801-806 (prioritization), :1081-1191 (url-list crawl,
@@ -8,19 +8,62 @@ Here the already-parsed ``sitemap_entries`` table (FIXTURES.md §5) replaces
 live XML fetching: one row per (sitemap_url, url, is_index). Recursive index
 flattening is the standard iterative driver loop (each round = one
 DataFrame job; recursion depth = sitemap-index nesting, tiny).
+
+The crawl itself is the superstep engine's depth 0: ``sitemap_seeds`` turns
+the prioritized URL list into seeds and ``SitemapConfig`` holds the policy
+``operators/frontier.FrontierCrawler`` reads, so the URL list is fetched,
+gated, titled and ranked as any crawl's seeds are.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from ..functions import kernels, udfs
-from ..session import local_frame
-from . import ranking
-from .frontier import TableFetcher
+from ..functions import kernels
+from ..session import local_frame, release
+
+
+@dataclass
+class SitemapConfig:
+    """The sitemap crawl: its one setting, and the policy values the
+    superstep engine (operators/frontier.FrontierCrawler) reads.
+    ``oracle.crawl_oracle.CrawlConfig`` holds the BFS values of the same
+    names.
+
+    The seeds are the prioritized sitemap URLs (``sitemap_seeds``) and the
+    crawl is depth 0 only (ref crawler/web_crawler.py:1142-1153): each URL
+    is fetched once, a page is kept at word_count >= 50 with score 1.0,
+    depth 0 and phase 'sitemap', and no link is followed. No superstep
+    runs, so the names only a superstep reads are not defined here.
+    """
+
+    max_pages: int = 50
+
+    # --- policy (class constants, not settings) ---------------------------
+    seed_score = 1.0
+    seed_phase = "sitemap"
+    seed_min_words = 50
+    # one superstep per depth and no depth past the seeds: no superstep
+    superstep_is_depth = True
+    depth_limit = 0
+    # max_pages bounds the URL list: every seed is an attempt against it
+    budget_counts_attempts = True
+    seen_on_enqueue = False  # seen: the fetched URLs
+    scorer = "importance"
+    seen_prefilter = False  # no superstep probes seen
+    # the BFS options the sitemap crawl does not have, off
+    comprehensive = enforce_robots = False
+    host_caps = deny_hosts = None
+
+    @property
+    def effective_safety_limit(self) -> int:
+        """The budget: the URL list's length."""
+        return self.max_pages
 
 
 def flatten_sitemap_index(entries: DataFrame, root_sitemaps: list[str],
@@ -84,46 +127,17 @@ def prioritize_sitemap_urls(urls: DataFrame, base_url: str, max_pages: int) -> D
     )
 
 
-def crawl_from_sitemap(
-    spark,
-    site_pages: DataFrame,
-    sitemap_entries: DataFrame,
-    base_url: str,
-    root_sitemaps: list[str],
-    max_pages: int = 50,
-    caches: list | None = None,
-) -> DataFrame:
-    """The full sitemap strategy: flatten -> prioritize -> fetch -> quality.
-
-    Pages carry score=1.0, depth=0, discovery_phase='sitemap'
-    (ref crawler/web_crawler.py:1142-1153). ``caches`` receives the
-    checkpoints the result reads, for the caller to release once it is
-    done with the pages.
-    """
-    urls = flatten_sitemap_index(sitemap_entries, root_sitemaps, caches=caches)
-    todo = prioritize_sitemap_urls(urls, base_url, max_pages)
-    # keep the RAW url for ordering: crawl order = the prioritized raw-url
-    # order restricted to kept pages (the reference crawls the url list in
-    # that order and appends kept results, :1142-1153); normalization may
-    # change the slash/length sort keys
-    todo = todo.withColumn("url_raw", F.col("url")).withColumn(
-        "url", udfs.normalize_url_udf(F.col("url"))
-    )
-    fetched = TableFetcher(site_pages).fetch(todo)
-    kept = fetched.filter(F.col("success") & (F.col("wc") >= 50))
-    order = (
-        F.asc(F.size(F.split(F.col("url_raw"), "/")) - 1),
-        F.asc(F.length("url_raw")),
-        F.asc("url_raw"),
-    )
-    kept = ranking.global_rank(kept, order, "rank", caches=caches)
-    return kept.select(
-        "url",
-        udfs.extract_title_udf(F.col("title"), F.col("content"), F.col("url")).alias("title"),
-        "content",
-        F.col("wc").alias("word_count"),
-        F.lit(1.0).alias("score"),
-        F.lit(0).alias("depth"),
-        F.lit("sitemap").alias("discovery_phase"),
-        "rank",
-    )
+def sitemap_seeds(entries: DataFrame, base_url: str, roots: list[str],
+                  max_pages: int) -> list[tuple[int, str]]:
+    """The sitemap crawl's seeds: at most ``max_pages`` prioritized raw
+    URLs (flatten -> prioritize), numbered by position. A depth-0 page's
+    rank is its seed order, so the crawl order is this order; of raw URLs
+    that normalize to one URL the crawler keeps the first. Frees flatten's
+    checkpoints before it returns."""
+    caches: list = []
+    try:
+        urls = flatten_sitemap_index(entries, roots, caches=caches)
+        rows = prioritize_sitemap_urls(urls, base_url, max_pages).collect()
+    finally:
+        release(caches)
+    return [(i, r.url) for i, r in enumerate(rows)]

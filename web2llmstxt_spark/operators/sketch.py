@@ -48,33 +48,6 @@ def _bucket_sql(expr: str, row: int, width: int) -> str:
     )
 
 
-def cms_build(
-    df: DataFrame,
-    text_col: str = "text",
-    width: int = CMS_WIDTH,
-    depth: int = CMS_DEPTH,
-) -> DataFrame:
-    """Build the sketch over all token OCCURRENCES of ``text_col``.
-
-    Output: (row:int, bucket:long, cnt:long) — at most depth*width rows.
-    """
-    toks = df.select(F.explode(tokens_col(F.col(text_col))).alias("__tok"))
-    rows = toks.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(r).alias("row"),
-                    _bucket(F.col("__tok"), r, width).alias("bucket"),
-                )
-                for r in range(depth)
-            ])
-        ).alias("rb")
-    )
-    return rows.groupBy(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")).agg(
-        F.count("*").alias("cnt")
-    )
-
-
 def cms_estimate(
     counters: DataFrame,
     items: DataFrame,

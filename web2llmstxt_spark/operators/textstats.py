@@ -54,15 +54,6 @@ def bpe_pretokens_sql(text_expr: str) -> str:
     return f"regexp_extract_all(lower({text_expr}), '{pat}')"
 
 
-def bpe_ish_tokens(text: Column) -> Column:
-    """A BPE-style pre-tokenization: word pieces + punctuation as tokens
-    (regexp split keeping punctuation boundaries — the GPT-2 pretoken shape)."""
-    return F.filter(
-        F.split(text, r"(?=[\s.,!?;:()\[\]{}\"'])|(?<=[\s.,!?;:()\[\]{}\"'])"),
-        lambda t: (t != F.lit("")) & (~t.rlike(r"^\s+$")),
-    )
-
-
 def token_count(text: Column) -> Column:
     t = F.trim(text)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, WS_CLASS_JAVA)))

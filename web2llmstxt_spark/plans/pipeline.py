@@ -17,6 +17,7 @@ from ..functions import kernels
 from ..oracle.bestfirst_oracle import BestFirstConfig
 from ..oracle.crawl_oracle import CrawlConfig
 from ..operators.frontier import FrontierCrawler
+from ..operators.sitemap import SitemapConfig, sitemap_seeds
 from ..session import CACHE_LEVEL, release
 from ..sinks import writers
 from . import distill
@@ -114,15 +115,19 @@ def generate_llmstxt(
 
     ``crawl_strategy`` mirrors the reference dispatch (v1 generator/
     llms_generator.py:694-700; v2 llmsgen pyc names
-    ``discover_all_links_first`` AND ``crawl_website``):
-    'systematic' -> the BFS frontier engine; 'bestfirst' -> the same
-    superstep engine with the keyword-relevance best-first policy
+    ``discover_all_links_first`` AND ``crawl_website``). Each strategy is
+    one policy of the one superstep engine (operators/frontier.
+    FrontierCrawler), picked by its config and seeds:
+    'systematic' -> the BFS policy (CrawlConfig) from ``seeds`` or
+    ``base_url``; 'bestfirst' -> the keyword-relevance best-first policy
     (oracle/bestfirst_oracle.BestFirstConfig; ``bestfirst_batch_size`` a
-    positive int or 'auto');
-    'sitemap' -> raw-XML sitemap crawl (operators/sitemap_xml.py +
-    operators/sitemap.py) over ``sitemap_blobs`` (sitemap_url, body) —
-    roots from ``root_sitemaps`` or auto-discovery (well-known paths +
-    robots ``Sitemap:`` lines in ``robots_text``).
+    positive int or 'auto') from ``base_url``;
+    'sitemap' -> the seeds-only policy (operators/sitemap.SitemapConfig)
+    whose seeds are the prioritized URLs of the raw-XML sitemaps in
+    ``sitemap_blobs`` (sitemap_url, body) (operators/sitemap_xml.py +
+    operators/sitemap.sitemap_seeds) — roots from ``root_sitemaps`` or
+    auto-discovery (well-known paths + robots ``Sitemap:`` lines in
+    ``robots_text``).
     """
     _check_output_options(
         export_format, output_style, crawl_strategy,
@@ -138,10 +143,8 @@ def generate_llmstxt(
     calculated_safety_limit = safety_limit or actual_max_pages * (10 if full_text_only else 5)
     comprehensive = full_text_only or include_full_text  # ref :175 (pyc)
 
-    crawler = None
-    held = []  # the sitemap crawl's checkpoints
+    seeds = seeds or [(0, base_url)]
     if crawl_strategy == "sitemap":
-        from ..operators import sitemap as sm
         from ..operators import sitemap_xml
 
         roots = root_sitemaps
@@ -150,26 +153,21 @@ def generate_llmstxt(
                 sitemap_blobs, base_url, robots_text
             )
         entries = sitemap_xml.parse_sitemaps(sitemap_blobs, base_url)
-        pages_df = sm.crawl_from_sitemap(
-            spark, site_pages, entries, base_url, roots, max_pages=actual_max_pages,
-            caches=held,
-        )
+        cfg = SitemapConfig(max_pages=actual_max_pages)
+        seeds = sitemap_seeds(entries, base_url, roots, actual_max_pages)
+    elif crawl_strategy == "bestfirst":
+        cfg = BestFirstConfig(max_pages=actual_max_pages, batch_size=bestfirst_batch_size)
     else:
-        if crawl_strategy == "bestfirst":
-            cfg = BestFirstConfig(max_pages=actual_max_pages, batch_size=bestfirst_batch_size)
-        else:
-            cfg = CrawlConfig(
-                max_pages=actual_max_pages,
-                comprehensive=comprehensive,
-                safety_limit=calculated_safety_limit,
-                enforce_robots=enforce_robots,
-                host_caps=host_caps,
-            )
-        crawler = FrontierCrawler(
-            spark, site_pages, cfg, robots_rules=robots_rules, run_dir=run_dir,
+        cfg = CrawlConfig(
+            max_pages=actual_max_pages,
+            comprehensive=comprehensive,
+            safety_limit=calculated_safety_limit,
+            enforce_robots=enforce_robots,
+            host_caps=host_caps,
         )
-        pages_df, _seen = crawler.crawl(seeds or [(0, base_url)])
+    crawler = FrontierCrawler(spark, site_pages, cfg, robots_rules=robots_rules, run_dir=run_dir)
     try:
+        pages_df, _seen = crawler.crawl(seeds)
         return distill_to_output(
             pages_df, base_url, output_dir,
             export_format=export_format, include_full_text=include_full_text,
@@ -181,9 +179,7 @@ def generate_llmstxt(
         )
     finally:
         # distill's persisted pages were the crawl output's last reader
-        if crawler is not None:
-            crawler.release()
-        release(held)
+        crawler.release()
 
 
 def distill_to_output(
