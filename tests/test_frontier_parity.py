@@ -79,7 +79,7 @@ def test_comprehensive_mode_parity(spark, tmp_path, durable):
 @DURABLE
 def test_comprehensive_cut_skipped_when_it_cannot_bite(spark, tmp_path, monkeypatch, durable):
     """Comprehensive mode runs its budget cut (ranking.global_rank, the
-    join-back) only on a superstep whose observed |frontier| exceeds the
+    fetch waves) only on a superstep whose observed |frontier| exceeds the
     budget left: cand ⊆ frontier, so below that every candidate is
     attempted. Here superstep 1 holds 18 frontier URLs against 19 pages
     left and superstep 2 holds 31 against 6 and is cut mid-depth. The
@@ -130,6 +130,57 @@ def test_comprehensive_cut_skipped_when_it_cannot_bite(spark, tmp_path, monkeypa
         assert rows(pages) == full_pages, f"resume from {cut}: pages mismatch"
         assert {r.url for r in seen.collect()} == engine_seen, f"resume from {cut}"
         assert calls == ["crawl:ss2-attempt", "crawl:finalize"], (cut, calls)
+
+
+def test_comprehensive_cut_fetches_only_attempts(spark):
+    """A comprehensive cut superstep fetches its ranked candidates in
+    waves, each the next `remaining - successes` of them, so it fetches
+    exactly the URLs the reference attempts. A fetcher that records each
+    call's URL hint under its job description sees, on every superstep,
+    distinct URLs as many as the superstep's `attempted`. On the seed-1
+    corpus the cut superstep (31 frontier URLs, 6 pages left) takes 3
+    waves: failed or thin pages leave the first two short of the budget."""
+    from web2llmstxt_spark.operators.frontier import TableFetcher
+
+    class HintRecorder(TableFetcher):
+        def __init__(self, site_df):
+            super().__init__(site_df)
+            self.hints = {}   # job description -> one URL list per fetch call
+
+        def fetch(self, cand, url_hint=None):
+            desc = spark.sparkContext.getLocalProperty("spark.job.description")
+            self.hints.setdefault(desc, []).append(url_hint)
+            return super().fetch(cand, url_hint=url_hint)
+
+    corpus = generate_corpus(seed=1, n_hosts=1, pages_per_host=30)
+    cfg = CrawlConfig(max_pages=2, comprehensive=True)
+    oracle_res = crawl(corpus, cfg)
+    site = spark.createDataFrame(corpus.site_pages_rows(), schemas.SITE_PAGES).cache()
+    recorder = HintRecorder(site)
+    engine = FrontierCrawler(spark, site, cfg, fetcher=recorder)
+    pages_df, seen_df = engine.crawl([(sid, url) for sid, url, _ in corpus.seeds])
+    engine_pages = [r.asDict() for r in pages_df.orderBy("rank").collect()]
+    assert_parity(oracle_res, engine_pages, {r.url for r in seen_df.collect()})
+    engine.release()
+
+    def step(desc):
+        # the seed fetch runs before the crawl tags its first phase
+        if desc and desc.startswith("crawl:ss") and desc.endswith("-attempt"):
+            return int(desc[len("crawl:ss"):-len("-attempt")])
+        return 0
+
+    hinted = {}
+    for desc, calls in recorder.hints.items():
+        assert all(h is not None for h in calls), (desc, calls)
+        hinted.setdefault(step(desc), []).extend(u for h in calls for u in h)
+    budget = cfg.effective_safety_limit
+    assert engine.metrics[-1]["pages_total"] == budget  # the cut bit
+    for m in engine.metrics:
+        urls = hinted[m["superstep"]]
+        assert len(set(urls)) == len(urls), m["superstep"]
+        assert len(urls) == m["attempted"], (m["superstep"], len(urls), m["attempted"])
+    last = f"crawl:ss{engine.metrics[-1]['superstep']}-attempt"
+    assert len(recorder.hints[last]) == 3
 
 
 def test_multi_seed_merged_frontier(spark):

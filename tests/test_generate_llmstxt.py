@@ -115,7 +115,7 @@ def test_crawl_caches_released(spark, tmp_path, persisted, monkeypatch, strategy
             return real(*args, **kwargs)
         return call
 
-    # the budget cuts: comprehensive mode's running-sum rank, every pop's top-k
+    # the budget cuts: comprehensive mode's rank before its waves, every pop's top-k
     monkeypatch.setattr(ranking, "global_rank", spy(ranking.global_rank))
     monkeypatch.setattr(ranking, "top_k", spy(ranking.top_k))
     try:

@@ -115,8 +115,9 @@ def test_http_retry_hits_failing_page_exactly_total_plus_one(spark, corpus):
 
 def test_server_side_politeness_per_superstep(spark, corpus):
     # host caps flow frontier -> attempt set; the server log (tagged with
-    # the fetcher's superstep counter) proves no superstep ever exceeded a
-    # host's cap ON THE WIRE
+    # the fetcher's fetch-call counter, one call per superstep in normal
+    # mode; a comprehensive cut would fetch in several waves) proves no
+    # superstep ever exceeded a host's cap ON THE WIRE
     caps = {h: 3 for h in {p.host for p in corpus.pages.values()}}
     cfg = CrawlConfig(max_pages=12, enforce_robots=True, host_caps=caps)
     with httpfetch.CorpusHTTPServer(corpus.pages) as srv:
@@ -134,6 +135,29 @@ def test_server_side_politeness_per_superstep(spark, corpus):
     per_url = Counter(u for _h, _p, u, _s, _t in srv.log)
     assert set(per_url.values()) == {1}
     assert len(per_url) == len(seen)
+
+
+def test_comprehensive_cut_requests_only_attempts(spark):
+    # a comprehensive crawl whose last superstep is cut by the budget
+    # mid-depth, over a corpus with 40 % failing pages: the server sees
+    # each URL the reference attempts exactly once (total=0: no retries)
+    # and no other URL, although the cut fetches in 3 waves
+    corpus = generate_corpus(seed=23, n_hosts=1, pages_per_host=30, p_fetch_fail=0.4)
+    cfg = CrawlConfig(max_pages=2, comprehensive=True)
+    res = crawl(corpus, cfg)
+    assert len(res.pages) == cfg.effective_safety_limit  # the cut bit
+    with httpfetch.CorpusHTTPServer(corpus.pages) as srv:
+        fetcher = httpfetch.HttpFetcher(srv.base_url, total=0, sleep=None)
+        pages, seen = _crawl_with(spark, corpus, cfg, fetcher)
+    from collections import Counter
+
+    per_url = Counter(u for _h, _p, u, _s, _t in srv.log)
+    assert set(per_url) == res.seen | {url for _sid, url, _ in corpus.seeds}
+    assert set(per_url.values()) == {1}
+    assert seen == res.seen
+    assert [t[0] for t in pages] == res.order
+    # fetch calls (X-Superstep): the seeds, superstep 1, superstep 2's waves
+    assert len({s for _h, _p, _u, s, _t in srv.log}) == 5
 
 
 def test_per_host_delay_paces_requests(spark, corpus):

@@ -42,14 +42,11 @@ Scale design (10^10-URL frontier, north rule):
   Bloom pre-filter in ``operators/bloom.py`` which removes the vast majority
   of already-seen URLs WITHOUT shuffling the full seen table.
 - the global priority order is a range-partitioned sort (Spark samples
-  boundaries; no driver collect); the budget cut uses a distributed top-k
-  in normal mode and a running-success window in comprehensive mode. Both
-  modes skip the cut outright when the last state checkpoint observed
-  |frontier| <= remaining budget (cand ⊆ frontier, so the cut cannot
-  bite): no count, rank or join-back job on that superstep. The window is
-  the only single-partition step and operates on the already-budget-bounded
-  candidate slice; for budgets beyond one partition swap in the documented
-  two-phase threshold selection.
+  boundaries; no driver collect). Normal mode pops a distributed top-k;
+  comprehensive mode ranks the content-free candidates once and fetches
+  them in exact waves, so it fetches only URLs the reference attempts.
+  Both skip the cut when the last state checkpoint observed |frontier| <=
+  remaining budget (cand ⊆ frontier): one fetch, no rank job.
 - the depth-0 seed frame (seed_id, base_url, base_domain, url) is built on
   the driver from the seed list: no Spark pass normalizes the input.
 - every driver-held table (seed frame, robots rules, host caps, deny list,
@@ -488,8 +485,8 @@ class FrontierCrawler:
         seed list, the crawl's input — so no job collects it. Later
         supersteps normally can't know it: the attempt set is distributed.
         But whenever it is PROVABLY small — ``bound``, from the previous
-        state checkpoint's Observation of |frontier| (cand ⊆ frontier), or
-        the budget cut's count of cand — it is cheaper to materialize the
+        state checkpoint's Observation of |frontier| (cand ⊆ frontier), the
+        pop size or a cut wave's size — it is cheaper to materialize the
         candidate chain once (one tiny job; none when ``materialized``),
         ship the <= URL_HINT_MAX urls to the driver, and let the fetcher
         prune its corpus scan, than to stream the full documents table
@@ -636,11 +633,10 @@ class FrontierCrawler:
         # The seed frame is built on the driver: the seed list IS the input,
         # so no Spark pass normalizes it. base_domain = urlparse(base_url)
         # .netloc (ref llmsgen/crawler/web_crawler.py:186 (pyc)). Dedup on
-        # the NORMALIZED url: _finalize (and the comprehensive-mode budget
-        # cut) join ranks back by url assuming uniqueness — two seeds that
-        # normalize to the same URL (trailing-slash or host-case variants)
-        # would otherwise duplicate depth-0 rows and fan that join out.
-        # Lowest seed_id wins, keeping the crawl order deterministic.
+        # the NORMALIZED url: _finalize joins ranks back by url assuming
+        # uniqueness; two seeds that normalize to one URL (trailing-slash or
+        # host-case variants) would duplicate depth-0 rows and fan that join
+        # out. Lowest seed_id wins, keeping the crawl order deterministic.
         seed_rows: dict[str, tuple] = {}
         for sid, base_url in sorted(seeds):
             url = kernels.normalize_url(base_url)
@@ -829,63 +825,63 @@ class FrontierCrawler:
                     .drop("cap", "hrank", "host")
                 )
 
-            fetched_cache = None
-            if frontier_count <= k:
-                # The cut cannot bite: cand ⊆ frontier and the last
-                # checkpoint observed |frontier| <= k, so every candidate is
-                # popped (normal mode, best-first), and in comprehensive
-                # mode __cum_before <= |cand| - 1 < remaining for each one.
-                # Skip the rank and join-back (zero extra jobs on the common
-                # path: usually only one superstep per crawl is cut).
-                attempted = self._fetch_attempts(cand, frontier_count)
-            elif cfg.comprehensive:
+            # cand ⊆ frontier: unless the last checkpoint observed
+            # |frontier| > k, every candidate is attempted in one fetch and
+            # no rank job runs (usually only one superstep per crawl is cut)
+            cut = frontier_count > k
+            todo, bound, ranked = cand, frontier_count, None
+            if cut and cfg.comprehensive:
                 # no slice (:220); budget bites mid-depth (:227): a candidate
-                # is ATTEMPTED iff fewer than `remaining` successes precede it
-                # in the global priority order (distributed running sum).
-                # Rank on a content-free projection and join back (as in
-                # _finalize): the fetched content is cached ONCE and never
-                # crosses the rank's range shuffle or checkpoint; the join
-                # reuses the fetch join's url partitioning, so only the
-                # (url, __cum_before) table shuffles.
-                fetched_cache = self._fetch_attempts(cand, frontier_count).persist(CACHE_LEVEL)
-                appended = F.col("success") & (F.col("wc") >= cfg.min_words)
-                slim = fetched_cache.select("url", "score", "success", "wc")
+                # is attempted iff fewer than `remaining` successes precede
+                # it in the priority order, which the fetch does not change,
+                # so rank once; the waves scan the checkpoint, not the rank
                 ranked = ranking.global_rank(
-                    slim, (F.desc("score"), F.asc("url")), "__r",  # canonical Q1 tie-break
-                    cum_col_flag=appended, caches=self._held,
-                ).select("url", "__cum_before")
-                attempted = (
-                    fetched_cache.join(ranked, "url")
-                    .filter(F.col("__cum_before") < remaining)
-                    .drop("__cum_before")
-                )
-            else:
+                    cand, (F.desc("score"), F.asc("url")), "__r",  # canonical Q1 tie-break
+                    caches=self._held,
+                ).localCheckpoint(eager=True)
+                self._held.append(ranked)
+            elif cut:
                 # the pop (:220 slice; best-first's batch): the top k by
                 # (score desc, depth asc, url asc) — a BFS superstep's
                 # candidates share one depth, so that is its (score desc,
                 # url asc) order (Q1)
-                top = ranking.top_k(cand, (F.desc("score"), F.asc("depth"), F.asc("url")),
-                                    k, caches=self._held)
-                attempted = self._fetch_attempts(top, k, materialized=True)
-            attempted = attempted.persist(CACHE_LEVEL)
-            # the stats action that closes the attempt phase: materializes
-            # what is still lazy of the chain (anti-join/bloom, scoring, cut,
-            # fetch) into the cache and returns the loop-control counters and
-            # the new pages' per-bucket lineage at once. attempt_ms covers
-            # the whole phase, from t0 to this result.
+                todo = ranking.top_k(cand, (F.desc("score"), F.asc("depth"), F.asc("url")),
+                                     k, caches=self._held)
+                bound = k
+            # A ranked cut fetches waves of the next `remaining - added`
+            # candidates (each has fewer than `remaining` successes before
+            # it, so the reference attempts it) up to the `remaining`-th
+            # success or a short wave. Each wave's stats action caches the
+            # lazy chain and returns its counters and per-bucket lineage: a
+            # fetch completes before the next starts. attempt_ms: t0 to last.
             kept = F.col("success") & (F.col("wc") >= cfg.min_words)  # :237
-            attempted_count, pages_by_bucket = attempted.select(
-                self._bucket().alias("bucket"), kept.alias("kept")
-            ).agg(F.count("*"), self._bucket_counts("kept")).first()
+            waves: list[DataFrame] = []
+            attempted_count = added = 0
+            pages_by_bucket = [0] * self.num_buckets
+            while True:
+                if ranked is not None:
+                    bound = remaining - added
+                    todo = ranked.filter(F.col("__r").between(
+                        attempted_count + 1, attempted_count + bound)).drop("__r")
+                wave = self._fetch_attempts(todo, bound, materialized=cut).persist(CACHE_LEVEL)
+                self._held.append(wave)  # lazy pages and seen read it
+                waves.append(wave)
+                n, by_bucket = wave.select(
+                    self._bucket().alias("bucket"), kept.alias("kept")
+                ).agg(F.count("*"), self._bucket_counts("kept")).first()
+                attempted_count += n
+                pages_by_bucket = [a + b for a, b in zip(pages_by_bucket, by_bucket)]
+                added = sum(pages_by_bucket)
+                if ranked is None or n < bound or added >= remaining:
+                    break
             attempt_ms = int((time.time() - t0) * 1000)
-            if fetched_cache is not None:
-                # attempted is materialized; the pre-cut fetch cache is dead
-                fetched_cache.unpersist()
-            added = sum(pages_by_bucket)
             if attempted_count == 0:                       # :216/:221
-                attempted.unpersist()
                 break
-            self._held.append(attempted)  # lazy pages and seen read it
+            attempted = _union_parts(waves)
+            if len(waves) > 1:
+                # each later, small wave adds partitions, so tasks and Python
+                # workers, to every reader: keep the first wave's count
+                attempted = attempted.coalesce(waves[0].rdd.getNumPartitions())
 
             new_pages = (
                 attempted.filter(kept)

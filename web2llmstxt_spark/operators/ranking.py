@@ -26,7 +26,7 @@ def global_rank(
     """Global ordering WITHOUT a single-partition window or driver merge.
 
     With ``cum_col_flag`` also emits ``__cum_before``: the global running sum
-    of the flag EXCLUDING the current row (the comprehensive-mode budget cut).
+    of the flag EXCLUDING the current row (the curate pack's stream offsets).
     ``caches`` receives the range-partitioned checkpoint, for the caller to
     release (``session.release``) once the result is materialized.
     """

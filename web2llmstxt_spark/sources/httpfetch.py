@@ -241,6 +241,8 @@ class HttpFetcher:
     control; this is the transport-level floor). Default is round-robin
     spread — perfectly even fetch load, the right choice when upstream caps
     already bound per-host concurrency.
+    Each request's ``X-Superstep`` header is its fetch() call's index: the
+    superstep, except on a comprehensive budget cut (one call per wave).
     """
 
     def __init__(
@@ -264,8 +266,8 @@ class HttpFetcher:
         self.partition_by_host = partition_by_host
         self.per_host_delay_ms = per_host_delay_ms
         self.extra_headers = dict(extra_headers or {})
-        self._superstep = -1
-        # host -> last-fetch wall-clock seconds, carried ACROSS supersteps
+        self._fetch_call = -1
+        # host -> last-fetch wall-clock seconds, carried ACROSS fetch() calls
         # (r5 verdict #1: a per-job closure dict resets at superstep
         # boundaries, exactly where the reference's sequential loop never
         # violated the politeness floor). Wall clock, not monotonic: task
@@ -299,7 +301,7 @@ class HttpFetcher:
 
         from ..operators.frontier import _fetch_post
 
-        self._superstep += 1
+        self._fetch_call += 1
         span_t = StructType([
             StructField("kind", StringType()),
             StructField("text", StringType()),
@@ -332,7 +334,7 @@ class HttpFetcher:
         forcelist, sleep = self.status_forcelist, self.sleep
         delay_ms = self.per_host_delay_ms
         headers = dict(self.extra_headers)
-        headers["X-Superstep"] = str(self._superstep)
+        headers["X-Superstep"] = str(self._fetch_call)
 
         hit_acc = None
         seed_hits: dict[str, float] = {}
@@ -347,8 +349,8 @@ class HttpFetcher:
             from urllib.parse import urlsplit
 
             base = http_transport(gateway, timeout, headers)
-            # host -> wall-clock seconds, seeded with the prior supersteps'
-            # last hits so the floor holds across superstep boundaries
+            # host -> wall-clock seconds, seeded with the prior fetch calls'
+            # last hits so the floor holds across superstep and wave bounds
             last_hit: dict[str, float] = dict(seed_hits)
 
             def transport(url: str, attempt: int) -> dict:
@@ -404,9 +406,9 @@ class CorpusHTTPServer:
     """In-process loopback publisher of a synthetic Corpus: each page is
     served as the HTML render of its spans; pages with ``fetch_ok=False``
     answer 503 (exercising the retry policy), unknown URLs 404. Keeps a
-    thread-safe request log [(host, path, target_uri, superstep,
-    t_monotonic)] so tests
-    can assert politeness (per-host per-superstep request counts) SERVER-
+    thread-safe request log [(host, path, target_uri, fetch_call,
+    t_monotonic)] (``X-Superstep``: HttpFetcher's fetch() call) so tests
+    can assert politeness (per-host request counts per fetch call) SERVER-
     side — the only place pacing claims are honest. Use as a context
     manager; ``base_url`` is the gateway for HttpFetcher."""
 
@@ -479,6 +481,8 @@ class CorpusHTTPServer:
             return out
 
     def requests_by_host_superstep(self) -> dict:
+        """(host, fetch() call) -> requests; the call is the superstep
+        except on a comprehensive budget cut, one call per wave."""
         with self._lock:
             out: dict[tuple, int] = {}
             for host, _p, _u, step, _t in self.log:
